@@ -474,14 +474,14 @@ object Dedup {
       .select(lit(batchId).as("batch_id"), xxhash64(col("seg")).as("skey"),
         col("seg"), col("nd"))
     // join-free appends: one job each under AQE-off (absorbMinhashCore)
-    withDesc(spark, "cycle: absorb segdf") { withAqeOff(deltas.sparkSession) {
-      graft.sources.Sinks.bucketed(deltas, s"${tableBase}_segdf", "skey",
-        nBuckets, mode = SaveMode.Append)
-    } }
-    withDesc(spark, "cycle: absorb docs") { withAqeOff(base.sparkSession) {
-      graft.sources.Sinks.bucketed(base.select(col("doc_id").as("id")),
-        s"${tableBase}_docs", "id", nBuckets, mode = SaveMode.Append)
-    } }
+    withDesc(spark, "cycle: absorb segdf") {
+      withAqeOff(deltas)(graft.sources.Sinks.bucketed(_, s"${tableBase}_segdf",
+        "skey", nBuckets, mode = SaveMode.Append))
+    }
+    withDesc(spark, "cycle: absorb docs") {
+      withAqeOff(base.select(col("doc_id").as("id")))(graft.sources.Sinks.bucketed(_,
+        s"${tableBase}_docs", "id", nBuckets, mode = SaveMode.Append))
+    }
     spark.catalog.refreshTable(s"${tableBase}_segdf")
     spark.catalog.refreshTable(s"${tableBase}_docs")
   }
@@ -1204,8 +1204,7 @@ object Dedup {
     val meta = readMinhashMeta(spark, tableBase)
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
       .localCheckpoint() // one batch-sized pass; both appends + the count reuse it
-    absorbMinhashCore(spark, bSigs, tableBase, meta)
-    ()
+    persistMinhashMeta(spark, tableBase, absorbMinhashCore(spark, bSigs, tableBase, meta))
   }
 
   /** The immutable-per-index slice of a landed MinHash index's `_meta`
@@ -1228,7 +1227,10 @@ object Dedup {
   }
 
   /** Append precomputed batch signatures (and their band rows) to the
-    * index; returns the advanced meta for the caller's next cycle.
+    * index; returns the advanced meta. The core never writes `_meta`:
+    * [[absorbMinhashBatch]] writes it per call, an ingest drain once at
+    * its end (`n_docs` is advisory state — staleness sizing, never probe
+    * input).
     *
     * Write order is a crash-safety contract: `_bands` BEFORE `_sigs`.
     * The st9 redelivery guard anti-joins arrivals against `_sigs` ids,
@@ -1242,39 +1244,27 @@ object Dedup {
     */
   private def absorbMinhashCore(spark: SparkSession, bSigs: DataFrame,
                                 tableBase: String,
-                                meta: MinhashMeta,
-                                deferMeta: Boolean = false): MinhashMeta = {
+                                meta: MinhashMeta): MinhashMeta = {
     // join-free append plans: AQE off folds each append's exchange+write
     // into ONE job (see withAqeOff; the explicit repartition pins the
     // partition count either way, so the file layout is identical)
-    withDesc(spark, "cycle: absorb bands") { withAqeOff(bSigs.sparkSession) {
-      graft.sources.Sinks.bucketed(
-        bandRows(bSigs, meta.bands, meta.bandRowCount)
-          .withColumn("bkey", xxhash64(col("band"), col("bh"))),
-        s"${tableBase}_bands", "bkey", meta.nBuckets, mode = SaveMode.Append)
-    } }
+    withDesc(spark, "cycle: absorb bands") {
+      withAqeOff(bandRows(bSigs, meta.bands, meta.bandRowCount)
+          .withColumn("bkey", xxhash64(col("band"), col("bh"))))(
+        graft.sources.Sinks.bucketed(_, s"${tableBase}_bands", "bkey",
+          meta.nBuckets, mode = SaveMode.Append))
+    }
     // the batch count rides the append as an observe() aggregate — no
     // separate count() job per absorb (the streaming loops' cost is the
     // per-micro-batch job floor)
     val obs = org.apache.spark.sql.Observation()
-    withDesc(spark, "cycle: absorb sigs") { withAqeOff(bSigs.sparkSession) {
-      graft.sources.Sinks.bucketed(
-        bSigs.observe(obs, count(lit(1)).as("n")), s"${tableBase}_sigs", "id",
-        meta.nBuckets, mode = SaveMode.Append)
-    } }
+    withDesc(spark, "cycle: absorb sigs") {
+      withAqeOff(bSigs.observe(obs, count(lit(1)).as("n")))(
+        graft.sources.Sinks.bucketed(_, s"${tableBase}_sigs", "id",
+          meta.nBuckets, mode = SaveMode.Append))
+    }
     val advanced =
       meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bSigs.count()))
-    // deferMeta: a per-micro-batch ingest loop that threads `cachedMeta`
-    // (and is the index's only writer, which that contract demands)
-    // skips the per-cycle 1-row meta rewrite — n_docs is advisory state
-    // (staleness sizing, never probe input), so the loop persists it
-    // ONCE after the drain instead of once per batch. A crash between
-    // cycles leaves meta's n_docs at the land-time value with the
-    // absorbed rows present — the same understatement a crash between
-    // the sigs append and the meta write already produced today.
-    if (!deferMeta)
-      writeIndexMeta(spark, tableBase, meta.metaPath, meta.n, meta.k, meta.bands,
-        advanced.nDocs, meta.nBuckets)
     // The bucketed append refreshes by PATH only; a reader that already
     // resolved these tables holds an identifier-keyed cached relation
     // whose file listing predates this append (observed: a streaming
@@ -1297,9 +1287,7 @@ object Dedup {
                                    key: String)(recount: => Long): Long =
     obs.get.get(key).map(_.asInstanceOf[Long]).getOrElse(recount)
 
-  /** Persist a threaded [[MinhashMeta]] once — the deferMeta loops'
-    * end-of-drain write (see [[absorbMinhashCore]]).
-    */
+  /** Write `meta` as the index's `_meta` row. */
   private[graft] def persistMinhashMeta(spark: SparkSession, tableBase: String,
                                         meta: MinhashMeta): Unit =
     writeIndexMeta(spark, tableBase, meta.metaPath, meta.n, meta.k, meta.bands,
@@ -1534,6 +1522,39 @@ object Dedup {
   private[operators] def pruneKeyCap(nBuckets: Int): Int =
     math.min(8192, math.ceil(nBuckets * math.log(4.0)).toInt)
 
+  /** Run the action `f` over `df` (a JOIN-FREE plan — scan/project/
+    * repartition/aggregate, or a join whose strategy a hint pins — so no
+    * decision is left for AQE to make) with adaptive execution off: AQE
+    * materializes every exchange as its own Spark job, so a 2-stage
+    * append pays two scheduling rounds for zero adaptivity. Never wrap a
+    * plan with an unpinned join — join strategy selection is the thing
+    * AQE is FOR (a drain-wide AQE-off run measured 2× slower: static
+    * planning picked the wrong shapes).
+    *
+    * The conf is set on `df.sparkSession`, the session the action
+    * executes under. Inside `foreachBatch` that is the stream's CLONED
+    * session, whose SQLConf is a snapshot: setting the conf on the outer
+    * session there is a silent no-op.
+    */
+  private[graft] def withAqeOff[T](df: DataFrame)(f: DataFrame => T): T = {
+    val conf = df.sparkSession.conf
+    val key = "spark.sql.adaptive.enabled"
+    val prev = conf.getOption(key)
+    conf.set(key, "false")
+    try f(df) finally prev.fold(conf.unset(key))(conf.set(key, _))
+  }
+
+  /** Label the jobs `f` submits (guide §1.5) — thread-local, restored
+    * after; purely diagnostic (JobProf/UI attribution for the
+    * sum-of-small-jobs ingest cycles).
+    */
+  private[graft] def withDesc[T](spark: SparkSession, d: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(d)
+    try f finally sc.setJobDescription(prev)
+  }
+
   /** The batch-proportional redelivery guard shared by the landed-index
     * absorbs and the streaming ingest loops: drop every `base` row
     * whose `id` already exists in the id-BUCKETED `landedTable`. The
@@ -1552,37 +1573,6 @@ object Dedup {
     * `idCol` names the BATCH side's key column; the landed index
     * tables' bucket column is always `id`.
     */
-
-  /** Label the jobs `f` submits (guide §1.5) — thread-local, restored
-    * after; purely diagnostic (JobProf/UI attribution for the
-    * sum-of-small-jobs ingest cycles).
-    */
-  /** Run `f` (an action over a JOIN-FREE plan — scan/project/repartition/
-    * aggregate, no strategy decisions for AQE to make) with adaptive
-    * execution off: AQE materializes every exchange as its own Spark job,
-    * so a 2-stage append pays two scheduling rounds for zero adaptivity.
-    * Never wrap a plan with joins — join strategy selection is the thing
-    * AQE is FOR (the r20 drain-wide AQE-off experiment measured 2×
-    * slower: static planning picked the wrong shapes).
-    */
-  private[graft] def withAqeOff[T](spark: SparkSession)(f: => T): T = {
-    // NOTE: pass the session the action will EXECUTE under — inside
-    // foreachBatch that is the stream's CLONED session (batch.sparkSession),
-    // whose SQLConf is a snapshot: setting the conf on the outer session
-    // there is a silent no-op (measured r20).
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  private[graft] def withDesc[T](spark: SparkSession, d: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(d)
-    try f finally sc.setJobDescription(prev)
-  }
-
   private[graft] def prunedIdGuard(spark: SparkSession, base: DataFrame,
                                    landedTable: String, nBuckets: Int,
                                    tag: String, idCol: String = "id"): DataFrame = {
@@ -1647,9 +1637,7 @@ object Dedup {
     // build side), so AQE contributes only an extra stage job — off
     val existing = withDesc(spark, s"$tag: landed-intersect") {
       import spark.implicits._
-      withAqeOff(spark) {
-        slice.join(broadcast(ids.toSeq.toDF("id")), Seq("id")).collect()
-      }
+      withAqeOff(slice.join(broadcast(ids.toSeq.toDF("id")), Seq("id")))(_.collect())
     }.map(_.getLong(0)).toSet
     if (existing.isEmpty) Some(base)
     else {
@@ -1681,22 +1669,16 @@ object Dedup {
     * Ordering is the correctness heart: the pair spool append
     * MATERIALIZES the probe before the absorb appends the batch to the
     * index — absorbing first would let the probe's lazily-listed index
-    * scan see the batch's own rows and emit self-pairs. `cachedMeta`
-    * (from a previous cycle's return) skips the per-batch meta `head()`
-    * and `DESCRIBE FORMATTED`; safe whenever this loop is the index's
-    * only writer, which the disjoint-ids contract already demands.
-    * The spooled sliver is repartitioned to one file per batch —
-    * `repartition`, not `coalesce`, so the collapse happens in its own
-    * batch-sized stage instead of de-parallelizing the probe's scan
-    * stage above it.
+    * scan see the batch's own rows and emit self-pairs. `meta` is the
+    * previous cycle's return (the drain threads it; see
+    * [[graft.streaming.DocStreams.drain]]), and the advanced meta is
+    * returned, not written.
     */
-  def probeAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
-                              idCol: String, textCol: String,
-                              tableBase: String, threshold: Double,
-                              pairsDir: String,
-                              cachedMeta: Option[MinhashMeta] = None,
-                              deferMeta: Boolean = false): MinhashMeta = {
-    val meta = cachedMeta.getOrElse(readMinhashMeta(spark, tableBase))
+  private[graft] def probeAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
+                                             idCol: String, textCol: String,
+                                             tableBase: String, threshold: Double,
+                                             pairsDir: String,
+                                             meta: MinhashMeta): MinhashMeta = {
     val bSigs = withDesc(spark, "cycle: batch signatures") {
       minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
         .localCheckpoint()
@@ -1709,7 +1691,7 @@ object Dedup {
       probeMinhashCore(spark, bSigs, tableBase, meta, threshold, broadcastBatch = true)
         .write.mode(SaveMode.Append).parquet(pairsDir)
     }
-    absorbMinhashCore(spark, bSigs, tableBase, meta, deferMeta)
+    absorbMinhashCore(spark, bSigs, tableBase, meta)
   }
 
   /** Keep/drop classification of an arriving batch against a landed
@@ -1757,13 +1739,11 @@ object Dedup {
     * drained stream equals a single arrival-ordered fold over the full
     * pair algebra (the st11 oracle), whatever the chunking.
     */
-  def classifyAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
-                                 idCol: String, textCol: String,
-                                 tableBase: String, threshold: Double,
-                                 classDir: String,
-                                 cachedMeta: Option[MinhashMeta] = None,
-                                 deferMeta: Boolean = false): MinhashMeta = {
-    val meta = cachedMeta.getOrElse(readMinhashMeta(spark, tableBase))
+  private[graft] def classifyAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
+                                                idCol: String, textCol: String,
+                                                tableBase: String, threshold: Double,
+                                                classDir: String,
+                                                meta: MinhashMeta): MinhashMeta = {
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
       .localCheckpoint()
     val pairs = probeMinhashCore(spark, bSigs, tableBase, meta, threshold,
@@ -1777,7 +1757,7 @@ object Dedup {
           pairs, "doc_id")
         .write.mode(SaveMode.Append).parquet(classDir)
     }
-    absorbMinhashCore(spark, bSigs, tableBase, meta, deferMeta)
+    absorbMinhashCore(spark, bSigs, tableBase, meta)
   }
 
   /** The earlier-neighbor fold shared by [[incrementalSurvivors]] and
@@ -2023,8 +2003,8 @@ object Dedup {
     val cents = spark.table(s"${tableBase}_cents")
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint() // one batch-sized pass; both appends + count reuse it
-    absorbSemanticCore(spark, bBase, assignCells(bBase, cents), tableBase, meta)
-    ()
+    persistSemanticMeta(spark, tableBase,
+      absorbSemanticCore(spark, bBase, assignCells(bBase, cents), tableBase, meta))
   }
 
   /** The cacheable slice of a landed semantic index's `_meta` row plus
@@ -2056,38 +2036,32 @@ object Dedup {
     * guard key commits last, so a crash between the appends is replayed
     * as a full re-absorb whose duplicate assign rows the probe's
     * distinct-ed candidate side absorbs (and compaction rewrites away).
+    * Like [[absorbMinhashCore]], never writes `_meta`.
     */
   private def absorbSemanticCore(spark: SparkSession, bBase: DataFrame,
                                  bAssign: DataFrame, tableBase: String,
-                                 meta: SemanticMeta,
-                                 deferMeta: Boolean = false): SemanticMeta = {
+                                 meta: SemanticMeta): SemanticMeta = {
     // join-free appends: one job each under AQE-off (absorbMinhashCore)
-    withDesc(spark, "cycle: absorb assign") { withAqeOff(bAssign.sparkSession) {
-      graft.sources.Sinks.bucketed(bAssign,
-        s"${tableBase}_assign", "cid", meta.nBuckets, mode = SaveMode.Append)
-    } }
-    // batch count rides the append (no separate count() job per absorb);
-    // deferMeta: see absorbMinhashCore — the per-cycle 1-row meta
-    // rewrite is skipped by loops that thread cachedMeta and persist once
+    withDesc(spark, "cycle: absorb assign") {
+      withAqeOff(bAssign)(graft.sources.Sinks.bucketed(_,
+        s"${tableBase}_assign", "cid", meta.nBuckets, mode = SaveMode.Append))
+    }
+    // batch count rides the append (no separate count() job per absorb)
     val obs = org.apache.spark.sql.Observation()
-    withDesc(spark, "cycle: absorb vecs") { withAqeOff(bBase.sparkSession) {
-      graft.sources.Sinks.bucketed(bBase.observe(obs, count(lit(1)).as("n")),
-        s"${tableBase}_vecs", "id", meta.nBuckets, mode = SaveMode.Append)
-    } }
+    withDesc(spark, "cycle: absorb vecs") {
+      withAqeOff(bBase.observe(obs, count(lit(1)).as("n")))(
+        graft.sources.Sinks.bucketed(_, s"${tableBase}_vecs", "id",
+          meta.nBuckets, mode = SaveMode.Append))
+    }
     val advanced =
       meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bBase.count()))
-    if (!deferMeta)
-      writeSemanticMeta(spark, tableBase, meta.metaPath, advanced.nDocs,
-        meta.nBuckets, meta.nCents)
     staleAdvisory("d13", advanced.nDocs, meta.nCents)
     spark.catalog.refreshTable(s"${tableBase}_assign")
     spark.catalog.refreshTable(s"${tableBase}_vecs")
     advanced
   }
 
-  /** Persist a threaded [[SemanticMeta]] once — the deferMeta loops'
-    * end-of-drain write (see [[absorbMinhashCore]]).
-    */
+  /** Write `meta` as the index's `_meta` row. */
   private[graft] def persistSemanticMeta(spark: SparkSession, tableBase: String,
                                          meta: SemanticMeta): Unit =
     writeSemanticMeta(spark, tableBase, meta.metaPath, meta.nDocs,
@@ -2096,26 +2070,18 @@ object Dedup {
   /** One full semantic ingest cycle — assign once, probe, spool the
     * pairs, absorb — the st10 per-micro-batch loop body and the d13
     * twin of [[probeAbsorbMinhashBatch]] (see there for the
-    * materialize-before-absorb ordering and the cached-meta contract).
+    * materialize-before-absorb ordering and the threaded meta).
+    * `cents` is a driver-side snapshot of the FROZEN centroid table, so
+    * each cycle's assignment broadcast builds without a Spark job. The
+    * batch is the arrival file, which re-evaluates for free, so the
+    * (id, v) projection needs no checkpoint of its own.
     */
-  def probeAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
-                               idCol: String, vecCol: String,
-                               tableBase: String, threshold: Double,
-                               pairsDir: String,
-                               cachedMeta: Option[SemanticMeta] = None,
-                               preMaterialized: Boolean = false,
-                               deferMeta: Boolean = false,
-                               cachedCents: Option[DataFrame] = None): SemanticMeta = {
-    val meta = cachedMeta.getOrElse(readSemanticMeta(spark, tableBase))
-    // cachedCents: the loop threads one localTable snapshot of the
-    // FROZEN centroid table, so each cycle's assignment broadcast
-    // builds without a Spark job (exact by the frozen-at-land contract)
-    val cents = cachedCents.getOrElse(spark.table(s"${tableBase}_cents"))
-    // preMaterialized: the stream loops' guarded batch re-evaluates for
-    // free (it is the arrival file), so the (id, v) projection needs no
-    // checkpoint of its own
-    val bBase0 = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val bBase = if (preMaterialized) bBase0 else bBase0.localCheckpoint()
+  private[graft] def probeAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
+                                              idCol: String, vecCol: String,
+                                              tableBase: String, threshold: Double,
+                                              pairsDir: String, meta: SemanticMeta,
+                                              cents: DataFrame): SemanticMeta = {
+    val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
     val (bAssign, bCids) = batchAssignLocal(spark, bBase, cents)
     // no repartition(1): see probeAbsorbMinhashBatch
     withDesc(spark, "cycle: probe+spool") {
@@ -2123,7 +2089,7 @@ object Dedup {
           threshold, broadcastBatch = true)
         .write.mode(SaveMode.Append).parquet(pairsDir)
     }
-    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta, deferMeta)
+    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta)
   }
 
   /** The per-micro-batch (id → cell) assignment as a driver-side
@@ -2147,21 +2113,15 @@ object Dedup {
     * decision, spool the per-vector verdicts, absorb — the st12
     * per-micro-batch loop body (st12 : st10 :: st11 : st9; see
     * [[classifyAbsorbMinhashBatch]] for the arrival-ordered earlier
-    * rule and the materialize-before-absorb contract).
+    * rule and the materialize-before-absorb contract; see
+    * [[probeAbsorbSemanticBatch]] for `meta` and `cents`).
     */
-  def classifyAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
-                                  idCol: String, vecCol: String,
-                                  tableBase: String, threshold: Double,
-                                  classDir: String,
-                                  cachedMeta: Option[SemanticMeta] = None,
-                                  preMaterialized: Boolean = false,
-                                  deferMeta: Boolean = false,
-                                  cachedCents: Option[DataFrame] = None): SemanticMeta = {
-    val meta = cachedMeta.getOrElse(readSemanticMeta(spark, tableBase))
-    val cents = cachedCents.getOrElse(spark.table(s"${tableBase}_cents"))
-    // see probeAbsorbSemanticBatch on preMaterialized / cachedCents
-    val bBase0 = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val bBase = if (preMaterialized) bBase0 else bBase0.localCheckpoint()
+  private[graft] def classifyAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
+                                                 idCol: String, vecCol: String,
+                                                 tableBase: String, threshold: Double,
+                                                 classDir: String, meta: SemanticMeta,
+                                                 cents: DataFrame): SemanticMeta = {
+    val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
     val (bAssign, bCids) = batchAssignLocal(spark, bBase, cents)
     val pairs = probeSemanticCore(spark, bBase, bAssign, bCids, tableBase,
       meta.nBuckets, threshold, broadcastBatch = true)
@@ -2170,7 +2130,7 @@ object Dedup {
       earliestNeighborFold(bBase.select(col("id").as("vec_id")), pairs, "vec_id")
         .write.mode(SaveMode.Append).parquet(classDir)
     }
-    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta, deferMeta)
+    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta)
   }
 
   /** Compact a landed [[landSemanticIndex]] back to one file per bucket

@@ -827,62 +827,52 @@ object Similarity {
     * sizing 2×, a re-land is due.
     */
   def absorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
-                       idCol: String, vecCol: String, tableBase: String,
-                       cachedMeta: Option[IvfPqMeta] = None,
-                       preMaterialized: Boolean = false,
-                       callerGuarded: Boolean = false,
-                       deferMeta: Boolean = false,
-                       cachedQuantizers: Option[(DataFrame, DataFrame)] = None): IvfPqMeta = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
-    // preMaterialized: the st14 loop already localCheckpointed the
-    // guarded batch, so the projection re-evaluates for free and the
-    // fresh checkpoint below bounds everything downstream anyway
-    val base0 = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val base = if (preMaterialized) base0
-      else base0.localCheckpoint() // the guard (or encode) reads it twice
-    // callerGuarded: the st14 loop's guard anti-join already dropped
-    // landed ids (it must — a replay may not re-PROBE either), so the
-    // internal guard would re-scan the same files per batch for
-    // nothing; standalone callers keep it ON
-    val fresh = if (callerGuarded) base
-      else Dedup.prunedIdGuard(spark, base, s"${tableBase}_vecs",
-        meta.nBuckets, "a10.guard").localCheckpoint()
+                       idCol: String, vecCol: String, tableBase: String): IvfPqMeta = {
+    val meta = readIvfPqMeta(spark, tableBase)
+    val base = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .localCheckpoint() // the guard reads it twice
+    val fresh = Dedup.prunedIdGuard(spark, base, s"${tableBase}_vecs",
+      meta.nBuckets, "a10.guard").localCheckpoint()
+    val advanced = absorbIvfPqCore(spark, fresh, tableBase, meta,
+      spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"))
+    persistIvfPqMeta(spark, tableBase, advanced)
+    advanced
+  }
+
+  /** Encode guarded `(id, v)` rows against the frozen quantizer and
+    * append them: `_codes` first, then `_vecs`, the id-keyed guard
+    * table, LAST (the absorbMinhashCore crash-order contract). Returns
+    * the advanced meta and never writes `_meta` — [[absorbIvfPqBatch]]
+    * writes it per call, the st14 drain once at its end.
+    */
+  private def absorbIvfPqCore(spark: SparkSession, fresh: DataFrame,
+                              tableBase: String, meta: IvfPqMeta,
+                              cents: DataFrame, cb: DataFrame): IvfPqMeta = {
     // absorb input is batch-sized by contract: the encode's joins are
     // hint-pinned (encodeWithCellsBatch), so the append runs AQE-off as
     // one job instead of one job per AQE stage
-    val enc = encodeWithCellsBatch(
-      cachedQuantizers.map(_._1).getOrElse(spark.table(s"${tableBase}_cents")),
-      cachedQuantizers.map(_._2).getOrElse(spark.table(s"${tableBase}_cb")),
-      fresh, meta.m)
-    Dedup.withDesc(spark, "cycle: absorb codes") { Dedup.withAqeOff(fresh.sparkSession) {
-      graft.sources.Sinks.bucketed(enc,
-        s"${tableBase}_codes", "cid", meta.nBuckets, mode = SaveMode.Append)
-    } }
+    Dedup.withDesc(spark, "cycle: absorb codes") {
+      Dedup.withAqeOff(encodeWithCellsBatch(cents, cb, fresh, meta.m))(
+        graft.sources.Sinks.bucketed(_, s"${tableBase}_codes", "cid",
+          meta.nBuckets, mode = SaveMode.Append))
+    }
     // batch count rides the append (no separate count() job per absorb);
-    // deferMeta: see Dedup.absorbMinhashCore — per-micro-batch loops
-    // that thread cachedMeta persist the 1-row meta once after the drain
+    // join-free append: one job under AQE-off (Dedup.absorbMinhashCore)
     val obs = org.apache.spark.sql.Observation()
-    // join-free append: one job under AQE-off (Dedup.absorbMinhashCore);
-    // the codes append above keeps AQE — encodeWithCells has joins
-    Dedup.withDesc(spark, "cycle: absorb vecs") { Dedup.withAqeOff(spark) {
-      graft.sources.Sinks.bucketed(
-        fresh.observe(obs, count(lit(1)).as("n")),
-        s"${tableBase}_vecs", "id", meta.nBuckets, mode = SaveMode.Append)
-    } }
+    Dedup.withDesc(spark, "cycle: absorb vecs") {
+      Dedup.withAqeOff(fresh.observe(obs, count(lit(1)).as("n")))(
+        graft.sources.Sinks.bucketed(_, s"${tableBase}_vecs", "id",
+          meta.nBuckets, mode = SaveMode.Append))
+    }
     val advanced =
       meta.copy(nDocs = meta.nDocs + Dedup.observedCount(obs, "n")(fresh.count()))
-    if (!deferMeta)
-      writeIvfPqMeta(spark, tableBase, meta.metaPath, advanced.nDocs,
-        meta.nCents, meta.m, meta.kCodes, meta.nBuckets)
     Dedup.staleAdvisory("a10", advanced.nDocs, meta.nCents)
     spark.catalog.refreshTable(s"${tableBase}_codes")
     spark.catalog.refreshTable(s"${tableBase}_vecs")
     advanced
   }
 
-  /** Persist a threaded [[IvfPqMeta]] once — the deferMeta loops'
-    * end-of-drain write (see [[Dedup.absorbMinhashCore]]).
-    */
+  /** Write `meta` as the index's `_meta` row. */
   private[graft] def persistIvfPqMeta(spark: SparkSession, tableBase: String,
                                       meta: IvfPqMeta): Unit =
     writeIvfPqMeta(spark, tableBase, meta.metaPath, meta.nDocs,
@@ -897,32 +887,30 @@ object Similarity {
     * arrivals see it. The spool append MATERIALIZES the probe before
     * the absorb appends the batch (probing after would let the lazily-
     * listed code scan see the batch's own rows — the same ordering
-    * contract as the minhash/semantic cycles). `cachedMeta` skips the
-    * per-batch meta read; safe whenever this loop is the index's only
-    * writer.
+    * contract as the minhash/semantic cycles). The batch has already
+    * passed the drain's `_vecs` redelivery guard (a replay may not
+    * re-PROBE either), so the absorb skips [[absorbIvfPqBatch]]'s own.
+    * `meta` is threaded by the drain; `quantizers` is a driver-side
+    * snapshot of the FROZEN (cents, cb) tables, so every cycle's
+    * probe/encode broadcasts build without a Spark job.
     */
-  def probeAbsorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
-                            idCol: String, vecCol: String, tableBase: String,
-                            k: Int, nProbe: Int, verdictsDir: String,
-                            cachedMeta: Option[IvfPqMeta] = None,
-                            preMaterialized: Boolean = false,
-                            callerGuarded: Boolean = false,
-                            deferMeta: Boolean = false,
-                            cachedQuantizers: Option[(DataFrame, DataFrame)] = None): IvfPqMeta = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
+  private[graft] def probeAbsorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
+                                           idCol: String, vecCol: String,
+                                           tableBase: String, k: Int, nProbe: Int,
+                                           verdictsDir: String, meta: IvfPqMeta,
+                                           quantizers: (DataFrame, DataFrame)): IvfPqMeta = {
     // no repartition(1): the top-k window is the plan's last exchange
     // and AQE coalescing collapses its batch-sized output — the explicit
     // single-file exchange was one more AQE stage job per micro-batch
     Dedup.withDesc(spark, "cycle: verdict spool") {
       ivfPqProbe(spark, newEmbs, idCol, vecCol, tableBase, k, nProbe,
-          cachedMeta = Some(meta), cachedQuantizers = cachedQuantizers)
+          cachedMeta = Some(meta), cachedQuantizers = Some(quantizers))
         .select(col("query_id").as("vec_id"), col("neighbor_id"),
           col("adc_fp"), col("rank"))
         .write.mode(SaveMode.Append).parquet(verdictsDir)
     }
-    absorbIvfPqBatch(spark, newEmbs, idCol, vecCol, tableBase, Some(meta),
-      preMaterialized = preMaterialized, callerGuarded = callerGuarded,
-      deferMeta = deferMeta, cachedQuantizers = cachedQuantizers)
+    absorbIvfPqCore(spark, newEmbs.select(col(idCol).as("id"), col(vecCol).as("v")),
+      tableBase, meta, quantizers._1, quantizers._2)
   }
 
   /** Compact a landed [[landIvfPqIndex]]'s code table back to one file

@@ -9,139 +9,174 @@ import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Similarity}
 
-/** Streaming ingest over the `documents` table: the continuous-arrival
-  * twin of the d11 incremental dedup (SURVEY.md §2.4 st9).
-  *
-  * The reference's ingest is skip-what-the-cache-holds batch polling
-  * (deep-field pages.py:92-116); at corpus scale the same contract is a
-  * STREAM of arriving documents deduplicated against a landed index
-  * that each arrival then joins. This operator is that loop end-to-end:
-  * land once, then per micro-batch probe → emit pairs → absorb.
+/** Streaming ingest over the `documents` and `embeddings` tables
+  * (SURVEY.md §2.4 st9–st14): each `stream*` lands its index, then runs
+  * one [[DocStreams.drain]] with its per-micro-batch cycle.
   */
 object DocStreams {
 
   private val qid = new AtomicInteger(0)
 
-  /** Arrival chunk count for the five ingest-loop drains (st9–st13):
-    * every loop splits its arrival slice into this many single-file
-    * drops (id mod [[ArrivalChunks]]), each one micro-batch. THE shared
+  /** Arrival chunk count of the ingest drains (st9–st14): [[drain]]
+    * splits its arrival slice into this many single-file drops
+    * (id mod [[ArrivalChunks]]), each one micro-batch. THE shared
     * constant: the st11/st12/st13 oracles' arrival-order fold and the
     * StreamingSpec scalar folds all derive their chunk rule from it, so
     * the cadence can move without the two sides drifting. 3 is the
     * floor that still exercises every cross-batch contract (landed vs
     * arrival, earlier-chunk vs same-chunk-mate, multi-absorb
     * visibility) — each drain's cost is dominated by the per-micro-
-    * batch scheduling floor, so fewer chunks is the direct gate-cost
-    * lever (r16 VERDICT #6; 4 → 3 cut ~25% of each drain).
+    * batch scheduling floor, so fewer chunks is the direct cost lever.
     */
   val ArrivalChunks = 3
 
-  /** The ingest loops' compaction cadence (r16 VERDICT #5): every
-    * `every` completed absorb cycles, fire `compact` — so file counts
-    * stay bounded by the cadence without any caller-driven compaction
-    * call. 0 disables (the caller owns cadence, the pre-r17 contract).
-    *
-    * Firing AFTER a completed cycle is what makes this safe inside an
-    * at-least-once `foreachBatch`: the cycle's redelivery-guard key
-    * (sigs/vecs/docs — always the LAST append of the cycle) is durable
-    * before the compactor runs, so a replay of any pre-compaction batch
-    * is dropped by the guard anti-join and never observes the collapsed
-    * state (the st13 "at rest" contract holds batch-by-batch).
+  /** Names of one drain run: the catalog prefix `graft_<family>_<n>`
+    * and a root directory (the caller's, else a fresh temp dir) that
+    * holds the index under `idx` and the result spool under `spoolName`.
     */
-  private final class AutoCompactor(every: Int, compact: () => Unit) {
-    private var absorbs = 0
-    private var fired = 0
-    def cycleDone(): Unit = {
-      absorbs += 1
-      if (every > 0 && absorbs % every == 0) { compact(); fired += 1 }
-    }
-    def firedCount: Int = fired
+  private[graft] final class Run(val family: String, rootDir: Option[String],
+                                 spoolName: String) {
+    private val n = qid.incrementAndGet()
+    val tableBase = s"graft_${family}_$n"
+    private val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"${family}_$n"))
+    def idx: String = s"$root/idx"
+    def spool: String = s"$root/$spoolName"
+  }
+
+  /** How [[drain]] handles one landed-index family: the suffix of the
+    * guard-key table, the bucket count the guard prunes with,
+    * compaction, the `_meta` write, and the catalog tables dropped
+    * once the spool holds the result.
+    */
+  private[graft] final case class IndexOps[M](guard: String, tables: Seq[String],
+                                              nBuckets: M => Int,
+                                              compact: (SparkSession, String) => Unit,
+                                              persist: (SparkSession, String, M) => Unit)
+
+  private[graft] val MinhashIndex = IndexOps[Dedup.MinhashMeta]("sigs",
+    Seq("sigs", "bands", "meta"), _.nBuckets, Dedup.compactMinhashIndex,
+    Dedup.persistMinhashMeta)
+
+  private val SemanticIndex = IndexOps[Dedup.SemanticMeta]("vecs",
+    Seq("cents", "assign", "vecs", "meta"), _.nBuckets, Dedup.compactSemanticIndex,
+    Dedup.persistSemanticMeta)
+
+  private val IvfPqIndex = IndexOps[Similarity.IvfPqMeta]("vecs",
+    Seq("cents", "cb", "codes", "vecs", "meta"), _.nBuckets,
+    Similarity.compactIvfPqIndex, Similarity.persistIvfPqMeta)
+
+  // segdf has no meta table; one bucket count keeps land, guard, absorb
+  // and compaction from drifting apart
+  private val SegDfBuckets = 8
+  private val SegDfIndex = IndexOps[Unit]("docs", Seq("segdf", "docs"),
+    _ => SegDfBuckets, Dedup.compactSegDfIndex(_, _, SegDfBuckets), (_, _, _) => ())
+
+  /** The ingest drain behind st9–st14: the reference's skip-what-the-
+    * cache-holds batch polling (deep-field pages.py:92-116) as a STREAM
+    * of arriving documents, each probed against a landed index that it
+    * then joins. The caller lands the `idCol % 5 < 3` slice of `input`
+    * and passes the meta the land returned; the rest of `input` arrives
+    * as [[ArrivalChunks]] single-file drops with strictly increasing
+    * mtimes, read with `maxFilesPerTrigger = 1`, so each chunk is one
+    * micro-batch and chunks run in chunk order (the landed-drop layout
+    * a real deployment tails). Each micro-batch, inside `foreachBatch`:
+    *
+    *  1. [[Dedup.guardedBatch]] drops every id already in the index's
+    *     guard table — the redelivery guard: `foreachBatch` is
+    *     at-least-once, and a replayed batch re-absorbs nothing
+    *     (keys, not transactions). An empty result skips the cycle.
+    *  2. `cycle(fresh, batchId, meta)` probes or classifies the batch
+    *     against the index AS OF ITS ARRIVAL, appends its verdicts to
+    *     the spool, then absorbs the batch, and returns the advanced
+    *     meta. The spool append materializes the probe before the
+    *     absorb mutates the index it scanned, and the guard table is the
+    *     absorb's LAST append, so a crash mid-cycle replays the whole
+    *     cycle.
+    *  3. Every `autoCompactEvery` completed cycles (0 disables),
+    *     `index.compact` runs. Firing after a completed cycle is what
+    *     makes this safe mid-stream: the guard key is durable, so a
+    *     replay of any pre-compaction batch is dropped by the guard and
+    *     never observes the collapsed state.
+    *
+    * The meta is threaded through the cycles (the drain is the index's
+    * only writer, which the disjoint-ids contract already demands), so a
+    * cycle pays no meta read and no meta write. The drain writes it once,
+    * in a `finally` that runs whether the drain succeeds or fails
+    * (`n_docs` is advisory state: staleness sizing, never probe input).
+    * A process crash between cycles leaves `n_docs` at an earlier value
+    * with the absorbed rows present.
+    *
+    * A failed drain rethrows with the query stopped and the index
+    * tables kept. A finished one reports `<family>.autocompact` (fired
+    * count) in [[graft.Metrics]], drops the index's catalog tables (the
+    * spool outlives them) and returns the distinct spool rows read with
+    * `schema`.
+    */
+  private[graft] def drain[M](spark: SparkSession, run: Run, index: IndexOps[M],
+                              landed: M, input: DataFrame, idCol: String,
+                              dir: String, autoCompactEvery: Int,
+                              schema: StructType)
+                             (cycle: (DataFrame, Long, M) => M): DataFrame = {
+    val arriveDir = arrivalDrops(dir, idCol)(input.filter(col(idCol) % 5 >= 3))
+    val stream = spark.readStream.schema(input.schema)
+      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
+    val guard = s"${run.tableBase}_${index.guard}"
+    val nBuckets = index.nBuckets(landed)
+    var meta = landed
+    var cycles, fired = 0
+    try EventStreams.withDrainConf(spark) {
+      stream.writeStream.outputMode(OutputMode.Append())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          Dedup.guardedBatch(spark, batch, guard, nBuckets,
+            s"${run.family}.guard", idCol).foreach { fresh =>
+            meta = cycle(fresh, batchId, meta)
+            cycles += 1
+            if (autoCompactEvery > 0 && cycles % autoCompactEvery == 0) {
+              index.compact(spark, run.tableBase)
+              fired += 1
+            }
+          }
+        }
+        .start()
+    } finally if (meta != landed) index.persist(spark, run.tableBase, meta)
+    graft.Metrics.set(s"${run.family}.autocompact", "fired" -> fired.toLong)
+    index.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${run.tableBase}_$t"))
+    spark.read.schema(schema).parquet(run.spool).distinct()
   }
 
   private val pairSchema = StructType(Seq(
     StructField("id_a", LongType), StructField("id_b", LongType),
     StructField("est_jaccard", DoubleType)))
 
-  /** st9: streaming incremental near-dup dedup. The corpus slice
-    * (doc_id % 5 < 3) lands once as the bucketed d3 MinHash index; the
-    * remaining documents arrive as a FILE SEQUENCE (one parquet file per
-    * arrival chunk, `maxFilesPerTrigger = 1` so each file is one
-    * micro-batch — the landed-drop layout a real deployment tails).
-    * Each micro-batch, inside `foreachBatch`:
-    *
-    *  1. anti-join the batch against the index's landed ids — the
-    *     redelivery guard: a replayed micro-batch (foreachBatch is
-    *     at-least-once) re-absorbs nothing and re-emits only pairs the
-    *     trailing distinct absorbs, the st6 keys-not-transactions
-    *     pattern;
-    *  2. probe via [[Dedup.incrementalMinhashPairs]] — pairs against
-    *     corpus ∪ everything already absorbed, batch-proportional cost;
-    *  3. append the pairs to a result spool;
-    *  4. [[Dedup.absorbMinhashBatch]] the batch so later arrivals pair
-    *     against it.
-    *
-    * Every pair with ≥1 arriving member is emitted exactly once — when
-    * its later-arriving side is processed (same-batch pairs via the
-    * probe's intra-batch leg) — so the drained union equals the d3
-    * algebra over ALL documents restricted to arrival-involving pairs,
-    * regardless of chunk processing order. That set is the DuckDB
-    * oracle.
+  private def documents(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.documents(spark, dir).select("doc_id", "text")
+
+  private def embeddings(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.embeddings(spark, dir).select("vec_id", "embedding")
+
+  /** st9: streaming incremental near-dup dedup, the continuous twin of
+    * d11 over the bucketed d3 MinHash index. Each micro-batch probes via
+    * [[Dedup.probeAbsorbMinhashBatch]] — pairs against corpus ∪
+    * everything already absorbed, batch-proportional cost — spools
+    * them, and absorbs the batch. Every pair with ≥1 arriving member is
+    * emitted exactly once — when its later-arriving side is processed
+    * (same-batch pairs via the probe's intra-batch leg) — so the drained
+    * union equals the d3 algebra over ALL documents restricted to
+    * arrival-involving pairs, regardless of chunk order. That set is
+    * the DuckDB oracle.
     */
   def streamIncrementalDedup(spark: SparkSession, dir: String,
                              autoCompactEvery: Int = 0,
                              rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st9_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st9_$id"))
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select("doc_id", "text")
-    // the land returns the meta it wrote — threaded through the cycles
-    // (this loop is the index's only writer); each micro-batch then pays
-    // one signature pass and zero meta jobs — the per-cycle meta REWRITE
-    // is deferred too (n_docs is advisory state), persisted once after
-    // the drain instead of once per batch
-    val landedMeta = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
-      "doc_id", "text", n = 3, k = 64, bands = 16, tableBase, s"$root/idx")
-    // arrivals: ArrivalChunks single-file drops, chunked by id
-    val arrivals = docs.filter(col("doc_id") % 5 >= 3)
-    val arriveDir = arrivalDrops(dir, "docs", "doc_id")(arrivals)
-    val outDir = s"$root/pairs"
-    val stream = spark.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.MinhashMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactMinhashIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // redelivery guard, batch-proportional (r18 perf-weak #1): the
-          // driver-resolved guardedBatch spelling — in the no-replay
-          // common case the batch passes through without an anti-join,
-          // a checkpoint pass or an isEmpty job (r20)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_sigs",
-            meta.get.nBuckets, "st9.guard", "doc_id").foreach { fresh =>
-            meta = Some(Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id",
-              "text", tableBase, threshold = 0.5, pairsDir = outDir,
-              cachedMeta = meta, deferMeta = true))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+    val run = new Run("st9", rootDir, "pairs")
+    val docs = documents(spark, dir)
+    val landed = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
+      "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
+    drain(spark, run, MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
+        pairSchema) { (fresh, _, meta) =>
+      Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
+        threshold = 0.5, run.spool, meta)
     }
-    // the deferred-meta persist runs in a finally: a mid-drain failure
-    // otherwise widened the documented one-batch n_docs crash window to
-    // the whole drain (rows absorbed, meta at land-time value) — persist
-    // whatever the loop reached (n_docs stays advisory either way)
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistMinhashMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st9.autocompact", "fired" -> compactor.firedCount.toLong)
-    // the spool outlives the catalog entries; the result plan reads only it
-    Seq("sigs", "bands", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(pairSchema).parquet(outDir).distinct()
   }
 
   private val cosPairSchema = StructType(Seq(
@@ -149,93 +184,54 @@ object DocStreams {
     StructField("cos", DoubleType)))
 
   /** st10: streaming incremental SEMANTIC dedup — the embedding twin of
-    * [[streamIncrementalDedup]], closing the §2.4 loop for the d13
-    * index the way st9 closes it for d11. The corpus slice
-    * (vec_id % 5 < 3) lands once via [[Dedup.landSemanticIndex]] — the
-    * coarse quantizer is FROZEN there, so every arriving micro-batch
-    * assigns against the same centroids (the IVF-list versioning
-    * contract; re-quantization is an explicit re-land, never something
-    * a stream does implicitly). The remaining vectors arrive as a file
-    * sequence, one micro-batch each; per batch, behind the `_vecs`
-    * anti-join redelivery guard: probe (same-cell candidates, exact-
-    * cosine verify) → spool pairs → absorb. Every arrival-involving
-    * pair is emitted exactly once — by the micro-batch of its
-    * later-arriving member — so the drained union equals the
-    * frozen-centroid d10 algebra over ALL vectors restricted to
-    * arrival-involving pairs, whatever the chunk order. That set is
+    * [[streamIncrementalDedup]] over the d13 index. The coarse quantizer
+    * is FROZEN at [[Dedup.landSemanticIndex]], so every micro-batch
+    * assigns against the same centroids (re-quantization is an explicit
+    * re-land, never something a stream does implicitly); per batch:
+    * probe (same-cell candidates, exact-cosine verify) → spool pairs →
+    * absorb. Every arrival-involving pair is emitted exactly once — by
+    * the micro-batch of its later-arriving member — so the drained union
+    * equals the frozen-centroid d10 algebra over ALL vectors restricted
+    * to arrival-involving pairs, whatever the chunk order. That set is
     * the DuckDB oracle.
     */
   def streamSemanticDedup(spark: SparkSession, dir: String,
                           threshold: Double = 0.4,
                           autoCompactEvery: Int = 0,
                           rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st10_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st10_$id"))
-    val embs = graft.sources.Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding")
-    val landedMeta = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
-      "vec_id", "embedding", tableBase, s"$root/idx")
-    // one driver-side snapshot of the FROZEN centroid table: every
-    // cycle's assignment broadcast then builds without a Spark job
-    val cents = Some(Similarity.localTable(spark, s"${tableBase}_cents"))
-    val arrivals = embs.filter(col("vec_id") % 5 >= 3)
-    val arriveDir = arrivalDrops(dir, "embs", "vec_id")(arrivals)
-    val outDir = s"$root/pairs"
-    val stream = spark.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.SemanticMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactSemanticIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_vecs",
-            meta.get.nBuckets, "st10.guard", "vec_id").foreach { fresh =>
-            meta = Some(Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id",
-              "embedding", tableBase, threshold, pairsDir = outDir,
-              cachedMeta = meta, preMaterialized = true, deferMeta = true,
-              cachedCents = cents))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+    val run = new Run("st10", rootDir, "pairs")
+    val embs = embeddings(spark, dir)
+    val landed = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
+      "vec_id", "embedding", run.tableBase, run.idx)
+    val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
+    drain(spark, run, SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
+        cosPairSchema) { (fresh, _, meta) =>
+      Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
+        run.tableBase, threshold, run.spool, meta, cents)
     }
-    // persist-in-finally: see streamIncrementalDedup
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistSemanticMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st10.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("cents", "assign", "vecs", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(cosPairSchema).parquet(outDir).distinct()
   }
 
   /** JVM-global arrival-drop cache: the chunked drop files are a pure
-    * function of (table dir, family kind, the shared chunk rule) and
-    * immutable once written, so the six ingest loops over the same
-    * corpus share ONE set of drops per kind instead of each
-    * re-filtering the corpus once per chunk — the drops are input
-    * FIXTURES (the landed file sequence a real deployment tails), not
-    * operator work, and each loop still runs its own stream/checkpoint
-    * over them. Drops always carry ordered mtimes; the order-free
-    * loops (st9/st10) simply don't depend on them.
+    * function of (table dir, id column, the shared chunk rule) and
+    * immutable once written, so the six drains over the same corpus
+    * share ONE set of drops per table instead of each re-filtering the
+    * corpus once per chunk — the drops are input FIXTURES (the landed
+    * file sequence a real deployment tails), not operator work, and each
+    * drain still runs its own stream/checkpoint over them. Drops always
+    * carry ordered mtimes; the order-free drains (st9/st10) simply don't
+    * depend on them.
     */
   private val arrivalCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def arrivalDrops(dir: String, kind: String, idCol: String)
+  private def arrivalDrops(dir: String, idCol: String)
                           (arrivals: => DataFrame): String =
     // keyed by every input the drop files are a function of: source dir,
-    // family kind, chunk count AND the id column (the arrival slice
-    // `% 5 >= 3` is the loops' shared fixture contract — a future loop
-    // with a different slice must use a different `kind`)
-    arrivalCache.computeIfAbsent(s"$dir|$kind|$idCol|$ArrivalChunks", _ => {
-      val root = graft.sources.Spool.tempRoot(s"drops_$kind")
-      writeOrderedChunks(root, s"${kind}_", ArrivalChunks, idCol)(arrivals)
+    // chunk count AND the id column, which names the table (the arrival
+    // slice `% 5 >= 3` is the drains' shared fixture contract)
+    arrivalCache.computeIfAbsent(s"$dir|$idCol|$ArrivalChunks", _ => {
+      val root = graft.sources.Spool.tempRoot(s"drops_$idCol")
+      writeOrderedChunks(root, s"${idCol}_", ArrivalChunks, idCol)(arrivals)
       root
     })
 
@@ -265,12 +261,9 @@ object DocStreams {
     StructField("is_new", BooleanType)))
 
   /** st11: streaming ingest keep/drop classification — the continuous
-    * twin of the d14 [[Dedup.incrementalSurvivors]] decision, run
-    * inside the st9 loop: corpus (doc_id % 5 < 3) lands once as the
-    * bucketed MinHash index; arrivals drop as a timestamp-ordered file
-    * sequence, one micro-batch each; per batch, behind the `_sigs`
-    * redelivery guard, [[Dedup.classifyAbsorbMinhashBatch]] probes,
-    * folds the pairs into per-doc verdicts — dup iff the doc near-dups
+    * twin of the d14 [[Dedup.incrementalSurvivors]] decision over the st9
+    * index. Per batch, [[Dedup.classifyAbsorbMinhashBatch]] probes, folds
+    * the pairs into per-doc verdicts — dup iff the doc near-dups
     * anything ALREADY IN THE INDEX (corpus or an earlier arrival) or a
     * smaller-id batch mate, `dup_of` = the minimum such neighbor —
     * spools the verdicts, and absorbs the batch. Every arrival is
@@ -282,48 +275,15 @@ object DocStreams {
   def streamIncrementalSurvivors(spark: SparkSession, dir: String,
                                  autoCompactEvery: Int = 0,
                                  rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st11_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st11_$id"))
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select("doc_id", "text")
-    val landedMeta = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
-      "doc_id", "text", n = 3, k = 64, bands = 16, tableBase, s"$root/idx")
-    val arriveDir = arrivalDrops(dir, "docs", "doc_id")(
-      docs.filter(col("doc_id") % 5 >= 3))
-    val outDir = s"$root/class"
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.MinhashMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactMinhashIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_sigs",
-            meta.get.nBuckets, "st11.guard", "doc_id").foreach { fresh =>
-            meta = Some(Dedup.classifyAbsorbMinhashBatch(spark, fresh, "doc_id",
-              "text", tableBase, threshold = 0.5, classDir = outDir,
-              cachedMeta = meta, deferMeta = true))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+    val run = new Run("st11", rootDir, "class")
+    val docs = documents(spark, dir)
+    val landed = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
+      "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
+    drain(spark, run, MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
+        classSchema("doc_id")) { (fresh, _, meta) =>
+      Dedup.classifyAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
+        threshold = 0.5, run.spool, meta)
     }
-    // the deferred-meta persist runs in a finally: a mid-drain failure
-    // otherwise widened the documented one-batch n_docs crash window to
-    // the whole drain (rows absorbed, meta at land-time value) — persist
-    // whatever the loop reached (n_docs stays advisory either way)
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistMinhashMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st11.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("sigs", "bands", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(classSchema("doc_id")).parquet(outDir).distinct()
   }
 
   private val cleanSchema = StructType(Seq(
@@ -331,11 +291,8 @@ object DocStreams {
     StructField("n_dropped", LongType)))
 
   /** st13: streaming line-level boilerplate dedup — the continuous twin
-    * of the d16/d17 cross-document repeated-segment stage. The corpus
-    * slice (doc_id % 5 < 3) lands once as the segment-df index
-    * ([[Dedup.landSegDfIndex]]); the remaining docs arrive as a
-    * timestamp-ordered file sequence, one micro-batch each. Per batch,
-    * behind the `_docs` redelivery guard,
+    * of the d16/d17 cross-document repeated-segment stage, over the
+    * segment-df index ([[Dedup.landSegDfIndex]]). Per batch,
     * [[Dedup.classifyAbsorbSegBatch]] cleans each doc against the df
     * state AS OF ITS ARRIVAL — a segment instance is dropped iff
     * `earlier_hosts + 1 >= minDf`, where earlier = landed, an earlier
@@ -346,110 +303,47 @@ object DocStreams {
     * rule generalized to arrival order, which is the only causal
     * option for a stream (emitted text cannot be retro-edited).
     * Drained stream ≡ one arrival-ordered fold over the full segment
-    * algebra — the DuckDB oracle.
+    * algebra — the DuckDB oracle. Auto-compaction is safe mid-stream
+    * despite [[Dedup.compactSegDfIndex]]'s at-rest contract, for the
+    * reason [[drain]] gives.
     */
   def streamLineDedup(spark: SparkSession, dir: String,
                       window: Int = 10, minDf: Int = 2,
                       autoCompactEvery: Int = 0,
                       rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st13_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st13_$id"))
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select("doc_id", "text")
-    // segdf has no meta table; one val keeps land, guard and the
-    // absorbs' bucket count from drifting apart
-    val segBuckets = 8
+    val run = new Run("st13", rootDir, "clean")
+    val docs = documents(spark, dir)
     Dedup.landSegDfIndex(spark, docs.filter(col("doc_id") % 5 < 3),
-      "doc_id", "text", window, tableBase, s"$root/idx", nBuckets = segBuckets)
-    val arriveDir = arrivalDrops(dir, "docs", "doc_id")(
-      docs.filter(col("doc_id") % 5 >= 3))
-    val outDir = s"$root/clean"
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    // safe mid-stream despite compactSegDfIndex's at-rest contract: the
-    // compactor only ever runs AFTER classifyAbsorbSegBatch committed
-    // the `_docs` guard key, so a replay of any pre-compaction batch is
-    // dropped by the guard anti-join and never re-reads the collapsed
-    // deltas as prior state
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactSegDfIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_docs",
-            segBuckets, "st13.guard", "doc_id").foreach { fresh =>
-            Dedup.classifyAbsorbSegBatch(spark, fresh, "doc_id", "text",
-              tableBase, batchId, window, minDf, outDir)
-            compactor.cycleDone()
-          }
-        }
-        .start()
+      "doc_id", "text", window, run.tableBase, run.idx, nBuckets = SegDfBuckets)
+    drain(spark, run, SegDfIndex, (), docs, "doc_id", dir, autoCompactEvery,
+        cleanSchema) { (fresh, batchId, _) =>
+      Dedup.classifyAbsorbSegBatch(spark, fresh, "doc_id", "text", run.tableBase,
+        batchId, window, minDf, run.spool, nBuckets = SegDfBuckets)
     }
-    try q.processAllAvailable() finally q.stop()
-    graft.Metrics.set("st13.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("segdf", "docs").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(cleanSchema).parquet(outDir).distinct()
   }
 
   /** st12: streaming semantic ingest classification — the embedding
     * twin of [[streamIncrementalSurvivors]] (st12 : st10 :: st11 :
-    * st9): frozen-centroid cell index landed once from the
-    * vec_id % 5 < 3 slice, arrivals drop as a timestamp-ordered file
-    * sequence, and each micro-batch is classified against the index as
-    * of its arrival (dup iff exact cosine ≥ τ against a landed vector,
-    * an earlier arrival, or a smaller-id batch mate) before being
-    * absorbed. Drained stream ≡ the arrival-ordered fold over the
-    * frozen-centroid pair algebra.
+    * st9) over the frozen-centroid st10 index: each micro-batch is
+    * classified against the index as of its arrival (dup iff exact
+    * cosine ≥ τ against a landed vector, an earlier arrival, or a
+    * smaller-id batch mate) before being absorbed. Drained stream ≡ the
+    * arrival-ordered fold over the frozen-centroid pair algebra.
     */
   def streamSemanticSurvivors(spark: SparkSession, dir: String,
                               threshold: Double = 0.4,
                               autoCompactEvery: Int = 0,
                               rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st12_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st12_$id"))
-    val embs = graft.sources.Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding")
-    val landedMeta = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
-      "vec_id", "embedding", tableBase, s"$root/idx")
-    // frozen-centroid snapshot: see streamSemanticDedup
-    val cents = Some(Similarity.localTable(spark, s"${tableBase}_cents"))
-    val arriveDir = arrivalDrops(dir, "embs", "vec_id")(
-      embs.filter(col("vec_id") % 5 >= 3))
-    val outDir = s"$root/class"
-    val stream = spark.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.SemanticMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactSemanticIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_vecs",
-            meta.get.nBuckets, "st12.guard", "vec_id").foreach { fresh =>
-            meta = Some(Dedup.classifyAbsorbSemanticBatch(spark, fresh, "vec_id",
-              "embedding", tableBase, threshold, classDir = outDir,
-              cachedMeta = meta, preMaterialized = true, deferMeta = true,
-              cachedCents = cents))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+    val run = new Run("st12", rootDir, "class")
+    val embs = embeddings(spark, dir)
+    val landed = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
+      "vec_id", "embedding", run.tableBase, run.idx)
+    val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
+    drain(spark, run, SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
+        classSchema("vec_id")) { (fresh, _, meta) =>
+      Dedup.classifyAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
+        run.tableBase, threshold, run.spool, meta, cents)
     }
-    // persist-in-finally: see streamIncrementalDedup
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistSemanticMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st12.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("cents", "assign", "vecs", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(classSchema("vec_id")).parquet(outDir).distinct()
   }
 
   private val verdictSchema = StructType(Seq(
@@ -457,83 +351,37 @@ object DocStreams {
     StructField("adc_fp", LongType), StructField("rank", LongType)))
 
   /** st14: streaming vector ingest over the LANDED a10 IVF-PQ index —
-    * the d13→st10 pattern applied to the flagship vector store: the
-    * corpus slice (vec_id % 5 < 3) lands once via
-    * [[graft.operators.Similarity.landIvfPqIndex]] (centroids AND PQ
-    * codebook frozen there — re-quantization is an explicit re-land,
-    * never something a stream does implicitly); the remaining vectors
-    * arrive as a timestamp-ordered file sequence, one micro-batch
-    * each. Per batch, behind the `_vecs` redelivery guard,
+    * the d13→st10 pattern applied to the flagship vector store. The
+    * land ([[graft.operators.Similarity.landIvfPqIndexSized]]) freezes
+    * centroids AND PQ codebook, with the cell count sized from the
+    * landed corpus by [[Dedup.ivfCellsFor]] (a fixed count would make
+    * every probe scan nProbe/nCents of the corpus PER QUERY; the oracle
+    * replays the same formula). Per batch,
     * [[graft.operators.Similarity.probeAbsorbIvfPqBatch]] answers each
     * arrival's ADC top-k AGAINST THE INDEX AS OF ITS ARRIVAL (landed ∪
     * earlier chunks — batch mates are not yet in the index, so never
-    * candidates), spools the verdicts, and absorbs the batch so later
-    * arrivals see it. Drained stream ≡ one arrival-ordered fold over
-    * the frozen-quantizer a10 algebra (earlier(e, x) ⇔ e landed or e's
-    * chunk precedes x's — the DuckDB oracle), and ≡ the same cycles
+    * candidates), spools the verdicts, and absorbs the batch. The guard
+    * is id-keyed on `_vecs`, so a replay with a CHANGED vector is
+    * dropped like any other. Drained stream ≡ one arrival-ordered fold
+    * over the frozen-quantizer a10 algebra (earlier(e, x) ⇔ e landed or
+    * e's chunk precedes x's — the DuckDB oracle), and ≡ the same cycles
     * replayed as plain batch calls (spec-pinned).
     */
   def streamIvfPqIngest(spark: SparkSession, dir: String,
                         k: Int = 5, nProbe: Int = 4,
                         autoCompactEvery: Int = 0,
                         rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st14_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st14_$id"))
-    val embs = graft.sources.Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding")
-    val landed = embs.filter(col("vec_id") % 5 < 3)
-    // cell count sized by the LANDED corpus (ivfCellsFor, the d13/d10
-    // rule): a fixed nCentroids makes every probe scan nProbe/nCents of
-    // the corpus PER QUERY — at gen10 that was 30k candidates for each
-    // of 27k arrivals in a batch, the exact blow-up class the sqrt
-    // sizing exists to stop (r18; the oracle replays the same formula).
-    // The sized land derives the count from its own `_vecs` write, so
-    // the old separate landed.count() corpus pass is gone (r19)
-    val landedMeta = Similarity.landIvfPqIndexSized(landed, "vec_id",
-      "embedding", Dedup.ivfCellsFor, m = 4, kCodes = 16, tableBase,
-      s"$root/idx")
-    // one driver-side snapshot of the FROZEN quantizer tables (cents,
-    // cb): every cycle's probe/encode broadcasts then build job-free
-    val quant = Some((Similarity.localTable(spark, s"${tableBase}_cents"),
-      Similarity.localTable(spark, s"${tableBase}_cb")))
-    val arriveDir = arrivalDrops(dir, "embs", "vec_id")(
-      embs.filter(col("vec_id") % 5 >= 3))
-    val outDir = s"$root/verdicts"
-    val stream = spark.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Similarity.IvfPqMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Similarity.compactIvfPqIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard on the id-bucketed _vecs side
-          // table — id-keyed, so a replay with a CHANGED vector is
-          // dropped like any other (the codes-side sub-0 guard this
-          // replaced was corpus-proportional and blind to those);
-          // driver-resolved guardedBatch spelling (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_vecs",
-            meta.get.nBuckets, "st14.guard", "vec_id").foreach { fresh =>
-            meta = Some(Similarity.probeAbsorbIvfPqBatch(spark, fresh,
-              "vec_id", "embedding", tableBase, k, nProbe,
-              verdictsDir = outDir, cachedMeta = meta,
-              preMaterialized = true, callerGuarded = true,
-              deferMeta = true, cachedQuantizers = quant))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+    val run = new Run("st14", rootDir, "verdicts")
+    val embs = embeddings(spark, dir)
+    val landed = Similarity.landIvfPqIndexSized(embs.filter(col("vec_id") % 5 < 3),
+      "vec_id", "embedding", Dedup.ivfCellsFor, m = 4, kCodes = 16, run.tableBase,
+      run.idx)
+    val quantizers = (Similarity.localTable(spark, s"${run.tableBase}_cents"),
+      Similarity.localTable(spark, s"${run.tableBase}_cb"))
+    drain(spark, run, IvfPqIndex, landed, embs, "vec_id", dir, autoCompactEvery,
+        verdictSchema) { (fresh, _, meta) =>
+      Similarity.probeAbsorbIvfPqBatch(spark, fresh, "vec_id", "embedding",
+        run.tableBase, k, nProbe, run.spool, meta, quantizers)
     }
-    // persist-in-finally: see streamIncrementalDedup
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Similarity.persistIvfPqMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st14.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("cents", "cb", "codes", "vecs", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(verdictSchema).parquet(outDir).distinct()
   }
 }

@@ -397,7 +397,7 @@ object EventStreams {
     val dbDir = java.nio.file.Paths.get(
       graft.sources.Spool.fastTempRoot("st6_db"))
     val url = s"jdbc:derby:$dbDir/sinkdb;create=true"
-    val q = withDrainConf(spark) {
+    withDrainConf(spark) {
       eventStream(spark, dir)
         .filter(col("event_type") === "purchase")
         .select("event_id", "user_id")
@@ -410,7 +410,6 @@ object EventStreams {
         }
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
     val out = graft.sources.Sinks.readJdbc(spark, url, "purchase_sink")
       .groupBy("user_id").agg(count(lit(1)).as("n_rows"))
     // The per-user rollup is a small bounded aggregate, so materialize it
@@ -443,21 +442,22 @@ object EventStreams {
   private lazy val drainCheckpointRoot: String =
     graft.sources.Spool.fastTempRoot("stream_ckpt")
 
-  /** Start a streaming query with the finite-drain tuning: 8 shuffle
-    * partitions instead of the session's 32 (state-store instances and
-    * per-micro-batch tasks equal the shuffle-partition count captured at
-    * query start, and a finite drain's state holds a few thousand rows —
-    * 32 stores are pure fixed overhead); checkpoints on the tmpfs drain
-    * root; checkpoint file checksums off (a crash-recovery integrity
-    * feature — for a drain whose checkpoint dies with the JVM it only
-    * doubles the WAL file count). Results are partition-count
-    * independent; an unbounded deployment sizes/overrides these via its
-    * own conf. The session confs are restored after the drain finishes
-    * (each value is captured at query start, which `start()` completes
-    * synchronously for planning).
+  /** Run a finite streaming query to completion with the finite-drain
+    * tuning: start it, `processAllAvailable`, and stop it in a `finally`,
+    * so a failed drain rethrows with the query already stopped. The
+    * tuning: 8 shuffle partitions instead of the session's 32
+    * (state-store instances and per-micro-batch tasks equal the
+    * shuffle-partition count captured at query start, and a finite
+    * drain's state holds a few thousand rows — 32 stores are pure fixed
+    * overhead); checkpoints on the tmpfs drain root; checkpoint file
+    * checksums off (a crash-recovery integrity feature — for a drain
+    * whose checkpoint dies with the JVM it only doubles the WAL file
+    * count). Results are partition-count independent; an unbounded
+    * deployment sizes/overrides these via its own conf. The session
+    * confs are restored once the query has stopped.
     */
   private[streaming] def withDrainConf(spark: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): org.apache.spark.sql.streaming.StreamingQuery = {
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val tuned = Seq(
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.checkpointLocation" -> drainCheckpointRoot,
@@ -466,13 +466,7 @@ object EventStreams {
     tuned.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val q = start
-      // finish the drain before restoring the confs; if the drain itself
-      // fails, stop the query before rethrowing — otherwise the caller's
-      // try/finally q.stop() (installed only after we return) never runs
-      // and the query + its state stores leak for the session's lifetime
-      try q.processAllAvailable()
-      catch { case e: Throwable => scala.util.Try(q.stop()); throw e }
-      q
+      try q.processAllAvailable() finally q.stop()
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
@@ -486,10 +480,9 @@ object EventStreams {
     */
   private[graft] def drain(df: DataFrame, mode: OutputMode): DataFrame = {
     val name = s"graft_stream_${qid.incrementAndGet()}"
-    val q = withDrainConf(df.sparkSession) {
+    withDrainConf(df.sparkSession) {
       df.writeStream.format("memory").queryName(name).outputMode(mode).start()
     }
-    try q.processAllAvailable() finally q.stop()
     df.sparkSession.table(name)
   }
 }

@@ -590,6 +590,65 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got13 == plain13,
       s"only-auto=${(got13 -- plain13).take(2)} only-plain=${(plain13 -- got13).take(2)}")
+    // st14: the IVF-PQ index under the same cadence — the code and vector
+    // tables each end at ≤ one file per bucket (32) in their current
+    // compaction generation, and the verdicts equal a plain drain
+    def vr(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val root14 = graft.sources.Spool.tempRoot("st14_auto")
+    val got14 = graft.streaming.DocStreams.streamIvfPqIngest(spark, sfDir,
+        autoCompactEvery = 1, rootDir = Some(root14))
+      .collect().map(vr).toSet
+    assert(Metrics.scalar("st14.autocompact", "fired").contains(C.toLong))
+    val idx14 = new java.io.File(s"$root14/idx").listFiles().toSeq
+    Seq("codes", "vecs").foreach { t =>
+      val dirs = idx14.filter(_.getName.matches(s"${t}(_c\\d+)?"))
+      assert(dirs.size == 1, s"st14 $t: expected one live table dir, got ${dirs.map(_.getName)}")
+      val files = parquetFiles(dirs.head.toString)
+      assert(files <= 32L, s"auto-compacted st14 $t still carries small files: $files")
+    }
+    val plain14 = graft.streaming.DocStreams.streamIvfPqIngest(spark, sfDir)
+      .collect().map(vr).toSet
+    assert(got14 == plain14,
+      s"only-auto=${(got14 -- plain14).take(2)} only-plain=${(plain14 -- got14).take(2)}")
+  }
+
+  test("a failed ingest drain rethrows, stops its query and still persists the index meta") {
+    // the drain's meta write sits in a finally: a cycle that throws on
+    // the second micro-batch must leave `_meta` advanced by the first
+    // batch's absorb, with the exception at the caller and no query left
+    // running
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    import graft.operators.Dedup
+    import graft.streaming.DocStreams
+    val run = new DocStreams.Run("st9fail", None, "pairs")
+    val docs = graft.sources.Tables.documents(spark, sfDir).select("doc_id", "text")
+    val landed = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
+      "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
+    val schema = StructType(Seq(StructField("id_a", LongType),
+      StructField("id_b", LongType), StructField("est_jaccard", DoubleType)))
+    var cycles = 0
+    var firstSigs = 0L
+    try {
+      val err = intercept[Exception] {
+        DocStreams.drain(spark, run, DocStreams.MinhashIndex, landed, docs, "doc_id",
+            sfDir, autoCompactEvery = 0, schema) { (fresh, _, meta) =>
+          cycles += 1
+          if (cycles == 2) throw new IllegalStateException("injected second-cycle failure")
+          firstSigs = Dedup.minhashSignatures(fresh, "doc_id", "text", 3, 64).count()
+          Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
+            threshold = 0.5, run.spool, meta)
+        }
+      }
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => Option(c.getMessage).exists(_.contains("injected second-cycle failure"))),
+        s"the cycle's exception did not reach the caller: $err")
+      assert(spark.streams.active.isEmpty, "the failed drain left its query running")
+      assert(cycles == 2)
+      assert(firstSigs > 0, "first micro-batch absorbed nothing — test is vacuous")
+      assert(Dedup.readMinhashMeta(spark, run.tableBase).nDocs == landed.nDocs + firstSigs)
+    } finally Seq("sigs", "bands", "meta").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${run.tableBase}_$t"))
   }
 
   test("st10: streamed semantic probe+absorb union equals the frozen-centroid recompute") {
