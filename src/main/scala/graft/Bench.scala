@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import graft.engine.GraftSession
 
 /** Driver-run benchmark: every SparkEntry query against
@@ -19,19 +21,25 @@ object Bench {
     // input first, 8–21× skew on untouched single-scan keys. This is
     // variance reduction for attribution, never result caching: nothing
     // computed here is a query, and nothing is persisted.
-    def warm(df: => org.apache.spark.sql.DataFrame): Unit =
+    // An unreadable input is named on stderr and the run goes on: the
+    // queries that read it then fail in the timed loop, flagged ok:false.
+    def warm(path: String)(df: => org.apache.spark.sql.DataFrame): Unit =
       try df.write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warm-up of $path failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
     spark.range(1000000).selectExpr("sum(id)").collect()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      warm(spark.read.parquet(s"$sfDir/$t.parquet"))
+      val path = s"$sfDir/$t.parquet"
+      warm(path)(spark.read.parquet(path))
     }
     // events needs the nanos conf; warm through the same loader queries use
-    warm(graft.sources.Tables.events(spark, sfDir))
+    warm(s"$sfDir/events.parquet")(graft.sources.Tables.events(spark, sfDir))
     // the s-family reads the HTML fixture tree (wholetext), never touched
     // by the table loop above
-    warm(graft.sources.HtmlSource.pages(spark, graft.queries.ScrapeSuite.FixtureDir))
+    val fixtures = graft.queries.ScrapeSuite.FixtureDir
+    warm(fixtures)(graft.sources.HtmlSource.pages(spark, fixtures))
     // per-query progress on stderr (stdout stays the single JSON line);
     // cost-ascending order (SparkEntry.gateOrder) so a wall-clock-limited
     // run finishes the cheap queries before the scrape/streaming tail

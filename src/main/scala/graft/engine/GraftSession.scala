@@ -11,7 +11,21 @@ import org.apache.spark.sql.SparkSession
   *    schema (and every roster/bucket dim the engine builds) must
   *    broadcast rather than shuffle the fact side;
   *  - shuffle partitions sized to the core count locally; on a real
-  *    cluster this is executors x cores x 2-3, and AQE coalesces down.
+  *    cluster this is executors x cores x 2-3, and AQE coalesces down;
+  *  - Spark's JVM-wide generated-class cache holds 512 entries, not 100:
+  *    q1–q32 alone compile about 370 distinct classes, so an LRU of 100
+  *    cycled through them missed on almost every class and recompiled
+  *    each plan's Java on every run. At 20–25 KB retained per entry
+  *    (source text plus bytecode) the cap pins at most about 13 MB. It
+  *    also bounds what a long ingest can hold: each pass of the
+  *    benchmark's st1 + st9 drain still compiles 37 classes it has not
+  *    seen before. The conf is static: Spark reads it once, when the
+  *    first query of the JVM generates code;
+  *  - the live status store keeps the last 10 jobs, stages, tasks and
+  *    SQL executions (defaults 1000, 1000, 100000 and 1000): with the UI
+  *    off nothing reads that history, and trimming it pays for the
+  *    classes the cache retains. The SQL executions matter most: each
+  *    keeps its plan graph and every plan metric.
   */
 object GraftSession {
 
@@ -28,7 +42,12 @@ object GraftSession {
       // coalescing absorbs the small-file end (measured: shrinking it to
       // 2 MB does not move the local benchmark, which is overhead-bound)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "512")
       .config("spark.ui.enabled", "false")
+      .config("spark.ui.retainedJobs", "10")
+      .config("spark.ui.retainedStages", "10")
+      .config("spark.ui.retainedTasks", "10")
+      .config("spark.sql.ui.retainedExecutions", "10")
       // Local-master resilience: the executor heartbeats the in-process
       // driver, and on `spark.executor.heartbeat.maxFailures` consecutive
       // misses Spark SELF-KILLS the JVM (ExecutorExitCode 56) — on a

@@ -849,8 +849,18 @@ object Similarity {
                               tableBase: String, meta: IvfPqMeta,
                               cents: DataFrame, cb: DataFrame): IvfPqMeta = {
     // absorb input is batch-sized by contract: the encode's joins are
-    // hint-pinned (encodeWithCellsBatch), so the append runs AQE-off as
-    // one job instead of one job per AQE stage
+    // hint-pinned (encodeWithCellsBatch) and the append runs AQE-off.
+    // That is still 4 jobs per call (JobProf st14 at sf0.01, 4 cpus: 12
+    // over 3 micro-batches), because each broadcast builds in a job of
+    // its own:
+    //  - `cents` and `cb` broadcasts: one 1-stage job each, ~10 ms.
+    //    BroadcastExchangeExec collects its child through
+    //    executeCollectIterator, which LocalTableScanExec does not
+    //    short-cut, so even a LocalRelation snapshot runs a job;
+    //  - `cells` broadcast: ivfAssign's per-id aggregate over the batch,
+    //    a 2-stage job (shuffle + collect), ~0.1 s;
+    //  - the bucketed append itself: 3 stages (pqEncode's aggregate
+    //    shuffle, the bucket repartition, the write), ~0.35 s.
     Dedup.withDesc(spark, "cycle: absorb codes") {
       Dedup.withAqeOff(encodeWithCellsBatch(cents, cb, fresh, meta.m))(
         graft.sources.Sinks.bucketed(_, s"${tableBase}_codes", "cid",
@@ -891,8 +901,9 @@ object Similarity {
     * passed the drain's `_vecs` redelivery guard (a replay may not
     * re-PROBE either), so the absorb skips [[absorbIvfPqBatch]]'s own.
     * `meta` is threaded by the drain; `quantizers` is a driver-side
-    * snapshot of the FROZEN (cents, cb) tables, so every cycle's
-    * probe/encode broadcasts build without a Spark job.
+    * snapshot of the FROZEN (cents, cb) tables, so no cycle re-reads
+    * them from disk. Broadcasting a snapshot still runs one small job
+    * each, in the probe and in the encode (see `absorbIvfPqCore`).
     */
   private[graft] def probeAbsorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
                                            idCol: String, vecCol: String,
