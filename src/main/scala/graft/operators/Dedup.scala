@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.functions.HashExpressions
 
@@ -411,7 +412,7 @@ object Dedup {
     */
   def landSegDfIndex(spark: SparkSession, docs: DataFrame, idCol: String,
                      textCol: String, window: Int, tableBase: String,
-                     dir: String, nBuckets: Int = 8): Unit = {
+                     dir: String, nBuckets: Int): Unit = {
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val deltas = segmentDocs(base, window)
@@ -419,10 +420,8 @@ object Dedup {
       .groupBy("seg").agg(count(lit(1)).as("nd"))
       .select(lit(-1L).as("batch_id"), xxhash64(col("seg")).as("skey"),
         col("seg"), col("nd"))
-    graft.sources.Sinks.bucketed(deltas, s"${tableBase}_segdf", "skey",
-      nBuckets, path = Some(s"$dir/segdf"))
-    graft.sources.Sinks.bucketed(base.select(col("doc_id").as("id")),
-      s"${tableBase}_docs", "id", nBuckets, path = Some(s"$dir/docs"))
+    SegDfIndex.land(tableBase, dir, "segdf", nBuckets)(deltas)
+    SegDfIndex.land(tableBase, dir, "docs", nBuckets)(base.select(col("doc_id").as("id")))
   }
 
   /** One st13 micro-batch: clean the arriving docs against the landed
@@ -443,7 +442,7 @@ object Dedup {
                              idCol: String, textCol: String,
                              tableBase: String, batchId: Long,
                              window: Int, minDf: Int,
-                             outDir: String, nBuckets: Int = 8): Unit = {
+                             outDir: String, nBuckets: Int): Unit = {
     val base = batch.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val segs = segmentDocs(base, window).localCheckpoint()
@@ -473,21 +472,12 @@ object Dedup {
     val deltas = hosts.groupBy("seg").agg(count(lit(1)).as("nd"))
       .select(lit(batchId).as("batch_id"), xxhash64(col("seg")).as("skey"),
         col("seg"), col("nd"))
-    // join-free appends: one job each under AQE-off (absorbMinhashCore)
-    withDesc(spark, "cycle: absorb segdf") {
-      withAqeOff(deltas)(graft.sources.Sinks.bucketed(_, s"${tableBase}_segdf",
-        "skey", nBuckets, mode = SaveMode.Append))
-    }
-    withDesc(spark, "cycle: absorb docs") {
-      withAqeOff(base.select(col("doc_id").as("id")))(graft.sources.Sinks.bucketed(_,
-        s"${tableBase}_docs", "id", nBuckets, mode = SaveMode.Append))
-    }
-    spark.catalog.refreshTable(s"${tableBase}_segdf")
-    spark.catalog.refreshTable(s"${tableBase}_docs")
+    SegDfIndex.append(spark, tableBase, "segdf", nBuckets)(deltas)
+    SegDfIndex.append(spark, tableBase, "docs", nBuckets)(base.select(col("doc_id").as("id")))
   }
 
-  /** Compact the st13 segment-df index: retire the per-batch small
-    * files AND collapse the delta history — each segment's per-batch
+  /** The st13 segment-df index. Compaction retires the per-batch small
+    * files AND collapses the delta history — each segment's per-batch
     * max(nd) rows sum into ONE `batch_id = -1` row (exactly the
     * aggregation every probe would otherwise redo), and `_docs` is
     * rewritten to one file per bucket. Probe results over later batches
@@ -495,28 +485,22 @@ object Dedup {
     * every real batch id, so the `batch_id < probing` prior filter
     * keeps matching.
     *
-    * Contract: run AT REST (no active stream) — collapsing batch ids
+    * Contract: compact AT REST (no active stream) — collapsing batch ids
     * makes replays of PRE-compaction batches non-idempotent (their own
     * deltas would read as prior), so compaction is also a checkpoint
-    * barrier, the same no-concurrent-writer cadence rule as
-    * [[compactMinhashIndex]].
+    * barrier, the same no-concurrent-writer cadence rule as every
+    * [[LandedIndex.compact]].
     */
-  def compactSegDfIndex(spark: SparkSession, tableBase: String,
-                        nBuckets: Int = 8): Unit = {
+  private[graft] val SegDfIndex = LandedIndex[Unit]("st13", Seq(
     // max-per-(batch, seg) BEFORE the cross-batch sum — the probe's own
     // aggregation, so duplicate appends of a replayed batch collapse
     // here exactly as they would at probe time
-    val (sb, sa) = compactBucketedTable(spark, s"${tableBase}_segdf", "skey",
-      nBuckets, df => df
-        .groupBy("batch_id", "skey", "seg").agg(max(col("nd")).as("nd"))
-        .groupBy("skey", "seg").agg(sum(col("nd")).as("nd"))
-        .select(lit(-1L).as("batch_id"), col("skey"), col("seg"), col("nd")))
-    val (db, da) = compactBucketedTable(spark, s"${tableBase}_docs", "id",
-      nBuckets, df => df.distinct()) // replayed guard appends collapse too
-    graft.Metrics.set("st13.compact",
-      "segdf_files_before" -> sb, "segdf_files_after" -> sa,
-      "docs_files_before" -> db, "docs_files_after" -> da)
-  }
+    IndexTable("segdf", "skey", _
+      .groupBy("batch_id", "skey", "seg").agg(max(col("nd")).as("nd"))
+      .groupBy("skey", "seg").agg(sum(col("nd")).as("nd"))
+      .select(lit(-1L).as("batch_id"), col("skey"), col("seg"), col("nd"))),
+    IndexTable("docs", "id", _.distinct())), // replayed guard appends collapse too
+    frozen = Nil, meta = None)
 
   /** Benchmark decontamination — the training-data hygiene step every
     * large pretraining pipeline runs (the GPT-3/Gopher-style n-gram
@@ -1161,29 +1145,18 @@ object Dedup {
     // §1.2: a pass that only re-counts what a previous pass wrote is a
     // pass removed; at corpus scale that re-read is a full table scan)
     val obs = org.apache.spark.sql.Observation()
-    graft.sources.Sinks.bucketed(
-      minhashSignatures(docs, idCol, textCol, n, k)
-        .observe(obs, count(lit(1)).as("n")),
-      s"${tableBase}_sigs", "id", nBuckets, path = Some(s"$dir/sigs"))
+    MinhashIndex.land(tableBase, dir, "sigs", nBuckets)(
+      minhashSignatures(docs, idCol, textCol, n, k).observe(obs, count(lit(1)).as("n")))
     val landedSigs = spark.table(s"${tableBase}_sigs")
-    graft.sources.Sinks.bucketed(
-      bandRows(landedSigs, bands, rows)
-        .withColumn("bkey", xxhash64(col("band"), col("bh"))),
-      s"${tableBase}_bands", "bkey", nBuckets, path = Some(s"$dir/bands"))
+    MinhashIndex.land(tableBase, dir, "bands", nBuckets)(
+      bandRows(landedSigs, bands, rows).withColumn("bkey", xxhash64(col("band"), col("bh"))))
     val nDocs = observedCount(obs, "n")(landedSigs.count())
-    writeIndexMeta(spark, tableBase, s"$dir/meta", n, k, bands, nDocs, nBuckets)
     // the land KNOWS the meta it just wrote — returning it saves every
-    // ingest loop the per-drain readMinhashMeta head() job + catalog query
-    MinhashMeta(n, k, bands, nDocs, nBuckets, s"$dir/meta")
+    // ingest loop the per-drain meta head() job
+    val meta = MinhashMeta(n, k, bands, nDocs, nBuckets)
+    MinhashIndex.writeMeta(spark, tableBase, meta, s"$dir/meta")
+    meta
   }
-
-  private def writeIndexMeta(spark: SparkSession, tableBase: String,
-                             metaPath: String, n: Int, k: Int, bands: Int,
-                             nDocs: Long, nBuckets: Int): Unit =
-    spark.createDataFrame(Seq((n, k, bands, nDocs, nBuckets)))
-      .toDF("n", "k", "bands", "n_docs", "n_buckets")
-      .write.mode(SaveMode.Overwrite).option("path", metaPath)
-      .saveAsTable(s"${tableBase}_meta")
 
   /** Absorb an arriving batch into a landed [[landMinhashIndex]] — the
     * continuous-ingest loop: after probing ([[incrementalMinhashPairs]]),
@@ -1193,7 +1166,7 @@ object Dedup {
     * bucketed writer with the landed bucket spec (one new file per
     * touched bucket per batch — bkey co-location and bucket pruning keep
     * working; when small-file counts accumulate,
-    * [[compactMinhashIndex]] rewrites each bucket back to one file).
+    * [[LandedIndex.compact]] rewrites each bucket back to one file).
     * Meta's `n_docs` advances so downstream sizing reads
     * the true corpus size. Ids must be disjoint from everything already
     * absorbed — same contract as the probe.
@@ -1201,30 +1174,30 @@ object Dedup {
   def absorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
                          idCol: String, textCol: String,
                          tableBase: String): Unit = {
-    val meta = readMinhashMeta(spark, tableBase)
+    val meta = MinhashIndex.readMeta(spark, tableBase)
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
       .localCheckpoint() // one batch-sized pass; both appends + the count reuse it
-    persistMinhashMeta(spark, tableBase, absorbMinhashCore(spark, bSigs, tableBase, meta))
+    MinhashIndex.persist(spark, tableBase, absorbMinhashCore(spark, bSigs, tableBase, meta))
   }
 
-  /** The immutable-per-index slice of a landed MinHash index's `_meta`
-    * row (`n_docs` is the only field that moves, advancing on each
-    * absorb) plus the meta table's resolved location — cacheable across
-    * a per-micro-batch ingest loop so each batch skips the meta
-    * `head()` job and the `DESCRIBE FORMATTED` catalog query.
+  /** A landed MinHash index's `_meta` row. `n_docs` is the only field
+    * that moves, advancing on each absorb, so an ingest loop threads one
+    * value through its batches instead of reading the row per batch.
     */
   private[graft] final case class MinhashMeta(n: Int, k: Int, bands: Int,
-                                              nDocs: Long, nBuckets: Int,
-                                              metaPath: String) {
+                                              nDocs: Long, nBuckets: Int) {
     def bandRowCount: Int = k / bands
   }
 
-  private[graft] def readMinhashMeta(spark: SparkSession,
-                                     tableBase: String): MinhashMeta = {
-    val m = spark.table(s"${tableBase}_meta").head()
-    MinhashMeta(m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4),
-      tableLocation(spark, s"${tableBase}_meta"))
-  }
+  /** The d11 MinHash index: `_bands` then `_sigs` (the guard key). */
+  private[graft] val MinhashIndex = LandedIndex[MinhashMeta]("d11",
+    Seq(IndexTable("bands", "bkey"), IndexTable("sigs", "id")), frozen = Nil,
+    Some(MetaCodec(
+      Seq("n" -> IntegerType, "k" -> IntegerType, "bands" -> IntegerType,
+        "n_docs" -> LongType, "n_buckets" -> IntegerType),
+      m => Seq[Any](m.n, m.k, m.bands, m.nDocs, m.nBuckets),
+      (r, _, _) => MinhashMeta(r.getAs[Int]("n"), r.getAs[Int]("k"),
+        r.getAs[Int]("bands"), r.getAs[Long]("n_docs"), r.getAs[Int]("n_buckets")))))
 
   /** Append precomputed batch signatures (and their band rows) to the
     * index; returns the advanced meta. The core never writes `_meta`:
@@ -1245,34 +1218,16 @@ object Dedup {
   private def absorbMinhashCore(spark: SparkSession, bSigs: DataFrame,
                                 tableBase: String,
                                 meta: MinhashMeta): MinhashMeta = {
-    // join-free append plans: AQE off folds each append's exchange+write
-    // into ONE job (see withAqeOff; the explicit repartition pins the
-    // partition count either way, so the file layout is identical)
-    withDesc(spark, "cycle: absorb bands") {
-      withAqeOff(bandRows(bSigs, meta.bands, meta.bandRowCount)
-          .withColumn("bkey", xxhash64(col("band"), col("bh"))))(
-        graft.sources.Sinks.bucketed(_, s"${tableBase}_bands", "bkey",
-          meta.nBuckets, mode = SaveMode.Append))
-    }
+    MinhashIndex.append(spark, tableBase, "bands", meta.nBuckets)(
+      bandRows(bSigs, meta.bands, meta.bandRowCount)
+        .withColumn("bkey", xxhash64(col("band"), col("bh"))))
     // the batch count rides the append as an observe() aggregate — no
     // separate count() job per absorb (the streaming loops' cost is the
     // per-micro-batch job floor)
     val obs = org.apache.spark.sql.Observation()
-    withDesc(spark, "cycle: absorb sigs") {
-      withAqeOff(bSigs.observe(obs, count(lit(1)).as("n")))(
-        graft.sources.Sinks.bucketed(_, s"${tableBase}_sigs", "id",
-          meta.nBuckets, mode = SaveMode.Append))
-    }
-    val advanced =
-      meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bSigs.count()))
-    // The bucketed append refreshes by PATH only; a reader that already
-    // resolved these tables holds an identifier-keyed cached relation
-    // whose file listing predates this append (observed: a streaming
-    // probe loop missing every row the previous batch absorbed).
-    // Invalidate by table identifier so the next probe lists afresh.
-    spark.catalog.refreshTable(s"${tableBase}_sigs")
-    spark.catalog.refreshTable(s"${tableBase}_bands")
-    advanced
+    MinhashIndex.append(spark, tableBase, "sigs", meta.nBuckets)(
+      bSigs.observe(obs, count(lit(1)).as("n")))
+    meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bSigs.count()))
   }
 
   /** Read a row count that rode a (synchronous) write action as an
@@ -1287,117 +1242,6 @@ object Dedup {
                                    key: String)(recount: => Long): Long =
     obs.get.get(key).map(_.asInstanceOf[Long]).getOrElse(recount)
 
-  /** Write `meta` as the index's `_meta` row. */
-  private[graft] def persistMinhashMeta(spark: SparkSession, tableBase: String,
-                                        meta: MinhashMeta): Unit =
-    writeIndexMeta(spark, tableBase, meta.metaPath, meta.n, meta.k, meta.bands,
-      meta.nDocs, meta.nBuckets)
-
-  /** Catalog location of `table` (the URI string Spark records). */
-  private[operators] def tableLocation(spark: SparkSession, table: String): String =
-    spark.sql(s"DESCRIBE FORMATTED $table")
-      .filter(col("col_name") === "Location").head().getString(1)
-
-  private def asLocalPath(loc: String): java.nio.file.Path = {
-    val uri = new java.net.URI(loc)
-    if (uri.getScheme == null) java.nio.file.Paths.get(loc)
-    else java.nio.file.Paths.get(uri)
-  }
-
-  private def parquetFileCount(loc: String): Long = {
-    val s = java.nio.file.Files.walk(asLocalPath(loc))
-    try s.filter(p => p.toString.endsWith(".parquet")).count()
-    finally s.close()
-  }
-
-  /** Compaction generation of a bucketed index table, tracked as a table
-    * property (`graft.compact.gen`, absent = 0) rather than parsed from
-    * the path — a user-supplied index dir that legitimately ends in
-    * `_c<digits>` must not be mangled by a suffix heuristic.
-    */
-  private def tableGen(spark: SparkSession, t: String): Int =
-    spark.sql(s"SHOW TBLPROPERTIES $t")
-      .filter(col("key") === "graft.compact.gen")
-      .collect().headOption.map(_.getString(1).toInt).getOrElse(0)
-
-  /** Rewrite one bucketed index table to one file per (non-empty)
-    * bucket; returns (files_before, files_after).
-    *
-    * The input is read by PATH, NOT via `spark.table(t)`: the catalog
-    * relation's bucket spec already satisfies
-    * `HashPartitioning(bucketCol, nBuckets)`, so Catalyst elides the
-    * user `repartition` — and then, with no operator left that requires
-    * the distribution, disables the bucketed scan too. The writer then
-    * receives scan-order partitions and emits one file per (task,
-    * bucket): a "compaction" that compacts nothing, silently (probe
-    * results stay bit-identical either way). A path read carries no
-    * bucket spec, so the repartition Exchange survives planning
-    * (PlanAuditSpec pins both plan shapes) and — because `repartition`
-    * uses the same hash family as the bucketed writer's bucket-id
-    * assignment — each output task holds exactly one bucket's rows and
-    * writes exactly one file.
-    *
-    * The rewrite stages to a versioned sibling directory (`…_c1`,
-    * `…_c2`, …; generation from [[tableGen]]) under a temp catalog
-    * name, then swaps rename-aside → rename-over → drop-aside, so a
-    * catalog entry pointing at live index data exists at every step: a
-    * crash before the first rename leaves the live table untouched; a
-    * crash mid-swap leaves the data reachable under the `_precompact` /
-    * `_compacting` names (all tables are external — drops and renames
-    * never move or delete files); only after the swap completes are the
-    * old files deleted.
-    */
-  private[operators] def compactBucketedTable(spark: SparkSession, t: String,
-                                   bcol: String, nBuckets: Int,
-                                   transform: DataFrame => DataFrame = identity)
-      : (Long, Long) = {
-    val oldLoc = tableLocation(spark, t)
-    val before = parquetFileCount(oldLoc)
-    val gen = tableGen(spark, t)
-    val base = if (gen == 0) oldLoc else {
-      val sfx = s"_c$gen"
-      require(oldLoc.endsWith(sfx),
-        s"$t: location $oldLoc does not end with recorded generation suffix $sfx")
-      oldLoc.dropRight(sfx.length)
-    }
-    val newLoc = s"${base}_c${gen + 1}"
-    val staged = s"${t}_compacting"
-    val aside = s"${t}_precompact"
-    spark.sql(s"DROP TABLE IF EXISTS $staged")
-    spark.sql(s"DROP TABLE IF EXISTS $aside")
-    graft.sources.Sinks.bucketed(
-      transform(spark.read.schema(spark.table(t).schema).parquet(oldLoc)),
-      staged, bcol, nBuckets, path = Some(newLoc))
-    spark.sql(s"ALTER TABLE $staged SET TBLPROPERTIES ('graft.compact.gen'='${gen + 1}')")
-    spark.sql(s"ALTER TABLE $t RENAME TO $aside")
-    spark.sql(s"ALTER TABLE $staged RENAME TO $t")
-    spark.sql(s"DROP TABLE $aside") // external: catalog entry only, files stay
-    graft.sources.Spool.deleteRecursively(asLocalPath(oldLoc))
-    spark.catalog.refreshTable(t)
-    (before, parquetFileCount(newLoc))
-  }
-
-  /** Compact a landed [[landMinhashIndex]] back to one file per bucket.
-    *
-    * Every [[absorbMinhashBatch]] appends ~one new file per touched
-    * bucket, so after B batches a bucket's probe-side scan opens O(B)
-    * small files — the classic ingest small-files debt.
-    * [[compactBucketedTable]] rewrites each index table once; probe
-    * results are bit-identical before and after (spec-pinned), bucket
-    * pruning and bkey co-location keep working — only the file count
-    * changes. Cadence is the operator's choice; the `d11.compact`
-    * Metrics entry reports files before/after per table.
-    */
-  def compactMinhashIndex(spark: SparkSession, tableBase: String): Unit = {
-    val nBuckets = spark.table(s"${tableBase}_meta").head().getInt(4)
-    val counts = Seq(("sigs", "id"), ("bands", "bkey")).flatMap { case (sfx, bcol) =>
-      val (before, after) =
-        compactBucketedTable(spark, s"${tableBase}_$sfx", bcol, nBuckets)
-      Seq(s"${sfx}_files_before" -> before, s"${sfx}_files_after" -> after)
-    }
-    graft.Metrics.set("d11.compact", counts: _*)
-  }
-
   /** Near-dup pairs INVOLVING an arriving batch, probed against a landed
     * [[landMinhashIndex]] — bit-identical to running [[minhashLshPairs]]
     * over (corpus ∪ batch) and keeping the pairs with at least one batch
@@ -1407,10 +1251,8 @@ object Dedup {
     *  - batch signatures/bands are computed fresh (one pass over the
     *    batch, cached — it is batch-sized by definition);
     *  - batch×corpus candidates stream the landed band index past the
-    *    batch bands — with `broadcastBatch` (the default, right whenever
-    *    the batch fits the broadcast budget) the index scan never
-    *    shuffles at all; a corpus-sized batch flips to a shuffle join
-    *    whose index side is already bucketed on the join key bkey;
+    *    broadcast batch bands, so the index scan never shuffles (the
+    *    batch must fit the broadcast budget);
     *  - batch-internal candidates reuse the d3 salted self-join on the
     *    tiny batch side;
     *  - the verify re-joins signatures by id from landed-sigs ∪ batch-
@@ -1422,9 +1264,8 @@ object Dedup {
     */
   def incrementalMinhashPairs(spark: SparkSession, newDocs: DataFrame,
                               idCol: String, textCol: String,
-                              tableBase: String, threshold: Double,
-                              broadcastBatch: Boolean = true): DataFrame = {
-    val meta = readMinhashMeta(spark, tableBase)
+                              tableBase: String, threshold: Double): DataFrame = {
+    val meta = MinhashIndex.readMeta(spark, tableBase)
     // localCheckpoint, not cache(): a cache() entry lives in the shared
     // CacheManager until an explicit unpersist that a lazy-returning
     // probe has nowhere to place, so a per-micro-batch caller (st9)
@@ -1433,7 +1274,7 @@ object Dedup {
     // by the ContextCleaner once the probe's plan is garbage.
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
       .localCheckpoint()
-    probeMinhashCore(spark, bSigs, tableBase, meta, threshold, broadcastBatch)
+    probeMinhashCore(spark, bSigs, tableBase, meta, threshold)
   }
 
   /** Probe the index with precomputed batch signatures (the shared core
@@ -1441,61 +1282,28 @@ object Dedup {
     */
   private def probeMinhashCore(spark: SparkSession, bSigs: DataFrame,
                                tableBase: String, meta: MinhashMeta,
-                               threshold: Double,
-                               broadcastBatch: Boolean): DataFrame = {
+                               threshold: Double): DataFrame = {
     val idxSigs = spark.table(s"${tableBase}_sigs")
     val idxBands = spark.table(s"${tableBase}_bands")
     val bBands = bandRows(bSigs, meta.bands, meta.bandRowCount)
       .withColumn("bkey", xxhash64(col("band"), col("bh")))
-    val probe = if (broadcastBatch) broadcast(bBands) else bBands
-    // Index-bucket pruning: the batch's distinct bkey set (batch-sized —
-    // |batch|·bands values, one driver-side collect, the same sanctioned
-    // class as d9's sketch head()) becomes an InSet filter on the scan's
-    // BUCKET column, so Spark's bucket pruning skips every index FILE
-    // whose bucket holds none of the batch's keys. With nBuckets sized
-    // to the corpus (thousands at 100 TB), a small batch touches
-    // ~|batch|·bands/nBuckets of the index files and the probe's IO is
-    // batch-proportional, not corpus-proportional. Guarded by KEY COUNT
-    // against BOTH failure modes ([[pruneKeyCap]]): k keys over B
-    // buckets hit an expected 1−(1−1/B)^k of them, so past k ≈ B·ln4
-    // the filter skips <25% of files while its literal list still taxes
-    // every Catalyst transform (measured: a useless 7.9k-literal InSet
-    // at B=32 added ~4 s of planning per probe — r16 IncBench; ~80k
-    // literals added minutes across st9's gen1 micro-batches in r15).
-    // Past the cap, scan the index unfiltered and let the join do the
-    // work — the prune is a file-skip optimization, never a correctness
-    // ingredient.
-    val maxInSetKeys = pruneKeyCap(meta.nBuckets)
-    val idxPruned = {
-      // broadcastBatch ⇒ bBands ships whole anyway, so collecting its
-      // bkey column (and deduping driver-side) is bounded by the same
-      // contract — and skips the distinct's exchange + AQE stage job
-      // that the limit-collect spelling paid per micro-batch. The
-      // shuffle-join path (corpus-sized batch) keeps the capped
-      // distinct+limit collect: an unbounded bkey collect there would
-      // be corpus-proportional driver traffic.
-      val bkeys =
-        if (broadcastBatch) withDesc(spark, "d11: probe bkeys") {
-          bBands.select("bkey").collect()
-        }.map(_.getLong(0)).distinct
-        else withDesc(spark, "d11: probe bkeys") {
-          bBands.select("bkey").distinct().limit(maxInSetKeys + 1).collect()
-        }.map(_.getLong(0))
-      graft.Metrics.set("d11", "probe_bkeys" -> bkeys.length.toLong,
-        "prune_cap" -> maxInSetKeys.toLong,
-        "bucket_pruned" -> (bkeys.length <= maxInSetKeys))
-      if (bkeys.length > maxInSetKeys) idxBands
-      else idxBands.filter(col("bkey").isInCollection(bkeys.toSeq))
-    }
-    // join includes bkey FIRST so the shuffle regime co-locates with the
-    // index buckets; band+bh make the match exact (bkey alone could
-    // collide)
+    // the batch's distinct bkey set (|batch|·bands values) prunes the
+    // index buckets. bBands broadcasts whole anyway, so collecting its
+    // bkey column (and deduping driver-side) is bounded by the same
+    // contract — and skips the exchange + AQE stage job a distinct+limit
+    // collect pays
+    val bkeys = withDesc(spark, "d11: probe bkeys") {
+      bBands.select("bkey").collect()
+    }.map(_.getLong(0)).distinct
+    val idxPruned = bucketPruned(idxBands, "bkey", bkeys, meta.nBuckets, "d11",
+      "probe_bkeys")
+    // band+bh make the bkey match exact (bkey alone could collide)
     // no distinct on cross alone: the final distinct below dedups the
     // union, and its partial (map-side) aggregate already collapses the
     // per-band duplicates before the exchange — a pre-distinct here was
     // a second full exchange of the same rows (plan: 2 Exchange → 1 on
     // the cross branch; r19)
-    val cross = idxPruned.as("c").join(probe.as("p"),
+    val cross = idxPruned.as("c").join(broadcast(bBands).as("p"),
         col("c.bkey") === col("p.bkey") && col("c.band") === col("p.band") &&
           col("c.bh") === col("p.bh") && col("c.id") =!= col("p.id"))
       .select(least(col("c.id"), col("p.id")).as("id_a"),
@@ -1521,6 +1329,29 @@ object Dedup {
     */
   private[operators] def pruneKeyCap(nBuckets: Int): Int =
     math.min(8192, math.ceil(nBuckets * math.log(4.0)).toInt)
+
+  /** `table` restricted to the rows whose bucket column `bcol` holds one
+    * of `keys`: an InSet filter on the BUCKET column, so Spark's bucket
+    * pruning skips every index FILE whose bucket holds none of the keys.
+    * With nBuckets sized to the corpus (thousands at 100 TB), a small
+    * batch touches ~|keys|/nBuckets of the index files and a probe's IO
+    * is batch-proportional, not corpus-proportional. Guarded by KEY
+    * COUNT against both failure modes ([[pruneKeyCap]]; measured: a
+    * useless 7.9k-literal InSet at B=32 added ~4 s of planning per probe,
+    * ~80k literals added minutes across st9's gen1 micro-batches): past
+    * the cap the table is scanned whole and the consuming join does the
+    * work — the prune is a file-skip device, never a correctness
+    * ingredient. Records Metrics `tag`: `keysField` (the key count),
+    * `prune_cap` and `bucket_pruned`.
+    */
+  private[graft] def bucketPruned(table: DataFrame, bcol: String, keys: Array[Long],
+                                  nBuckets: Int, tag: String,
+                                  keysField: String): DataFrame = {
+    val cap = pruneKeyCap(nBuckets)
+    graft.Metrics.set(tag, keysField -> keys.length.toLong, "prune_cap" -> cap.toLong,
+      "bucket_pruned" -> (keys.length <= cap))
+    if (keys.length > cap) table else table.filter(col(bcol).isInCollection(keys.toSeq))
+  }
 
   /** Run the action `f` over `df` (a JOIN-FREE plan — scan/project/
     * repartition/aggregate, or a join whose strategy a hint pins — so no
@@ -1555,20 +1386,15 @@ object Dedup {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** The batch-proportional redelivery guard shared by the landed-index
-    * absorbs and the streaming ingest loops: drop every `base` row
-    * whose `id` already exists in the id-BUCKETED `landedTable`. The
-    * batch's distinct ids (a batch-sized, bounded collect) become an
-    * InSet filter on the table's bucket column, so Spark's bucket
-    * pruning skips every index file the batch's ids cannot hash into —
-    * guard IO stays flat in corpus size at fixed batch size. Capped by
-    * [[pruneKeyCap]] (the d11 break-even: past ~nBuckets·ln4
-    * keys the expected file skip is under 25% while the InSet literal
-    * taxes every Catalyst transform) — past the cap the anti-join runs
-    * against the unfiltered id column, which is still a single-column
-    * pruned scan. The prune is a file-skip device, never a correctness
-    * ingredient: a landed row with an id IN the batch always survives
-    * the InSet, so the anti-join result is identical either way.
+  /** The batch-proportional redelivery guard of the standalone IVF-PQ
+    * absorb: drop every `base` row whose `id` already exists in the
+    * id-BUCKETED `landedTable`. The batch's distinct ids (a batch-sized
+    * collect bounded at [[pruneKeyCap]] + 1) [[bucketPruned]] the table,
+    * so guard IO stays flat in corpus size at fixed batch size — past the
+    * cap the anti-join runs against the unfiltered id column, which is
+    * still a single-column pruned scan. A landed row with an id IN the
+    * batch always survives the InSet, so the anti-join result is
+    * identical either way.
     *
     * `idCol` names the BATCH side's key column; the landed index
     * tables' bucket column is always `id`.
@@ -1577,12 +1403,9 @@ object Dedup {
                                    landedTable: String, nBuckets: Int,
                                    tag: String, idCol: String = "id"): DataFrame = {
     val landed = spark.table(landedTable).select(col("id"))
-    val cap = Dedup.pruneKeyCap(nBuckets)
-    val ids = base.select(col(idCol).as("id")).distinct().limit(cap + 1).collect()
-    graft.Metrics.set(tag, "batch_ids" -> ids.length.toLong,
-      "prune_cap" -> cap.toLong, "bucket_pruned" -> (ids.length <= cap))
-    val slice = if (ids.length > cap) landed
-      else landed.filter(col("id").isInCollection(ids.map(_.getLong(0)).toSeq))
+    val ids = base.select(col(idCol).as("id")).distinct()
+      .limit(pruneKeyCap(nBuckets) + 1).collect().map(_.getLong(0))
+    val slice = bucketPruned(landed, "id", ids, nBuckets, tag, "batch_ids")
     base.join(slice.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }
 
@@ -1602,7 +1425,8 @@ object Dedup {
     *
     *  - under the [[pruneKeyCap]]: the batch's distinct ids are fully
     *    known, the bucket-pruned InSet slice IS the intersection (one
-    *    file-skipping job), and the fresh-id remainder filter carries at
+    *    file-skipping scan job, plus the build job of the id broadcast),
+    *    and the fresh-id remainder filter carries at
     *    most cap literals — every case decided with ZERO extra jobs;
     *  - past the cap (gate-scale batches over small bucket counts): the
     *    intersection comes from one semi-join of the landed id column
@@ -1624,17 +1448,16 @@ object Dedup {
     val ids = withDesc(spark, s"$tag: batch ids") {
       base.select(col(idCol).as("id")).collect()
     }.map(_.getLong(0)).distinct
-    graft.Metrics.set(tag, "batch_ids" -> ids.length.toLong,
-      "prune_cap" -> cap.toLong, "bucket_pruned" -> (ids.length <= cap))
+    val slice = bucketPruned(landed, "id", ids, nBuckets, tag, "batch_ids")
     if (ids.isEmpty) return None // empty batch: nothing to probe or absorb
-    val slice = if (ids.length <= cap)
-      landed.filter(col("id").isInCollection(ids.toSeq)) // file-skipping InSet
-    else landed
-    // landed ∩ batch, via a semi-join against the LOCAL RELATION of the
-    // collected ids: a LocalTableScan broadcast builds driver-side with
-    // NO Spark job, so the intersect costs exactly one scan job
-    // the join strategy is PINNED by the broadcast hint (a LocalRelation
-    // build side), so AQE contributes only an extra stage job — off
+    // landed ∩ batch, via a join against the LOCAL RELATION of the
+    // collected ids. Its broadcast still builds in a Spark job of its own
+    // (BroadcastExchangeExec collects its child through
+    // executeCollectIterator, which LocalTableScanExec does not
+    // short-cut), so the intersect is TWO jobs: the 1-stage build and the
+    // scan-and-join collect (JobProf: 2 `<tag>: landed-intersect` jobs
+    // per micro-batch). The broadcast hint pins the join strategy, so
+    // AQE would only add a stage job — off
     val existing = withDesc(spark, s"$tag: landed-intersect") {
       import spark.implicits._
       withAqeOff(slice.join(broadcast(ids.toSeq.toDF("id")), Seq("id")))(_.collect())
@@ -1658,40 +1481,60 @@ object Dedup {
     }
   }
 
-  /** One full ingest cycle — probe, spool the pairs, absorb — with a
-    * SINGLE signature pass over the batch (the separate
+  /** One full ingest cycle — probe, spool, absorb — with a SINGLE
+    * signature pass over the batch (the separate
     * [[incrementalMinhashPairs]] + [[absorbMinhashBatch]] calls each
-    * recompute them). This is the st9 per-micro-batch loop body; at a
-    * few seconds per micro-batch the duplicated signature job and the
-    * two per-call meta reads are the dominant fixed overhead, not the
-    * data.
+    * recompute them). This is the st9 per-micro-batch loop body, and
+    * with `classify` the st11 one; at a few seconds per micro-batch the
+    * duplicated signature job and the two per-call meta reads are the
+    * dominant fixed overhead, not the data. The spool takes the probe's
+    * pairs, or with `classify` the per-doc [[incrementalSurvivors]]
+    * verdicts (see [[spoolCycle]]).
     *
-    * Ordering is the correctness heart: the pair spool append
-    * MATERIALIZES the probe before the absorb appends the batch to the
-    * index — absorbing first would let the probe's lazily-listed index
-    * scan see the batch's own rows and emit self-pairs. `meta` is the
-    * previous cycle's return (the drain threads it; see
+    * Ordering is the correctness heart: the spool append MATERIALIZES
+    * the probe before the absorb appends the batch to the index —
+    * absorbing first would let the probe's lazily-listed index scan see
+    * the batch's own rows and emit self-pairs. `meta` is the previous
+    * cycle's return (the drain threads it; see
     * [[graft.streaming.DocStreams.drain]]), and the advanced meta is
     * returned, not written.
     */
   private[graft] def probeAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
                                              idCol: String, textCol: String,
                                              tableBase: String, threshold: Double,
-                                             pairsDir: String,
-                                             meta: MinhashMeta): MinhashMeta = {
+                                             spoolDir: String, meta: MinhashMeta,
+                                             classify: Boolean = false): MinhashMeta = {
     val bSigs = withDesc(spark, "cycle: batch signatures") {
       minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
         .localCheckpoint()
     }
-    // no repartition(1): the probe's final distinct is the plan's last
-    // exchange and AQE coalescing already collapses its batch-sized
-    // output — the explicit single-file exchange was one more AQE stage
-    // job per micro-batch for the same spool content
-    withDesc(spark, "cycle: probe+spool") {
-      probeMinhashCore(spark, bSigs, tableBase, meta, threshold, broadcastBatch = true)
-        .write.mode(SaveMode.Append).parquet(pairsDir)
-    }
+    // verdicts fold over the FULL batch, not bSigs: a doc too short to
+    // shingle (< n tokens) has no signature and can never pair, but it
+    // still arrived and its verdict row (trivially is_new) must exist
+    spoolCycle(spark, probeMinhashCore(spark, bSigs, tableBase, meta, threshold),
+      newDocs.select(col(idCol).cast("long").as("doc_id")), classify, spoolDir)
     absorbMinhashCore(spark, bSigs, tableBase, meta)
+  }
+
+  /** Append one ingest cycle's probe result to its spool: the `pairs`,
+    * or with `classify` each `batch` id's keep/drop verdict
+    * ([[earliestNeighborFold]]). A verdict classifies the batch against
+    * the index AS LANDED WHEN IT ARRIVED — rows absorbed from earlier
+    * micro-batches count as earlier neighbors, smaller-id batch mates
+    * count as earlier, later arrivals never shield or condemn — so a
+    * drained verdict stream equals a single arrival-ordered fold over
+    * the full pair algebra (the st11/st12 oracles), whatever the
+    * chunking. No repartition(1): the spooled plan's last exchange is
+    * batch-sized and AQE coalescing already collapses it — the explicit
+    * single-file exchange was one more AQE stage job per micro-batch for
+    * the same spool content.
+    */
+  private def spoolCycle(spark: SparkSession, pairs: DataFrame, batch: DataFrame,
+                         classify: Boolean, spoolDir: String): Unit = {
+    val (label, rows) =
+      if (classify) ("cycle: verdict spool", earliestNeighborFold(batch, pairs, batch.columns.head))
+      else ("cycle: probe+spool", pairs)
+    withDesc(spark, label)(rows.write.mode(SaveMode.Append).parquet(spoolDir))
   }
 
   /** Keep/drop classification of an arriving batch against a landed
@@ -1724,40 +1567,6 @@ object Dedup {
     val pairs = incrementalMinhashPairs(spark, newDocs, idCol, textCol,
       tableBase, threshold)
     earliestNeighborFold(batch, pairs, "doc_id")
-  }
-
-  /** One full ingest-classification cycle — probe, fold the pairs into
-    * the [[incrementalSurvivors]] keep/drop decision, spool the
-    * per-doc verdicts, absorb — with a single signature pass over the
-    * batch (the st11 per-micro-batch loop body; the classification
-    * twin of [[probeAbsorbMinhashBatch]], same ordering contract: the
-    * spool append materializes the probe before the absorb mutates the
-    * index it scanned). The batch is classified against the index AS
-    * LANDED WHEN IT ARRIVED — docs already absorbed from earlier
-    * micro-batches count as earlier neighbors, smaller-id batch mates
-    * count as earlier, later arrivals never shield or condemn — so the
-    * drained stream equals a single arrival-ordered fold over the full
-    * pair algebra (the st11 oracle), whatever the chunking.
-    */
-  private[graft] def classifyAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
-                                                idCol: String, textCol: String,
-                                                tableBase: String, threshold: Double,
-                                                classDir: String,
-                                                meta: MinhashMeta): MinhashMeta = {
-    val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
-      .localCheckpoint()
-    val pairs = probeMinhashCore(spark, bSigs, tableBase, meta, threshold,
-      broadcastBatch = true)
-    // fold over the FULL batch, not bSigs: a doc too short to shingle
-    // (< n tokens) has no signature and can never pair, but it still
-    // arrived and its verdict row (trivially is_new) must exist
-    // no repartition(1): see probeAbsorbMinhashBatch
-    withDesc(spark, "cycle: verdict spool") {
-      earliestNeighborFold(newDocs.select(col(idCol).cast("long").as("doc_id")),
-          pairs, "doc_id")
-        .write.mode(SaveMode.Append).parquet(classDir)
-    }
-    absorbMinhashCore(spark, bSigs, tableBase, meta)
   }
 
   /** The earlier-neighbor fold shared by [[incrementalSurvivors]] and
@@ -1830,31 +1639,22 @@ object Dedup {
     // necessary). `_vecs` depends on nothing the count feeds, so the
     // land does 3 corpus-reads (vecs, sample, assign) instead of 4.
     val obs = org.apache.spark.sql.Observation()
-    graft.sources.Sinks.bucketed(base.observe(obs, count(lit(1)).as("n")),
-      s"${tableBase}_vecs", "id", nBuckets, path = Some(s"$dir/vecs"))
+    SemanticIndex.land(tableBase, dir, "vecs", nBuckets)(
+      base.observe(obs, count(lit(1)).as("n")))
     val nDocs = observedCount(obs, "n")(base.count())
     Similarity.md5Sample(embs, idCol, vecCol, ivfCellsFor(nDocs), "cid", "cw")
       .write.mode(SaveMode.Overwrite).option("path", s"$dir/cents")
       .saveAsTable(s"${tableBase}_cents")
     val landedCents = spark.table(s"${tableBase}_cents")
-    graft.sources.Sinks.bucketed(assignCells(base, landedCents),
-      s"${tableBase}_assign", "cid", nBuckets, path = Some(s"$dir/assign"))
+    SemanticIndex.land(tableBase, dir, "assign", nBuckets)(assignCells(base, landedCents))
     // the frozen cell count rides meta (not a per-absorb _cents scan):
     // ivfCellsFor(nDocs) clamps at the corpus size, so the sample can
     // hold fewer rows than the formula on tiny corpora — record the
     // formula value, the thing staleness is measured against
-    writeSemanticMeta(spark, tableBase, s"$dir/meta", nDocs, nBuckets,
-      ivfCellsFor(nDocs))
-    SemanticMeta(nDocs, nBuckets, ivfCellsFor(nDocs), s"$dir/meta")
+    val meta = SemanticMeta(nDocs, nBuckets, ivfCellsFor(nDocs))
+    SemanticIndex.writeMeta(spark, tableBase, meta, s"$dir/meta")
+    meta
   }
-
-  private def writeSemanticMeta(spark: SparkSession, tableBase: String,
-                                metaPath: String, nDocs: Long,
-                                nBuckets: Int, nCents: Int): Unit =
-    spark.createDataFrame(Seq((nDocs, nBuckets, nCents)))
-      .toDF("n_docs", "n_buckets", "n_cents")
-      .write.mode(SaveMode.Overwrite).option("path", metaPath)
-      .saveAsTable(s"${tableBase}_meta")
 
   /** The quantizer-staleness advisory (the missing half of the frozen-
     * quantizer versioning contract): absorbs grow `n_docs` while the
@@ -1885,11 +1685,10 @@ object Dedup {
     *  - the centroid table broadcasts into the batch's argmax
     *    assignment (one map-side pass over the batch);
     *  - batch×corpus candidates join the landed assign table same-cell
-    *    on cid — broadcast probe by default (zero index-side shuffle),
+    *    on cid against the broadcast batch (zero index-side shuffle),
     *    with the batch's distinct-cid InSet pruning index files (the
     *    d11 prune, same 8k literal cap and Metrics evidence under
-    *    `d13`); a corpus-sized batch flips to a shuffle join co-located
-    *    with the cid buckets;
+    *    `d13`);
     *  - batch-internal candidates reuse the d10 salted same-cell self-
     *    join on the batch assignment;
     *  - the exact-cosine verify re-joins vectors by id from landed-vecs
@@ -1899,20 +1698,18 @@ object Dedup {
     */
   def incrementalSemanticPairs(spark: SparkSession, newEmbs: DataFrame,
                                idCol: String, vecCol: String,
-                               tableBase: String, threshold: Double,
-                               broadcastBatch: Boolean = true): DataFrame = {
+                               tableBase: String, threshold: Double): DataFrame = {
     val cents = spark.table(s"${tableBase}_cents")
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
     val bAssign = assignCells(bBase, cents).localCheckpoint()
-    val nBuckets = numBucketsOf(spark, s"${tableBase}_assign")
-    // the capped distinct-cid collect (this entry point admits
-    // corpus-sized batches via broadcastBatch = false, so the collect
-    // must stay bounded; the streaming cycles resolve cids driver-side)
+    val nBuckets = LandedIndex.numBuckets(spark, s"${tableBase}_assign")
+    // the capped distinct-cid collect: this entry point takes any batch
+    // its caller hands it, so the driver collect keeps a size bound (the
+    // streaming cycles resolve cids from their collected assignment)
     val cids = withDesc(spark, "d13: probe cids") {
       bAssign.select("cid").distinct().limit(pruneKeyCap(nBuckets) + 1).collect()
     }.map(_.getLong(0))
-    probeSemanticCore(spark, bBase, bAssign, cids, tableBase,
-      nBuckets, threshold, broadcastBatch)
+    probeSemanticCore(spark, bBase, bAssign, cids, tableBase, nBuckets, threshold)
   }
 
   /** Keep/drop classification of an arriving embedding batch against a
@@ -1936,14 +1733,6 @@ object Dedup {
     earliestNeighborFold(batch, pairs, "vec_id")
   }
 
-  /** Bucket count of a bucketed table from its catalog description — a
-    * driver-side catalog command, no Spark job (the probe wants
-    * nBuckets for [[pruneKeyCap]] without paying a meta-row read).
-    */
-  private def numBucketsOf(spark: SparkSession, table: String): Int =
-    spark.sql(s"DESCRIBE FORMATTED $table")
-      .filter(col("col_name") === "Num Buckets").head().getString(1).trim.toInt
-
   /** Probe the semantic index with a precomputed batch assignment (the
     * shared core of [[incrementalSemanticPairs]] and
     * [[probeAbsorbSemanticBatch]]). `bBase` is the batch's (id, v)
@@ -1953,29 +1742,18 @@ object Dedup {
   private def probeSemanticCore(spark: SparkSession, bBase: DataFrame,
                                 bAssign: DataFrame, bCids: Array[Long],
                                 tableBase: String,
-                                nBuckets: Int, threshold: Double,
-                                broadcastBatch: Boolean): DataFrame = {
+                                nBuckets: Int, threshold: Double): DataFrame = {
     val idxAssign = spark.table(s"${tableBase}_assign")
     val idxVecs = spark.table(s"${tableBase}_vecs")
-    val probe = if (broadcastBatch) broadcast(bAssign) else bAssign
-    // the d11 prune with the d11 cap rationale (pruneKeyCap): skip the
-    // InSet when the batch's cell set covers the buckets anyway. `bCids`
-    // comes from the caller — the streaming cycles read it off their
-    // already-collected batch assignment with zero extra jobs
-    val maxInSetKeys = pruneKeyCap(nBuckets)
-    val idxPruned = {
-      graft.Metrics.set("d13", "probe_cids" -> bCids.length.toLong,
-        "prune_cap" -> maxInSetKeys.toLong,
-        "bucket_pruned" -> (bCids.length <= maxInSetKeys))
-      if (bCids.length > maxInSetKeys) idxAssign
-      else idxAssign.filter(col("cid").isInCollection(bCids.toSeq))
-    }
+    // `bCids` comes from the caller — the streaming cycles read it off
+    // their already-collected batch assignment with zero extra jobs
+    val idxPruned = bucketPruned(idxAssign, "cid", bCids, nBuckets, "d13", "probe_cids")
     // no distinct on cross alone: a vector lives in exactly ONE cell
     // (keep-1 assignment), so a (batch, landed) pair arises from at most
     // one cell and cross is duplicate-free by construction — the old
     // pre-distinct was a full exchange that removed nothing; the final
     // union distinct still dedups cross-vs-intra (r19)
-    val cross = idxPruned.as("c").join(probe.as("p"),
+    val cross = idxPruned.as("c").join(broadcast(bAssign).as("p"),
         col("c.cid") === col("p.cid") && col("c.id") =!= col("p.id"))
       .select(least(col("c.id"), col("p.id")).as("id_a"),
         greatest(col("c.id"), col("p.id")).as("id_b"))
@@ -1999,33 +1777,35 @@ object Dedup {
   def absorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
                           idCol: String, vecCol: String,
                           tableBase: String): Unit = {
-    val meta = readSemanticMeta(spark, tableBase)
+    val meta = SemanticIndex.readMeta(spark, tableBase)
     val cents = spark.table(s"${tableBase}_cents")
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint() // one batch-sized pass; both appends + count reuse it
-    persistSemanticMeta(spark, tableBase,
+    SemanticIndex.persist(spark, tableBase,
       absorbSemanticCore(spark, bBase, assignCells(bBase, cents), tableBase, meta))
   }
 
-  /** The cacheable slice of a landed semantic index's `_meta` row plus
-    * the meta table's resolved location — the d13 twin of
+  /** A landed semantic index's `_meta` row — the d13 twin of
     * [[MinhashMeta]] (`n_docs` is the only moving field).
     */
-  private[graft] final case class SemanticMeta(nDocs: Long, nBuckets: Int,
-                                               nCents: Int, metaPath: String)
+  private[graft] final case class SemanticMeta(nDocs: Long, nBuckets: Int, nCents: Int)
 
-  private[graft] def readSemanticMeta(spark: SparkSession,
-                                      tableBase: String): SemanticMeta = {
-    val m = spark.table(s"${tableBase}_meta").head()
-    // back-compat: an index landed before n_cents joined the meta row
-    // (r18) has a 2-field row — landed state is durable, so absorb/probe
-    // must still read it; the frozen-centroid count IS the _cents table's
-    // cardinality (dim-scale, one count) whenever the meta predates it
-    val nCents = if (m.length >= 3) m.getInt(2)
-      else spark.table(s"${tableBase}_cents").count().toInt
-    SemanticMeta(m.getLong(0), m.getInt(1), nCents,
-      tableLocation(spark, s"${tableBase}_meta"))
-  }
+  /** The d13 semantic index: frozen `_cents`, then `_assign` and `_vecs`
+    * (the guard key).
+    */
+  private[graft] val SemanticIndex = LandedIndex[SemanticMeta]("d13",
+    Seq(IndexTable("assign", "cid"), IndexTable("vecs", "id")), frozen = Seq("cents"),
+    Some(MetaCodec(
+      Seq("n_docs" -> LongType, "n_buckets" -> IntegerType, "n_cents" -> IntegerType),
+      m => Seq[Any](m.nDocs, m.nBuckets, m.nCents),
+      (r, spark, tableBase) => SemanticMeta(r.getAs[Long]("n_docs"),
+        r.getAs[Int]("n_buckets"),
+        // back-compat: an index landed before n_cents joined the meta row
+        // (r18) has a 2-field row — landed state is durable, so absorb/
+        // probe must still read it; the frozen-centroid count IS the
+        // _cents table's cardinality (dim-scale, one count) then
+        if (r.schema.fieldNames.contains("n_cents")) r.getAs[Int]("n_cents")
+        else spark.table(s"${tableBase}_cents").count().toInt))))
 
   /** Append a precomputed batch (vectors + their frozen-centroid
     * assignment) to the semantic index; returns the advanced meta.
@@ -2041,117 +1821,62 @@ object Dedup {
   private def absorbSemanticCore(spark: SparkSession, bBase: DataFrame,
                                  bAssign: DataFrame, tableBase: String,
                                  meta: SemanticMeta): SemanticMeta = {
-    // join-free appends: one job each under AQE-off (absorbMinhashCore)
-    withDesc(spark, "cycle: absorb assign") {
-      withAqeOff(bAssign)(graft.sources.Sinks.bucketed(_,
-        s"${tableBase}_assign", "cid", meta.nBuckets, mode = SaveMode.Append))
-    }
+    SemanticIndex.append(spark, tableBase, "assign", meta.nBuckets)(bAssign)
     // batch count rides the append (no separate count() job per absorb)
     val obs = org.apache.spark.sql.Observation()
-    withDesc(spark, "cycle: absorb vecs") {
-      withAqeOff(bBase.observe(obs, count(lit(1)).as("n")))(
-        graft.sources.Sinks.bucketed(_, s"${tableBase}_vecs", "id",
-          meta.nBuckets, mode = SaveMode.Append))
-    }
+    SemanticIndex.append(spark, tableBase, "vecs", meta.nBuckets)(
+      bBase.observe(obs, count(lit(1)).as("n")))
     val advanced =
       meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bBase.count()))
     staleAdvisory("d13", advanced.nDocs, meta.nCents)
-    spark.catalog.refreshTable(s"${tableBase}_assign")
-    spark.catalog.refreshTable(s"${tableBase}_vecs")
     advanced
   }
 
-  /** Write `meta` as the index's `_meta` row. */
-  private[graft] def persistSemanticMeta(spark: SparkSession, tableBase: String,
-                                         meta: SemanticMeta): Unit =
-    writeSemanticMeta(spark, tableBase, meta.metaPath, meta.nDocs,
-      meta.nBuckets, meta.nCents)
-
-  /** One full semantic ingest cycle — assign once, probe, spool the
-    * pairs, absorb — the st10 per-micro-batch loop body and the d13
-    * twin of [[probeAbsorbMinhashBatch]] (see there for the
-    * materialize-before-absorb ordering and the threaded meta).
+  /** One full semantic ingest cycle — assign once, probe, spool, absorb
+    * — the st10 per-micro-batch loop body (with `classify`, the st12
+    * one) and the d13 twin of [[probeAbsorbMinhashBatch]] (see there for
+    * the materialize-before-absorb ordering, the threaded meta and the
+    * spool).
     * `cents` is a driver-side snapshot of the FROZEN centroid table, so
-    * each cycle's assignment broadcast builds without a Spark job. The
-    * batch is the arrival file, which re-evaluates for free, so the
-    * (id, v) projection needs no checkpoint of its own.
+    * no cycle re-reads it from disk; broadcasting it still runs one small
+    * build job per cycle (see [[batchAssignLocal]]), as does the probe's
+    * broadcast of the collected assignment. The batch is the arrival
+    * file, which re-evaluates for free, so the (id, v) projection needs
+    * no checkpoint of its own.
     */
   private[graft] def probeAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
                                               idCol: String, vecCol: String,
                                               tableBase: String, threshold: Double,
-                                              pairsDir: String, meta: SemanticMeta,
-                                              cents: DataFrame): SemanticMeta = {
+                                              spoolDir: String, meta: SemanticMeta,
+                                              cents: DataFrame,
+                                              classify: Boolean = false): SemanticMeta = {
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val (bAssign, bCids) = batchAssignLocal(spark, bBase, cents)
-    // no repartition(1): see probeAbsorbMinhashBatch
-    withDesc(spark, "cycle: probe+spool") {
-      probeSemanticCore(spark, bBase, bAssign, bCids, tableBase, meta.nBuckets,
-          threshold, broadcastBatch = true)
-        .write.mode(SaveMode.Append).parquet(pairsDir)
-    }
+    val (bAssign, bCids) = batchAssignLocal(bBase, cents)
+    spoolCycle(spark,
+      probeSemanticCore(spark, bBase, bAssign, bCids, tableBase, meta.nBuckets, threshold),
+      bBase.select(col("id").as("vec_id")), classify, spoolDir)
     absorbSemanticCore(spark, bBase, bAssign, tableBase, meta)
   }
 
   /** The per-micro-batch (id → cell) assignment as a driver-side
     * LocalRelation plus its distinct cell ids: batch-sized by the ingest
     * contract (the probe broadcasts it whole regardless), so ONE collect
-    * feeds the probe's broadcast (job-free build from local rows), the
-    * absorb's assign append, and the cid prune — replacing a
-    * localCheckpoint job + a distinct-cid collect (with its exchange)
-    * per micro-batch. Values roundtrip bit-exactly (two long columns).
+    * feeds the probe's broadcast, the absorb's assign append, and the
+    * cid prune — replacing a localCheckpoint job + a distinct-cid collect
+    * (with its exchange) per micro-batch. Values roundtrip bit-exactly
+    * (two long columns). A LocalRelation broadcast still builds in a
+    * Spark job of its own (BroadcastExchangeExec collects its child
+    * through executeCollectIterator, which LocalTableScanExec does not
+    * short-cut): "cycle: batch assign" is 3 jobs per cycle (the `cents`
+    * broadcast, the per-id argmax shuffle, the collect; JobProf st10 at
+    * sf0.01: 9 over 3 micro-batches), and the probe's broadcast of this
+    * assignment is 1 more job under "cycle: probe+spool".
     */
-  private def batchAssignLocal(spark: SparkSession, bBase: DataFrame,
+  private def batchAssignLocal(bBase: DataFrame,
                                cents: DataFrame): (DataFrame, Array[Long]) = {
-    val plan = assignCells(bBase, cents)
-    val rows = withDesc(spark, "cycle: batch assign") { plan.collect() }
-    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema),
-      rows.map(_.getLong(1)).distinct)
-  }
-
-  /** One full semantic ingest-classification cycle — assign once,
-    * probe, fold into the [[incrementalSemanticSurvivors]] keep/drop
-    * decision, spool the per-vector verdicts, absorb — the st12
-    * per-micro-batch loop body (st12 : st10 :: st11 : st9; see
-    * [[classifyAbsorbMinhashBatch]] for the arrival-ordered earlier
-    * rule and the materialize-before-absorb contract; see
-    * [[probeAbsorbSemanticBatch]] for `meta` and `cents`).
-    */
-  private[graft] def classifyAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
-                                                 idCol: String, vecCol: String,
-                                                 tableBase: String, threshold: Double,
-                                                 classDir: String, meta: SemanticMeta,
-                                                 cents: DataFrame): SemanticMeta = {
-    val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val (bAssign, bCids) = batchAssignLocal(spark, bBase, cents)
-    val pairs = probeSemanticCore(spark, bBase, bAssign, bCids, tableBase,
-      meta.nBuckets, threshold, broadcastBatch = true)
-    // no repartition(1): see probeAbsorbMinhashBatch
-    withDesc(spark, "cycle: verdict spool") {
-      earliestNeighborFold(bBase.select(col("id").as("vec_id")), pairs, "vec_id")
-        .write.mode(SaveMode.Append).parquet(classDir)
-    }
-    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta)
-  }
-
-  /** Compact a landed [[landSemanticIndex]] back to one file per bucket
-    * — the d13 twin of [[compactMinhashIndex]], retiring the same
-    * small-file debt [[absorbSemanticBatch]] accumulates (one file per
-    * touched bucket per batch, on both `_assign` and `_vecs`). Shares
-    * [[compactBucketedTable]]: path read so the repartition Exchange
-    * survives the bucket-spec elision, versioned sibling directory,
-    * rename-aside swap. Centroids and meta are untouched — compaction
-    * never re-quantizes (that is an explicit re-land). Probe results
-    * are bit-identical before and after (spec-pinned); the
-    * `d13.compact` Metrics entry reports files before/after per table.
-    */
-  def compactSemanticIndex(spark: SparkSession, tableBase: String): Unit = {
-    val nBuckets = spark.table(s"${tableBase}_meta").head().getInt(1)
-    val counts = Seq(("assign", "cid"), ("vecs", "id")).flatMap { case (sfx, bcol) =>
-      val (before, after) =
-        compactBucketedTable(spark, s"${tableBase}_$sfx", bcol, nBuckets)
-      Seq(s"${sfx}_files_before" -> before, s"${sfx}_files_after" -> after)
-    }
-    graft.Metrics.set("d13.compact", counts: _*)
+    val (assign, rows) = Similarity.collectLocal(assignCells(bBase, cents),
+      "cycle: batch assign")
+    (assign, rows.map(_.getLong(1)).distinct)
   }
 
   /** Land the d1 exact-dedup state — (content_sha, keep_id, n_copies),

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.functions.HashExpressions
 
@@ -513,42 +514,50 @@ object Similarity {
   // over corpus ∪ absorbed (the a10 DuckDB oracle), independent of how
   // arrivals were chunked (spec-pinned).
 
-  /** The cacheable slice of a landed IVF-PQ index's `_meta` row plus the
-    * meta table's resolved location — `n_docs` is the only moving field
-    * (advances on each absorb); everything else is frozen at land time.
+  /** A landed IVF-PQ index's `_meta` row — `n_docs` is the only moving
+    * field (advances on each absorb); everything else is frozen at land
+    * time.
     */
   private[graft] final case class IvfPqMeta(nDocs: Long, nCents: Int, m: Int,
-                                            kCodes: Int, nBuckets: Int,
-                                            metaPath: String)
+                                            kCodes: Int, nBuckets: Int)
 
-  private def writeIvfPqMeta(spark: SparkSession, tableBase: String,
-                             metaPath: String, nDocs: Long, nCents: Int,
-                             m: Int, kCodes: Int, nBuckets: Int): Unit =
-    spark.createDataFrame(Seq((nDocs, nCents, m, kCodes, nBuckets)))
-      .toDF("n_docs", "n_cents", "m", "k_codes", "n_buckets")
-      .write.mode(SaveMode.Overwrite).option("path", metaPath)
-      .saveAsTable(s"${tableBase}_meta")
-
-  private[graft] def readIvfPqMeta(spark: SparkSession,
-                                   tableBase: String): IvfPqMeta = {
-    val r = spark.table(s"${tableBase}_meta").head()
-    IvfPqMeta(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4),
-      Dedup.tableLocation(spark, s"${tableBase}_meta"))
-  }
+  /** The a10 IVF-PQ index: frozen `_cents` and `_cb`, then `_codes` and
+    * `_vecs` (the guard key).
+    */
+  private[graft] val IvfPqIndex = LandedIndex[IvfPqMeta]("a10",
+    Seq(IndexTable("codes", "cid"), IndexTable("vecs", "id")), frozen = Seq("cents", "cb"),
+    Some(MetaCodec(
+      Seq("n_docs" -> LongType, "n_cents" -> IntegerType, "m" -> IntegerType,
+        "k_codes" -> IntegerType, "n_buckets" -> IntegerType),
+      m => Seq[Any](m.nDocs, m.nCents, m.m, m.kCodes, m.nBuckets),
+      (r, _, _) => IvfPqMeta(r.getAs[Long]("n_docs"), r.getAs[Int]("n_cents"),
+        r.getAs[Int]("m"), r.getAs[Int]("k_codes"), r.getAs[Int]("n_buckets")))))
 
   /** A (small, frozen) catalog table materialized as a driver-side
-    * LocalRelation: broadcasts of it build from the in-memory rows
-    * WITHOUT a Spark job, so a per-micro-batch loop that joins the same
-    * frozen quantizer every cycle stops paying one broadcast-build job
-    * per batch per join. Only for dim-scale tables the contract already
-    * broadcasts whole (the landed `_cents`/`_cb` quantizers — frozen at
-    * land time, so a one-time snapshot is exact for the index's
-    * lifetime). Values roundtrip bit-exactly (no arithmetic).
+    * LocalRelation, so a per-micro-batch loop that joins the same frozen
+    * quantizer every cycle reads it from disk once, not once per batch.
+    * Broadcasting the snapshot still runs one 1-stage Spark job per
+    * broadcast: BroadcastExchangeExec collects its child through
+    * executeCollectIterator, which LocalTableScanExec does not short-cut
+    * (st14: 4 such jobs per micro-batch, the `cents` and `cb` snapshots
+    * each broadcast once by the probe and once by the encode). Only for
+    * dim-scale tables the contract already broadcasts whole (the landed
+    * `_cents`/`_cb` quantizers — frozen at land time, so a one-time
+    * snapshot is exact for the index's lifetime). Values roundtrip
+    * bit-exactly (no arithmetic).
     */
-  private[graft] def localTable(spark: SparkSession, table: String): DataFrame = {
-    val t = spark.table(table)
-    spark.createDataFrame(
-      java.util.Arrays.asList(t.collect(): _*), t.schema)
+  private[graft] def localTable(spark: SparkSession, table: String): DataFrame =
+    collectLocal(spark.table(table), s"snapshot $table")._1
+
+  /** Collect `plan` (its jobs labelled `desc`) and re-wrap the rows as a
+    * driver-side LocalRelation, for a broadcast-sized result that both
+    * feeds a driver-side decision and joins again. Returns the relation
+    * and the rows.
+    */
+  private[graft] def collectLocal(plan: DataFrame, desc: String): (DataFrame, Array[Row]) = {
+    val spark = plan.sparkSession
+    val rows = Dedup.withDesc(spark, desc)(plan.collect())
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema), rows)
   }
 
   /** Cell assignment + PQ encode of `(id, v)` rows against a LANDED
@@ -639,8 +648,7 @@ object Similarity {
     val spark = embs.sparkSession
     val base = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
     val obs = org.apache.spark.sql.Observation()
-    graft.sources.Sinks.bucketed(base.observe(obs, count(lit(1)).as("n")),
-      s"${tableBase}_vecs", "id", nBuckets, path = Some(s"$dir/vecs"))
+    IvfPqIndex.land(tableBase, dir, "vecs", nBuckets)(base.observe(obs, count(lit(1)).as("n")))
     val nDocs = Dedup.observedCount(obs, "n")(base.count())
     val nCentroids = centroidsFor(nDocs)
     // one corpus sample pass serves both quantizer tables (bit-identical
@@ -655,15 +663,14 @@ object Similarity {
     cb
       .write.mode(SaveMode.Overwrite).option("path", s"$dir/cb")
       .saveAsTable(s"${tableBase}_cb")
-    graft.sources.Sinks.bucketed(
-      encodeWithCells(spark.table(s"${tableBase}_cents"),
-        spark.table(s"${tableBase}_cb"), base, m),
-      s"${tableBase}_codes", "cid", nBuckets, path = Some(s"$dir/codes"))
-    writeIvfPqMeta(spark, tableBase, s"$dir/meta", nDocs, nCentroids, m,
-      kCodes, nBuckets)
-    // the land KNOWS the meta it just wrote (saves the st14 loop the
-    // per-drain readIvfPqMeta head() job + catalog query)
-    IvfPqMeta(nDocs, nCentroids, m, kCodes, nBuckets, s"$dir/meta")
+    IvfPqIndex.land(tableBase, dir, "codes", nBuckets)(
+      encodeWithCells(spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"),
+        base, m))
+    // the land KNOWS the meta it writes (saves the st14 loop the
+    // per-drain meta head() job)
+    val meta = IvfPqMeta(nDocs, nCentroids, m, kCodes, nBuckets)
+    IvfPqIndex.writeMeta(spark, tableBase, meta, s"$dir/meta")
+    meta
   }
 
   /** ADC top-k of `queries` against a landed [[landIvfPqIndex]] — the
@@ -692,49 +699,40 @@ object Similarity {
     * a10 DuckDB oracle).
     */
   def ivfPqProbe(spark: SparkSession, queries: DataFrame, idCol: String,
-                 vecCol: String, tableBase: String, k: Int, nProbe: Int,
-                 cachedMeta: Option[IvfPqMeta] = None,
-                 cachedQuantizers: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
-    // cachedQuantizers: a per-micro-batch loop threads one localTable
-    // snapshot of the FROZEN (cents, cb) tables so each cycle's
-    // broadcasts build without a Spark job — exact by the frozen-at-land
-    // contract (same rationale as cachedMeta)
-    val cents = cachedQuantizers.map(_._1)
-      .getOrElse(spark.table(s"${tableBase}_cents"))
-    val cb = broadcast(cachedQuantizers.map(_._2)
-      .getOrElse(spark.table(s"${tableBase}_cb")))
+                 vecCol: String, tableBase: String, k: Int, nProbe: Int): DataFrame =
+    ivfPqProbeCore(spark, queries, idCol, vecCol, tableBase, k, nProbe,
+      IvfPqIndex.readMeta(spark, tableBase), spark.table(s"${tableBase}_cents"),
+      spark.table(s"${tableBase}_cb"))
+
+  /** [[ivfPqProbe]] with the index's meta and its FROZEN `cents`/`cb`
+    * quantizers supplied by the caller: the st14 cycle threads its meta
+    * and one [[localTable]] snapshot of each, exact by the frozen-at-land
+    * contract.
+    */
+  private def ivfPqProbeCore(spark: SparkSession, queries: DataFrame, idCol: String,
+                             vecCol: String, tableBase: String, k: Int, nProbe: Int,
+                             meta: IvfPqMeta, cents: DataFrame,
+                             cb0: DataFrame): DataFrame = {
+    val cb = broadcast(cb0)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // LOCAL RELATION, not localCheckpoint: probes is (queries·nProbe)
     // two-long-column rows — broadcast-sized by construction (the
     // scoring join ships it whole regardless) — so ONE collect feeds
     // (a) the distinct-cid prune driver-side with zero further jobs
     // (the old distinct+limit+collect paid an exchange and its AQE
-    // stage job per probe) and (b) the scoring join's broadcast, which
-    // builds from a LocalTableScan WITHOUT a Spark job.
-    val probesPlan = ivfAssign(cents, q, "query_id", "qv", nProbe)
-      .select("query_id", "cid")
-    val probeRows = Dedup.withDesc(spark, "a10: query probes") {
-      probesPlan.collect()
-    }
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
+    // stage job per probe) and (b) the scoring join's broadcast. That
+    // broadcast still builds in a 1-stage job of its own (a
+    // LocalTableScan child is collected like any other; see localTable).
+    val (probes, probeRows) = collectLocal(
+      ivfAssign(cents, q, "query_id", "qv", nProbe).select("query_id", "cid"),
+      "a10: query probes")
     val adc = subVectors(q, "query_id", "qv", meta.m, "query_id")
       .join(cb, Seq("sub"))
       .select(col("query_id"), col("sub").cast("long").as("sub"), col("code"),
         floor(sqL2(col("vs"), col("cs")) * lit(1000000.0) + lit(0.5))
           .cast("long").as("dfp"))
-    val idx = spark.table(s"${tableBase}_codes")
-    // the d11/d13 bucket prune with the same break-even cap: the InSet
-    // is a file-skip device, never a correctness ingredient
-    val cap = Dedup.pruneKeyCap(meta.nBuckets)
-    val idxPruned = {
-      val cids = probeRows.map(_.getLong(1)).distinct
-      graft.Metrics.set("a10", "probe_cids" -> cids.length.toLong,
-        "prune_cap" -> cap.toLong, "bucket_pruned" -> (cids.length <= cap))
-      if (cids.length > cap) idx
-      else idx.filter(col("cid").isInCollection(cids.toSeq))
-    }
+    val idxPruned = Dedup.bucketPruned(spark.table(s"${tableBase}_codes"), "cid",
+      probeRows.map(_.getLong(1)).distinct, meta.nBuckets, "a10", "probe_cids")
     // a landed vector lives in exactly one cell (keep = 1 at encode), so
     // a candidate (query, neighbor) pair arises from at most one probed
     // cell and needs no dedup before the sum
@@ -768,29 +766,20 @@ object Similarity {
     */
   def ivfPqProbeRefine(spark: SparkSession, queries: DataFrame, idCol: String,
                        vecCol: String, tableBase: String, k: Int, nProbe: Int,
-                       refine: Int = 4,
-                       cachedMeta: Option[IvfPqMeta] = None): DataFrame = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
+                       refine: Int = 4): DataFrame = {
+    val meta = IvfPqIndex.readMeta(spark, tableBase)
     // LOCAL RELATION, not localCheckpoint (the ivfPqProbe probes
     // rationale): the pool is (queries·refine·k) two-long-column rows —
     // broadcast-sized by construction — so one collect feeds the
     // distinct-id prune driver-side (no distinct+limit jobs) and the
-    // re-rank join's broadcast builds job-free from the local rows
-    val poolPlan = ivfPqProbe(spark, queries, idCol, vecCol, tableBase,
-        k * refine, nProbe, cachedMeta = Some(meta))
+    // re-rank join's broadcast
+    val poolPlan = ivfPqProbeCore(spark, queries, idCol, vecCol, tableBase,
+        k * refine, nProbe, meta, spark.table(s"${tableBase}_cents"),
+        spark.table(s"${tableBase}_cb"))
       .select("query_id", "neighbor_id")
-    val poolRows = Dedup.withDesc(spark, "a13: adc pool") {
-      poolPlan.collect()
-    }
-    val pool = spark.createDataFrame(
-      java.util.Arrays.asList(poolRows: _*), poolPlan.schema)
-    val vecs = spark.table(s"${tableBase}_vecs")
-    val cap = Dedup.pruneKeyCap(meta.nBuckets)
-    val pids = poolRows.map(_.getLong(1)).distinct
-    graft.Metrics.set("a13", "pool_ids" -> pids.length.toLong,
-      "prune_cap" -> cap.toLong, "bucket_pruned" -> (pids.length <= cap))
-    val vecsPruned = if (pids.length > cap) vecs
-      else vecs.filter(col("id").isInCollection(pids.toSeq))
+    val (pool, poolRows) = collectLocal(poolPlan, "a13: adc pool")
+    val vecsPruned = Dedup.bucketPruned(spark.table(s"${tableBase}_vecs"), "id",
+      poolRows.map(_.getLong(1)).distinct, meta.nBuckets, "a13", "pool_ids")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val scored = vecsPruned.select(col("id").as("neighbor_id"), col("v").as("cv"))
       .join(broadcast(pool.join(q, Seq("query_id"))), Seq("neighbor_id"))
@@ -802,7 +791,7 @@ object Similarity {
     * assign + encode against the FROZEN centroids/codebook (one
     * batch-sized pass each), append the `(id, sub, code, cid)` rows
     * through the bucketed writer (one new file per touched cell bucket
-    * per batch — [[compactIvfPqIndex]] retires the debt), advance meta
+    * per batch — [[LandedIndex.compact]] retires the debt), advance meta
     * `n_docs`, refresh the table cache (the absorbMinhashBatch
     * visibility lesson). A landed vector is never re-encoded — the
     * continuous-ingest contract shared with d11/d13.
@@ -828,14 +817,14 @@ object Similarity {
     */
   def absorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
                        idCol: String, vecCol: String, tableBase: String): IvfPqMeta = {
-    val meta = readIvfPqMeta(spark, tableBase)
+    val meta = IvfPqIndex.readMeta(spark, tableBase)
     val base = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint() // the guard reads it twice
     val fresh = Dedup.prunedIdGuard(spark, base, s"${tableBase}_vecs",
       meta.nBuckets, "a10.guard").localCheckpoint()
     val advanced = absorbIvfPqCore(spark, fresh, tableBase, meta,
       spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"))
-    persistIvfPqMeta(spark, tableBase, advanced)
+    IvfPqIndex.persist(spark, tableBase, advanced)
     advanced
   }
 
@@ -861,32 +850,17 @@ object Similarity {
     //    a 2-stage job (shuffle + collect), ~0.1 s;
     //  - the bucketed append itself: 3 stages (pqEncode's aggregate
     //    shuffle, the bucket repartition, the write), ~0.35 s.
-    Dedup.withDesc(spark, "cycle: absorb codes") {
-      Dedup.withAqeOff(encodeWithCellsBatch(cents, cb, fresh, meta.m))(
-        graft.sources.Sinks.bucketed(_, s"${tableBase}_codes", "cid",
-          meta.nBuckets, mode = SaveMode.Append))
-    }
-    // batch count rides the append (no separate count() job per absorb);
-    // join-free append: one job under AQE-off (Dedup.absorbMinhashCore)
+    IvfPqIndex.append(spark, tableBase, "codes", meta.nBuckets)(
+      encodeWithCellsBatch(cents, cb, fresh, meta.m))
+    // batch count rides the append (no separate count() job per absorb)
     val obs = org.apache.spark.sql.Observation()
-    Dedup.withDesc(spark, "cycle: absorb vecs") {
-      Dedup.withAqeOff(fresh.observe(obs, count(lit(1)).as("n")))(
-        graft.sources.Sinks.bucketed(_, s"${tableBase}_vecs", "id",
-          meta.nBuckets, mode = SaveMode.Append))
-    }
+    IvfPqIndex.append(spark, tableBase, "vecs", meta.nBuckets)(
+      fresh.observe(obs, count(lit(1)).as("n")))
     val advanced =
       meta.copy(nDocs = meta.nDocs + Dedup.observedCount(obs, "n")(fresh.count()))
     Dedup.staleAdvisory("a10", advanced.nDocs, meta.nCents)
-    spark.catalog.refreshTable(s"${tableBase}_codes")
-    spark.catalog.refreshTable(s"${tableBase}_vecs")
     advanced
   }
-
-  /** Write `meta` as the index's `_meta` row. */
-  private[graft] def persistIvfPqMeta(spark: SparkSession, tableBase: String,
-                                      meta: IvfPqMeta): Unit =
-    writeIvfPqMeta(spark, tableBase, meta.metaPath, meta.nDocs,
-      meta.nCents, meta.m, meta.kCodes, meta.nBuckets)
 
   /** One full vector-ingest cycle — probe, spool the top-k verdicts,
     * absorb — the st14 per-micro-batch loop body and the a10 twin of
@@ -914,34 +888,14 @@ object Similarity {
     // and AQE coalescing collapses its batch-sized output — the explicit
     // single-file exchange was one more AQE stage job per micro-batch
     Dedup.withDesc(spark, "cycle: verdict spool") {
-      ivfPqProbe(spark, newEmbs, idCol, vecCol, tableBase, k, nProbe,
-          cachedMeta = Some(meta), cachedQuantizers = Some(quantizers))
+      ivfPqProbeCore(spark, newEmbs, idCol, vecCol, tableBase, k, nProbe, meta,
+          quantizers._1, quantizers._2)
         .select(col("query_id").as("vec_id"), col("neighbor_id"),
           col("adc_fp"), col("rank"))
         .write.mode(SaveMode.Append).parquet(verdictsDir)
     }
     absorbIvfPqCore(spark, newEmbs.select(col(idCol).as("id"), col(vecCol).as("v")),
       tableBase, meta, quantizers._1, quantizers._2)
-  }
-
-  /** Compact a landed [[landIvfPqIndex]]'s code table back to one file
-    * per bucket — the a10 twin of [[Dedup.compactMinhashIndex]], via the
-    * shared rewrite (path read so the repartition Exchange survives the
-    * bucket-spec elision, versioned sibling dir, rename-aside swap).
-    * Centroids, codebook and meta are untouched — compaction never
-    * re-quantizes. Probe results are bit-identical before and after
-    * (spec-pinned); Metrics `a10.compact` reports files before/after.
-    */
-  def compactIvfPqIndex(spark: SparkSession, tableBase: String): Unit = {
-    val meta = readIvfPqMeta(spark, tableBase)
-    val (before, after) = Dedup.compactBucketedTable(spark,
-      s"${tableBase}_codes", "cid", meta.nBuckets)
-    // the _vecs side table takes the same one-new-file-per-absorb debt
-    val (vBefore, vAfter) = Dedup.compactBucketedTable(spark,
-      s"${tableBase}_vecs", "id", meta.nBuckets)
-    graft.Metrics.set("a10.compact",
-      "codes_files_before" -> before, "codes_files_after" -> after,
-      "vecs_files_before" -> vBefore, "vecs_files_after" -> vAfter)
   }
 
   /** Scalar-quantization ADC top-k — the int8 analog of [[pqAdcTopK]]

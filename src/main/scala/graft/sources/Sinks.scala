@@ -235,7 +235,7 @@ object Sinks {
     * on the key (e.g. out of a groupBy on the same column — Catalyst
     * elides the redundant exchange). Callers feeding this writer FROM a
     * read of the same bucketed table must read by PATH (see
-    * Dedup.compactBucketedTable): a catalog-table read's bucket spec
+    * LandedIndex.compactBucketedTable): a catalog-table read's bucket spec
     * elides the repartition and then disables the bucketed scan,
     * silently destroying the one-file-per-bucket layout.
     *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, LandedIndex, Similarity}
 
 /** Streaming ingest over the `documents` and `embeddings` tables
   * (SURVEY.md §2.4 st9–st14): each `stream*` lands its index, then runs
@@ -43,33 +43,9 @@ object DocStreams {
     def spool: String = s"$root/$spoolName"
   }
 
-  /** How [[drain]] handles one landed-index family: the suffix of the
-    * guard-key table, the bucket count the guard prunes with,
-    * compaction, the `_meta` write, and the catalog tables dropped
-    * once the spool holds the result.
-    */
-  private[graft] final case class IndexOps[M](guard: String, tables: Seq[String],
-                                              nBuckets: M => Int,
-                                              compact: (SparkSession, String) => Unit,
-                                              persist: (SparkSession, String, M) => Unit)
-
-  private[graft] val MinhashIndex = IndexOps[Dedup.MinhashMeta]("sigs",
-    Seq("sigs", "bands", "meta"), _.nBuckets, Dedup.compactMinhashIndex,
-    Dedup.persistMinhashMeta)
-
-  private val SemanticIndex = IndexOps[Dedup.SemanticMeta]("vecs",
-    Seq("cents", "assign", "vecs", "meta"), _.nBuckets, Dedup.compactSemanticIndex,
-    Dedup.persistSemanticMeta)
-
-  private val IvfPqIndex = IndexOps[Similarity.IvfPqMeta]("vecs",
-    Seq("cents", "cb", "codes", "vecs", "meta"), _.nBuckets,
-    Similarity.compactIvfPqIndex, Similarity.persistIvfPqMeta)
-
-  // segdf has no meta table; one bucket count keeps land, guard, absorb
-  // and compaction from drifting apart
+  // the st13 land and absorb share one bucket count (segdf keeps no
+  // meta row to carry it)
   private val SegDfBuckets = 8
-  private val SegDfIndex = IndexOps[Unit]("docs", Seq("segdf", "docs"),
-    _ => SegDfBuckets, Dedup.compactSegDfIndex(_, _, SegDfBuckets), (_, _, _) => ())
 
   /** The ingest drain behind st9–st14: the reference's skip-what-the-
     * cache-holds batch polling (deep-field pages.py:92-116) as a STREAM
@@ -82,7 +58,8 @@ object DocStreams {
     * a real deployment tails). Each micro-batch, inside `foreachBatch`:
     *
     *  1. [[Dedup.guardedBatch]] drops every id already in the index's
-    *     guard table — the redelivery guard: `foreachBatch` is
+    *     guard table (pruned with that table's catalog bucket count) —
+    *     the redelivery guard: `foreachBatch` is
     *     at-least-once, and a replayed batch re-absorbs nothing
     *     (keys, not transactions). An empty result skips the cycle.
     *  2. `cycle(fresh, batchId, meta)` probes or classifies the batch
@@ -112,7 +89,7 @@ object DocStreams {
     * spool outlives them) and returns the distinct spool rows read with
     * `schema`.
     */
-  private[graft] def drain[M](spark: SparkSession, run: Run, index: IndexOps[M],
+  private[graft] def drain[M](spark: SparkSession, run: Run, index: LandedIndex[M],
                               landed: M, input: DataFrame, idCol: String,
                               dir: String, autoCompactEvery: Int,
                               schema: StructType)
@@ -121,7 +98,7 @@ object DocStreams {
     val stream = spark.readStream.schema(input.schema)
       .option("maxFilesPerTrigger", "1").parquet(arriveDir)
     val guard = s"${run.tableBase}_${index.guard}"
-    val nBuckets = index.nBuckets(landed)
+    val nBuckets = LandedIndex.numBuckets(spark, guard)
     var meta = landed
     var cycles, fired = 0
     try EventStreams.withDrainConf(spark) {
@@ -140,7 +117,7 @@ object DocStreams {
         .start()
     } finally if (meta != landed) index.persist(spark, run.tableBase, meta)
     graft.Metrics.set(s"${run.family}.autocompact", "fired" -> fired.toLong)
-    index.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${run.tableBase}_$t"))
+    index.catalogTables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${run.tableBase}_$t"))
     spark.read.schema(schema).parquet(run.spool).distinct()
   }
 
@@ -172,7 +149,7 @@ object DocStreams {
     val docs = documents(spark, dir)
     val landed = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
       "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
-    drain(spark, run, MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
+    drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
         pairSchema) { (fresh, _, meta) =>
       Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
         threshold = 0.5, run.spool, meta)
@@ -204,7 +181,7 @@ object DocStreams {
     val landed = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
       "vec_id", "embedding", run.tableBase, run.idx)
     val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
-    drain(spark, run, SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
+    drain(spark, run, Dedup.SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
         cosPairSchema) { (fresh, _, meta) =>
       Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
         run.tableBase, threshold, run.spool, meta, cents)
@@ -262,7 +239,7 @@ object DocStreams {
 
   /** st11: streaming ingest keep/drop classification — the continuous
     * twin of the d14 [[Dedup.incrementalSurvivors]] decision over the st9
-    * index. Per batch, [[Dedup.classifyAbsorbMinhashBatch]] probes, folds
+    * index. Per batch, [[Dedup.probeAbsorbMinhashBatch]] probes, folds
     * the pairs into per-doc verdicts — dup iff the doc near-dups
     * anything ALREADY IN THE INDEX (corpus or an earlier arrival) or a
     * smaller-id batch mate, `dup_of` = the minimum such neighbor —
@@ -279,10 +256,10 @@ object DocStreams {
     val docs = documents(spark, dir)
     val landed = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
       "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
-    drain(spark, run, MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
+    drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
         classSchema("doc_id")) { (fresh, _, meta) =>
-      Dedup.classifyAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
-        threshold = 0.5, run.spool, meta)
+      Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
+        threshold = 0.5, run.spool, meta, classify = true)
     }
   }
 
@@ -304,7 +281,7 @@ object DocStreams {
     * option for a stream (emitted text cannot be retro-edited).
     * Drained stream ≡ one arrival-ordered fold over the full segment
     * algebra — the DuckDB oracle. Auto-compaction is safe mid-stream
-    * despite [[Dedup.compactSegDfIndex]]'s at-rest contract, for the
+    * despite [[Dedup.SegDfIndex]]'s at-rest compaction contract, for the
     * reason [[drain]] gives.
     */
   def streamLineDedup(spark: SparkSession, dir: String,
@@ -315,7 +292,7 @@ object DocStreams {
     val docs = documents(spark, dir)
     Dedup.landSegDfIndex(spark, docs.filter(col("doc_id") % 5 < 3),
       "doc_id", "text", window, run.tableBase, run.idx, nBuckets = SegDfBuckets)
-    drain(spark, run, SegDfIndex, (), docs, "doc_id", dir, autoCompactEvery,
+    drain(spark, run, Dedup.SegDfIndex, (), docs, "doc_id", dir, autoCompactEvery,
         cleanSchema) { (fresh, batchId, _) =>
       Dedup.classifyAbsorbSegBatch(spark, fresh, "doc_id", "text", run.tableBase,
         batchId, window, minDf, run.spool, nBuckets = SegDfBuckets)
@@ -339,10 +316,10 @@ object DocStreams {
     val landed = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
       "vec_id", "embedding", run.tableBase, run.idx)
     val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
-    drain(spark, run, SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
+    drain(spark, run, Dedup.SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
         classSchema("vec_id")) { (fresh, _, meta) =>
-      Dedup.classifyAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
-        run.tableBase, threshold, run.spool, meta, cents)
+      Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
+        run.tableBase, threshold, run.spool, meta, cents, classify = true)
     }
   }
 
@@ -378,7 +355,7 @@ object DocStreams {
       run.idx)
     val quantizers = (Similarity.localTable(spark, s"${run.tableBase}_cents"),
       Similarity.localTable(spark, s"${run.tableBase}_cb"))
-    drain(spark, run, IvfPqIndex, landed, embs, "vec_id", dir, autoCompactEvery,
+    drain(spark, run, Similarity.IvfPqIndex, landed, embs, "vec_id", dir, autoCompactEvery,
         verdictSchema) { (fresh, _, meta) =>
       Similarity.probeAbsorbIvfPqBatch(spark, fresh, "vec_id", "embedding",
         run.tableBase, k, nProbe, run.spool, meta, quantizers)

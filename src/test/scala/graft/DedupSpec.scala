@@ -490,7 +490,7 @@ class DedupSpec extends SparkSpec {
         "graft_d11_cmp", threshold = 0.3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val preMeta = spark.table("graft_d11_cmp_meta").head()
-      Dedup.compactMinhashIndex(spark, "graft_d11_cmp")
+      Dedup.MinhashIndex.compact(spark, "graft_d11_cmp")
       val m = graft.Metrics.get("d11.compact")
         .getOrElse(fail("compaction left no d11.compact Metrics entry"))
       // two appends on top of the land => strictly more files than
@@ -540,12 +540,12 @@ class DedupSpec extends SparkSpec {
     def run(tb: String, compactBefore: Int): Seq[Set[(Long, String, Long)]] = {
       val dir = graft.sources.Spool.tempRoot(tb)
       try {
-        Dedup.landSegDfIndex(spark, a, "doc_id", "text", 10, tb, dir)
+        Dedup.landSegDfIndex(spark, a, "doc_id", "text", 10, tb, dir, nBuckets = 8)
         chunks.zipWithIndex.map { case (ch, i) =>
-          if (i == compactBefore) Dedup.compactSegDfIndex(spark, tb)
+          if (i == compactBefore) Dedup.SegDfIndex.compact(spark, tb)
           val out = s"$dir/out$i"
           Dedup.classifyAbsorbSegBatch(spark, ch, "doc_id", "text", tb,
-            i.toLong, window = 10, minDf = 2, out)
+            i.toLong, window = 10, minDf = 2, out, nBuckets = 8)
           spark.read.parquet(out).collect()
             .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
         }
@@ -585,12 +585,12 @@ class DedupSpec extends SparkSpec {
       Dedup.landMinhashIndex(a, "doc_id", "text", n = 3, k = 64,
         bands = 16, "graft_d11_rcmp", dir, nBuckets = 8)
       Dedup.absorbMinhashBatch(spark, b, "doc_id", "text", "graft_d11_rcmp")
-      Dedup.compactMinhashIndex(spark, "graft_d11_rcmp")
+      Dedup.MinhashIndex.compact(spark, "graft_d11_rcmp")
       Dedup.absorbMinhashBatch(spark, c, "doc_id", "text", "graft_d11_rcmp")
       val pre = Dedup.incrementalMinhashPairs(spark, d, "doc_id", "text",
         "graft_d11_rcmp", threshold = 0.3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      Dedup.compactMinhashIndex(spark, "graft_d11_rcmp")
+      Dedup.MinhashIndex.compact(spark, "graft_d11_rcmp")
       val m = graft.Metrics.get("d11.compact")
         .getOrElse(fail("second compaction left no d11.compact Metrics entry"))
       assert(m("bands_files_after").asInstanceOf[Long] <= 8, s"second compaction left small files: $m")
@@ -967,7 +967,7 @@ class DedupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val preMeta = spark.table("graft_d13_cmp_meta").head()
       val preCents = spark.table("graft_d13_cmp_cents").collect().toSet
-      Dedup.compactSemanticIndex(spark, "graft_d13_cmp")
+      Dedup.SemanticIndex.compact(spark, "graft_d13_cmp")
       val m = graft.Metrics.get("d13.compact")
         .getOrElse(fail("compaction left no d13.compact Metrics entry"))
       assert(m("assign_files_before").asInstanceOf[Long] > 8,

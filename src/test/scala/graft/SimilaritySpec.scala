@@ -457,15 +457,15 @@ class SimilaritySpec extends SparkSpec {
     val probeTwo = rows(Similarity.ivfPqProbe(spark, q, "vec_id", "embedding",
       "a10_spec_two", k = 5, nProbe = 4))
     assert(probeOne == probeTwo)
-    assert(Similarity.readIvfPqMeta(spark, "a10_spec_one").nDocs ==
-      Similarity.readIvfPqMeta(spark, "a10_spec_two").nDocs)
+    assert(Similarity.IvfPqIndex.readMeta(spark, "a10_spec_one").nDocs ==
+      Similarity.IvfPqIndex.readMeta(spark, "a10_spec_two").nDocs)
 
     // 3. compaction retires the absorb small files (back to ≤ 1 file per
     //    bucket) with bit-identical probe results — codes AND the _vecs
     //    side table (which takes the same one-file-per-absorb debt)
     val refineBefore = rows(Similarity.ivfPqProbeRefine(spark, q, "vec_id",
       "embedding", "a10_spec_two", k = 5, nProbe = 4, refine = 4))
-    Similarity.compactIvfPqIndex(spark, "a10_spec_two")
+    Similarity.IvfPqIndex.compact(spark, "a10_spec_two")
     val before = Metrics.scalar("a10.compact", "codes_files_before").get
     val after = Metrics.scalar("a10.compact", "codes_files_after").get
     assert(before > after, s"compaction must shrink files: $before -> $after")

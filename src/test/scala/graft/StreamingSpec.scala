@@ -577,7 +577,7 @@ class StreamingSpec extends SparkSpec {
     assert(got9 == want9,
       s"only-auto=${(got9 -- want9).take(3)} only-batch=${(want9 -- got9).take(3)}")
     // st13: same cadence over the delta-df index — the auto-fired
-    // compactSegDfIndex collapses delta history mid-stream and the
+    // SegDfIndex compaction collapses delta history mid-stream and the
     // drained verdicts equal a plain (never-compacted) drain
     val root13 = graft.sources.Spool.tempRoot("st13_auto")
     val got13 = graft.streaming.DocStreams.streamLineDedup(spark, sfDir,
@@ -631,7 +631,7 @@ class StreamingSpec extends SparkSpec {
     var firstSigs = 0L
     try {
       val err = intercept[Exception] {
-        DocStreams.drain(spark, run, DocStreams.MinhashIndex, landed, docs, "doc_id",
+        DocStreams.drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id",
             sfDir, autoCompactEvery = 0, schema) { (fresh, _, meta) =>
           cycles += 1
           if (cycles == 2) throw new IllegalStateException("injected second-cycle failure")
@@ -646,7 +646,7 @@ class StreamingSpec extends SparkSpec {
       assert(spark.streams.active.isEmpty, "the failed drain left its query running")
       assert(cycles == 2)
       assert(firstSigs > 0, "first micro-batch absorbed nothing — test is vacuous")
-      assert(Dedup.readMinhashMeta(spark, run.tableBase).nDocs == landed.nDocs + firstSigs)
+      assert(Dedup.MinhashIndex.readMeta(spark, run.tableBase).nDocs == landed.nDocs + firstSigs)
     } finally Seq("sigs", "bands", "meta").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS ${run.tableBase}_$t"))
   }
