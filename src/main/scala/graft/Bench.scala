@@ -68,6 +68,8 @@ object Bench {
     }
     val partialPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTIAL", "BENCH_PARTIAL.json"))
+    def partialWriteFailed(e: Throwable): Unit = System.err.println(
+      s"[bench] write of $partialPath failed: ${e.getClass.getName}: ${e.getMessage}")
     ordered.zipWithIndex.foreach { case ((name, fn), i) =>
       // one full GC at the streaming-family boundary: the ~66 batch
       // queries before it leave old-gen debt that otherwise lands on the
@@ -89,7 +91,7 @@ object Bench {
       // the query, not a column-pruned shadow of it. (r12 ADVICE.)
       val ok =
         try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(
             s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
           false
@@ -105,11 +107,11 @@ object Bench {
         java.nio.file.Files.writeString(tmp, resultJson(results, partial = true) + "\n")
         java.nio.file.Files.move(tmp, partialPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } catch { case _: Throwable => () } // partial file is best-effort
+      } catch { case NonFatal(e) => partialWriteFailed(e) } // best-effort
     }
     val finalJson = resultJson(results, partial = false)
     try java.nio.file.Files.writeString(partialPath, finalJson + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => partialWriteFailed(e) }
     println(finalJson)
     // compact per-family summary as the FINAL stdout line: the driver
     // stores a 2000-char stdout tail, which the ~4 KB full line has

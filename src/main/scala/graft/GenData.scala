@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.GraftSession
@@ -17,7 +18,8 @@ import graft.engine.GraftSession
   * generator differences with scaling).
   *
   * Everything is a pure column function of the row id hashed with a
-  * fixed seed (xxhash64) — fully distributed generation, no driver-side
+  * fixed seed (xxhash64), except lineitem's l_linenumber, the row's rank
+  * within its order — fully distributed generation, no driver-side
   * RNG loops, and the generator is bit-deterministic: the same (sf,
   * table) always produces the same rows. Cross-scale row IDENTITY holds
   * only where no column depends on a table size: the dims
@@ -171,11 +173,14 @@ object GenData {
         Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")).as("o_orderpriority")),
       s"$outDir/orders.parquet", nOrd)
 
-    if (wants("lineitem")) write(spark.range(nLi).select(
-      key(51, nOrd).as("l_orderkey"),
+    // each order's lines are numbered from 1 in row-id order, so
+    // (l_orderkey, l_linenumber) is a key, as in TPC-H, and a window
+    // ordered by it never ties
+    if (wants("lineitem")) write(spark.range(nLi).withColumn("l_orderkey", key(51, nOrd)).select(
+      col("l_orderkey"),
       pmod(h(52, col("id")), lit(nPart)).as("l_partkey"),
       pmod(h(53, col("id")), lit(nSupp)).as("l_suppkey"),
-      (pmod(h(54, col("id")), lit(7)).cast("int") + 1).as("l_linenumber"),
+      row_number().over(Window.partitionBy("l_orderkey").orderBy("id")).as("l_linenumber"),
       (pmod(h(55, col("id")), lit(50)).cast("double") + 1.0).as("l_quantity"),
       round(lit(900.0) + u01(56, col("id")) * 104100.0, 2).as("l_extendedprice"),
       (pmod(h(57, col("id")), lit(11)).cast("double") / 100.0).as("l_discount"),

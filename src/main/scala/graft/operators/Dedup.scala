@@ -986,6 +986,14 @@ object Dedup {
       .observe(graft.Metrics.observeName(s"$tag.pairs_out"),
         count(lit(1)).as("n_pairs"))
 
+  /** Corpus-size-scaled variant: one scalar count sizes the cell count
+    * by [[ivfCellsFor]] (see [[embeddingDedupPairs]]'s sizing overload
+    * for the sanctioned-scalar rationale).
+    */
+  def semanticDedupPairs(embs: DataFrame, idCol: String, vecCol: String,
+                         threshold: Double): DataFrame =
+    semanticDedupPairs(embs, idCol, vecCol, ivfCellsFor(embs.count()), threshold)
+
   /** Semantic dedup (SemDeDup, Abbas et al. 2023): cluster embeddings
     * into Voronoi cells and flag same-cell pairs whose exact cosine
     * clears `threshold`. The published recipe — k-means the corpus,
@@ -1001,21 +1009,13 @@ object Dedup {
     * locality) — the two candidate generators miss different pair
     * classes, which is why production pipelines run both. Scale
     * posture: the centroid set is dim-scale and broadcasts; assignment
-    * is a map-side argmax + one per-id window; candidates carry IDS
-    * ONLY through the 16-way-salted same-cell join (the d5 rule — never
-    * replicate the vector payload into the pair space); vectors re-join
-    * by id for the exact-cosine verify. Cell population is bounded by
+    * is the map-side partial argmax of [[Similarity.nearestCells]];
+    * candidates carry IDS ONLY through the 16-way-salted same-cell join
+    * (the d5 rule — never replicate the vector payload into the pair
+    * space); vectors re-join by id for the exact-cosine verify. Cell population is bounded by
     * nCentroids ∝ corpus size (the IVF sizing rule), and the salt keeps
     * a degenerate cell from serializing into one task.
     */
-  /** Corpus-size-scaled variant: one scalar count sizes the cell count
-    * by [[ivfCellsFor]] (see [[embeddingDedupPairs]]'s sizing overload
-    * for the sanctioned-scalar rationale).
-    */
-  def semanticDedupPairs(embs: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double): DataFrame =
-    semanticDedupPairs(embs, idCol, vecCol, ivfCellsFor(embs.count()), threshold)
-
   def semanticDedupPairs(embs: DataFrame, idCol: String, vecCol: String,
                          nCentroids: Int, threshold: Double): DataFrame = {
     val base = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
@@ -1034,40 +1034,10 @@ object Dedup {
   def semanticDedupPairs(embs: DataFrame, cents: DataFrame,
                          threshold: Double): DataFrame = {
     val base = embs.select(col("id"), col("v"))
-    val cand = saltedSelfCandidates(assignCells(base, cents), Seq("cid"), tag = "d10")
+    val cand = saltedSelfCandidates(Similarity.nearestCells(base, cents, "id", "v", "cw"),
+      Seq("cid"), tag = "d10")
     verifiedCosPairs(cand, base, threshold, tag = "d10")
   }
-
-  /** Nearest-centroid assignment (id, cid) for `base` = (id, v) against
-    * `cents` = (cid, cw): argmax exact cosine, ties to the smaller cid —
-    * the [[Similarity.ivfTopK]] ordering, shared by the self-join d10,
-    * the landed-index build and the incremental probe so an ordering
-    * tweak can never desynchronize them. The argmax is a PARTIAL
-    * AGGREGATE — `min(struct(-cos, cid))` — not a per-id window: a
-    * window must SORT all n·cells scored rows before its rank filter,
-    * while the agg keeps one running winner per id map-side, so only
-    * (id, winner) ever reaches the exchange (measured 33× on the
-    * corpus-sized assignment at gen10 — the window sort was the single
-    * largest cost in the whole semantic family). min(struct) is
-    * order-identical to (cos DESC, cid ASC): negation flips the sort
-    * direction exactly, and cid breaks ties ascending in both
-    * spellings. cosineF is zero-guarded and never null, but a NaN
-    * vector COMPONENT still yields a NaN cosine — and plain negation
-    * would then flip the winner (NaN sorts greatest: a desc window
-    * ranks it first, a negated-asc aggregate last), silently
-    * desynchronizing a landed index from its oracle. nanvl pins NaN to
-    * +∞ BEFORE the negation, so both spellings (and DuckDB, where NaN
-    * likewise sorts greatest) agree on NaN-first — a contract
-    * violation stays bit-visible instead of flipping argmax winners.
-    */
-  private[graft] def assignCells(base: DataFrame, cents: DataFrame): DataFrame =
-    base.join(broadcast(cents))
-      .select(col("id"), col("cid"),
-        HashExpressions.cosine(col("v"), col("cw")).as("__cc"))
-      .groupBy("id")
-      .agg(min(struct(negate(nanvl(col("__cc"), lit(Double.PositiveInfinity))),
-        col("cid"))).as("__m"))
-      .select(col("id"), col("__m.cid").as("cid"))
 
   /** Survivor-mode dedup (d12) — the composed operator production
     * actually runs: near-dup PAIRS (any generator: d2/d3/d5/d10) →
@@ -1452,12 +1422,10 @@ object Dedup {
     if (ids.isEmpty) return None // empty batch: nothing to probe or absorb
     // landed ∩ batch, via a join against the LOCAL RELATION of the
     // collected ids. Its broadcast still builds in a Spark job of its own
-    // (BroadcastExchangeExec collects its child through
-    // executeCollectIterator, which LocalTableScanExec does not
-    // short-cut), so the intersect is TWO jobs: the 1-stage build and the
-    // scan-and-join collect (JobProf: 2 `<tag>: landed-intersect` jobs
-    // per micro-batch). The broadcast hint pins the join strategy, so
-    // AQE would only add a stage job — off
+    // (see Similarity.localTable), so the intersect is TWO jobs: the
+    // 1-stage build and the scan-and-join collect (JobProf: 2 `<tag>:
+    // landed-intersect` jobs per micro-batch). The broadcast hint pins
+    // the join strategy, so AQE would only add a stage job — off
     val existing = withDesc(spark, s"$tag: landed-intersect") {
       import spark.implicits._
       withAqeOff(slice.join(broadcast(ids.toSeq.toDF("id")), Seq("id")))(_.collect())
@@ -1646,7 +1614,8 @@ object Dedup {
       .write.mode(SaveMode.Overwrite).option("path", s"$dir/cents")
       .saveAsTable(s"${tableBase}_cents")
     val landedCents = spark.table(s"${tableBase}_cents")
-    SemanticIndex.land(tableBase, dir, "assign", nBuckets)(assignCells(base, landedCents))
+    SemanticIndex.land(tableBase, dir, "assign", nBuckets)(
+      Similarity.nearestCells(base, landedCents, "id", "v", "cw"))
     // the frozen cell count rides meta (not a per-absorb _cents scan):
     // ivfCellsFor(nDocs) clamps at the corpus size, so the sample can
     // hold fewer rows than the formula on tiny corpora — record the
@@ -1701,7 +1670,7 @@ object Dedup {
                                tableBase: String, threshold: Double): DataFrame = {
     val cents = spark.table(s"${tableBase}_cents")
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val bAssign = assignCells(bBase, cents).localCheckpoint()
+    val bAssign = Similarity.nearestCells(bBase, cents, "id", "v", "cw").localCheckpoint()
     val nBuckets = LandedIndex.numBuckets(spark, s"${tableBase}_assign")
     // the capped distinct-cid collect: this entry point takes any batch
     // its caller hands it, so the driver collect keeps a size bound (the
@@ -1782,7 +1751,8 @@ object Dedup {
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint() // one batch-sized pass; both appends + count reuse it
     SemanticIndex.persist(spark, tableBase,
-      absorbSemanticCore(spark, bBase, assignCells(bBase, cents), tableBase, meta))
+      absorbSemanticCore(spark, bBase, Similarity.nearestCells(bBase, cents, "id", "v", "cw"),
+        tableBase, meta))
   }
 
   /** A landed semantic index's `_meta` row — the d13 twin of
@@ -1865,17 +1835,16 @@ object Dedup {
     * cid prune — replacing a localCheckpoint job + a distinct-cid collect
     * (with its exchange) per micro-batch. Values roundtrip bit-exactly
     * (two long columns). A LocalRelation broadcast still builds in a
-    * Spark job of its own (BroadcastExchangeExec collects its child
-    * through executeCollectIterator, which LocalTableScanExec does not
-    * short-cut): "cycle: batch assign" is 3 jobs per cycle (the `cents`
-    * broadcast, the per-id argmax shuffle, the collect; JobProf st10 at
-    * sf0.01: 9 over 3 micro-batches), and the probe's broadcast of this
-    * assignment is 1 more job under "cycle: probe+spool".
+    * Spark job of its own (see [[Similarity.localTable]]): "cycle: batch
+    * assign" is 3 jobs per cycle (the `cents` broadcast, the per-id
+    * argmax shuffle, the collect; JobProf st10 at sf0.01: 9 over 3
+    * micro-batches), and the probe's broadcast of this assignment is 1
+    * more job under "cycle: probe+spool".
     */
   private def batchAssignLocal(bBase: DataFrame,
                                cents: DataFrame): (DataFrame, Array[Long]) = {
-    val (assign, rows) = Similarity.collectLocal(assignCells(bBase, cents),
-      "cycle: batch assign")
+    val (assign, rows) = Similarity.collectLocal(
+      Similarity.nearestCells(bBase, cents, "id", "v", "cw"), "cycle: batch assign")
     (assign, rows.map(_.getLong(1)).distinct)
   }
 

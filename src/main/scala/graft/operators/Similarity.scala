@@ -65,49 +65,63 @@ object Similarity {
     rankTopK(scored, k)
   }
 
+  /** Nearest-cell assignment: each `(id, vec)` row of `df` against the
+    * broadcast centroid relation `cents` = `(cid, centVec)`, keeping its
+    * `keep` argmax-cosine cells, ties to the smaller cid. This is the one
+    * "nearest centroid" of every quantizer consumer ([[ivfTopK]],
+    * [[ivfPqTopK]], the landed IVF-PQ encode and probe,
+    * [[Dedup.semanticDedupPairs]], the landed semantic index and its
+    * probes), so an ordering tweak can never desynchronize them. Returns
+    * `(id, cid, carry…)`: each `carry` column rides along with its own
+    * row's value.
+    *
+    * keep = 1 (the corpus side, n·cells scored rows) is a PARTIAL
+    * AGGREGATE, not a window: `min(struct(-cos, cid, carry…))` keeps one
+    * running winner per id map-side, so only (id, winner) reaches the
+    * exchange, where a window sorts every scored row first (measured 33×
+    * on the corpus-sized assignment at gen10). min(struct) is
+    * order-identical to (cos DESC, cid ASC): negation flips the sort
+    * direction exactly and cid breaks ties ascending in both spellings;
+    * (-cos, cid) is already a total order per id, so a carried column
+    * never affects the winner. keep > 1 (the query side, sample-sized)
+    * is a window: top-k needs the sort, and WindowGroupLimit bounds it.
+    *
+    * NaN: the cosine kernel is zero-guarded and never null, but a NaN
+    * vector component still yields a NaN cosine, and plain negation
+    * would then flip the winner (NaN sorts greatest: the desc window
+    * ranks it first, a negated-asc aggregate last), desynchronizing a
+    * landed index from its oracle. nanvl pins NaN to +∞ BEFORE the
+    * negation, so both spellings (and DuckDB, where NaN likewise sorts
+    * greatest) agree on NaN-first: a contract violation stays
+    * bit-visible instead of flipping argmax winners.
+    */
+  private[graft] def nearestCells(df: DataFrame, cents: DataFrame, id: String,
+                                  vec: String, centVec: String, keep: Int = 1,
+                                  carry: Seq[String] = Nil): DataFrame = {
+    val carried = carry.map(col)
+    val scored = df.join(broadcast(cents)).select(Seq(col(id), col("cid"),
+      HashExpressions.cosine(col(vec), col(centVec)).as("__cc")) ++ carried: _*)
+    if (keep == 1)
+      scored.groupBy(id)
+        .agg(min(struct(Seq(negate(nanvl(col("__cc"), lit(Double.PositiveInfinity))),
+          col("cid")) ++ carried: _*)).as("__m"))
+        .select(Seq(col(id), col("__m.cid").as("cid")) ++ carry.map(c => col(s"__m.$c").as(c)): _*)
+    else {
+      val w = Window.partitionBy(id).orderBy(col("__cc").desc, col("cid").asc)
+      scored.withColumn("__r", row_number().over(w)).filter(col("__r") <= keep)
+        .select(Seq(col(id), col("cid")) ++ carried: _*)
+    }
+  }
+
   /** IVF-style ANN: partition the corpus into `nCentroids` Voronoi cells
     * around deterministically-sampled centroid vectors (the corpus rows
     * with the smallest md5(id) — stateless, reproducible on every
     * executor, and engine-portable so the assignment is oracle-checkable
-    * in any SQL engine); each query probes its `nProbe` nearest cells and
-    * reranks members by exact cosine. The cell id is the shuffle/join
-    * key, so per-query work is bounded by nProbe/nCentroids of the
-    * corpus.
+    * in any SQL engine); each query probes its `nProbe` nearest cells
+    * ([[nearestCells]]) and reranks members by exact cosine. The cell id
+    * is the shuffle/join key, so per-query work is bounded by
+    * nProbe/nCentroids of the corpus.
     */
-  /** Nearest-cell assignment against a broadcast centroid sample: keep
-    * the `keep` argmax-cosine cells per row (cid tie-break). Shared by
-    * [[ivfTopK]] and [[ivfPqTopK]].
-    *
-    * keep = 1 (the corpus side — n·cells scored rows) is a PARTIAL
-    * AGGREGATE, not a window: `min(struct(-cos, cid, vec))` keeps one
-    * running winner per id map-side so only (id, winner) reaches the
-    * exchange, where the window spelling sorts every scored row first
-    * (measured 33× at gen10 — see Dedup.assignCells). The vector rides
-    * INSIDE the struct so no second join re-attaches it; it can never
-    * affect the winner because (-cos, cid) is already a total order per
-    * id. keep > 1 (the query side — sample-sized) stays a window: top-k
-    * needs the sort, and WindowGroupLimit bounds it. nanvl pins a NaN
-    * cosine (a NaN vector component — contract violation) to +∞ before
-    * the negation so the aggregate and window spellings agree on
-    * NaN-first instead of flipping winners (see Dedup.assignCells).
-    */
-  private def ivfAssign(cents: DataFrame, df: DataFrame, id: String,
-                        vec: String, keep: Int): DataFrame = {
-    val scored = df.join(broadcast(cents))
-      .withColumn("__cc", HashExpressions.cosine(col(vec), col("cv")))
-    if (keep == 1)
-      scored.select(col(id), col("cid"), col("__cc"), col(vec))
-        .groupBy(id)
-        .agg(min(struct(negate(nanvl(col("__cc"), lit(Double.PositiveInfinity))),
-          col("cid"), col(vec))).as("__m"))
-        .select(col(id), col(s"__m.$vec").as(vec), col("__m.cid").as("cid"))
-    else {
-      val w = Window.partitionBy(id).orderBy(col("__cc").desc, col("cid").asc)
-      scored.withColumn("__r", row_number().over(w)).filter(col("__r") <= keep)
-        .select(col(id), col(vec), col("cid"))
-    }
-  }
-
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
               k: Int, nCentroids: Int, nProbe: Int): DataFrame =
     ivfTopKWith(md5Sample(corpus, idCol, vecCol, nCentroids, "cid", "cv"),
@@ -122,13 +136,12 @@ object Similarity {
   private[graft] def ivfTopKWith(cents: DataFrame, queries: DataFrame,
                                  corpus: DataFrame, idCol: String, vecCol: String,
                                  k: Int, nProbe: Int): DataFrame = {
-    def assign(df: DataFrame, id: String, vec: String, keep: Int): DataFrame =
-      ivfAssign(cents, df, id, vec, keep)
-
-    val corpusCells = assign(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")), "neighbor_id", "cv2", 1)
-    val queryProbes = assign(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id", "qv", nProbe)
+    val corpusCells = nearestCells(
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")),
+      cents, "neighbor_id", "cv2", "cv", carry = Seq("cv2"))
+    val queryProbes = nearestCells(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      cents, "query_id", "qv", "cv", nProbe, carry = Seq("qv"))
 
     val cand = corpusCells.join(broadcast(queryProbes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -211,32 +224,6 @@ object Similarity {
           * lit(1000000.0) + lit(0.5)).cast("long"))
   }
 
-  /** Product quantization encode — the vector-compression half of an
-    * IVF-PQ index (Jégou et al. 2011, "Product Quantization for Nearest
-    * Neighbor Search"): each vector splits into `m` subvectors and each
-    * subvector is replaced by the index of its nearest codebook entry,
-    * so a d-dim float vector stores as `m` small codes. Codebooks are
-    * "trained" by the same stateless deterministic sampling as
-    * [[ivfTopK]]'s centroids (the `kCodes` corpus rows with the smallest
-    * md5(id), coded 0..kCodes-1 in that order) — reproducible on every
-    * executor and in any engine, which is what makes the assignment
-    * oracle-checkable.
-    *
-    * Scale posture: the codebook is dim-scale (kCodes·m subvectors) and
-    * broadcasts; the corpus side explodes ×m, scores each subvector
-    * against its sub's codes inside the broadcast join, and the argmin
-    * is a PARTIAL-AGGREGABLE `min(struct(dist, code))` — map-side
-    * combine reduces the kCodes-way candidate fan-in before the single
-    * (vec_id, sub) shuffle, so shuffle volume is m rows per vector, not
-    * m·kCodes. The tiny row_number window coding the codebook runs on
-    * kCodes rows (dim-scale, the surrogateDim contract). Distances fold
-    * doubles left-to-right in the exact order the DuckDB twin replays;
-    * ties break on the code index; `dist_fp` reports the quantization
-    * error at 6-decimal fixed point (floor(x·1e6+0.5), the a4/a5
-    * convention — no float tolerance in the comparison at all). If `m`
-    * does not divide the dimension, both engines ignore the same tail
-    * elements (identical slice arithmetic).
-    */
   /** The per-subspace codebook of [[pqEncode]]/[[pqAdcTopK]]:
     * `(code, sub, cs)` — the `kCodes` md5-sampled rows, coded 0..k-1 in
     * sample order, sliced into their `m` subvectors. The tiny
@@ -297,16 +284,38 @@ object Similarity {
     */
   private def sqL2(a: Column, b: Column): Column = HashExpressions.sqL2F(a, b)
 
+  /** Product quantization encode — the vector-compression half of an
+    * IVF-PQ index (Jégou et al. 2011, "Product Quantization for Nearest
+    * Neighbor Search"): each vector splits into `m` subvectors and each
+    * subvector is replaced by the index of its nearest codebook entry,
+    * so a d-dim float vector stores as `m` small codes. Codebooks are
+    * "trained" by the same stateless deterministic sampling as
+    * [[ivfTopK]]'s centroids (the `kCodes` corpus rows with the smallest
+    * md5(id), coded 0..kCodes-1 in that order) — reproducible on every
+    * executor and in any engine, which is what makes the assignment
+    * oracle-checkable.
+    *
+    * Scale posture: the codebook is dim-scale (kCodes·m subvectors) and
+    * broadcasts; the corpus side explodes ×m, scores each subvector
+    * against its sub's codes inside the broadcast join, and the argmin
+    * is a PARTIAL-AGGREGABLE `min(struct(dist, code))` — map-side
+    * combine reduces the kCodes-way candidate fan-in before the single
+    * (vec_id, sub) shuffle, so shuffle volume is m rows per vector, not
+    * m·kCodes. Distances fold doubles left-to-right in the exact order
+    * the DuckDB twin replays; ties break on the code index; `dist_fp`
+    * reports the quantization error at 6-decimal fixed point
+    * (floor(x·1e6+0.5), the a4/a5 convention — no float tolerance in the
+    * comparison at all). If `m` does not divide the dimension, both
+    * engines ignore the same tail elements (identical slice arithmetic).
+    */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
                m: Int, kCodes: Int): DataFrame =
     pqEncodeWith(broadcast(codebookSubs(corpus, idCol, vecCol, m, kCodes)),
       corpus, idCol, vecCol, m)
 
-  /** [[pqEncode]] against a prebuilt (broadcast) codebook — shared so
-    * the ADC operators sample the codebook ONCE and feed the same
-    * broadcast to both the encode and query sides (one corpus-wide
-    * md5-ordered sample instead of two, and a single broadcast the
-    * exchange-reuse machinery dedups at execution).
+  /** [[pqEncode]] against a prebuilt (broadcast) codebook `cb`: every
+    * encode of the ADC operators and the landed index goes through this
+    * one body.
     */
   private def pqEncodeWith(cb: DataFrame, corpus: DataFrame, idCol: String,
                            vecCol: String, m: Int): DataFrame =
@@ -319,80 +328,66 @@ object Similarity {
         col("best.code").as("code"),
         floor(col("best.dist") * lit(1000000.0) + lit(0.5)).cast("long").as("dist_fp"))
 
-  /** The compressed corpus representation + per-query ADC distance
-    * tables, from ONE codebook sample — the shared front half of
-    * [[pqAdcTopK]] and [[ivfPqTopK]].
+  /** The per-query ADC distance table `(query_id, sub, code, dfp)` over
+    * the (broadcast) codebook `cb`: each query subvector against every
+    * entry of its sub, m·kCodes rows per query, broadcast-sized. Entries
+    * are quantized to the a4/a5 fixed point BEFORE any sum, so a total
+    * over subs is a BIGINT sum of BIGINTs — order-independent across
+    * partial-aggregate merges and exact in any engine.
     */
-  private def pqCodesAndAdc(queries: DataFrame, corpus: DataFrame,
-                            idCol: String, vecCol: String,
-                            m: Int, kCodes: Int): (DataFrame, DataFrame) =
-    pqCodesAndAdcWith(broadcast(codebookSubs(corpus, idCol, vecCol, m, kCodes)),
-      queries, corpus, idCol, vecCol, m)
-
-  private def pqCodesAndAdcWith(cb: DataFrame, queries: DataFrame,
-                                corpus: DataFrame, idCol: String, vecCol: String,
-                                m: Int): (DataFrame, DataFrame) = {
-    val codes = pqEncodeWith(cb, corpus, idCol, vecCol, m)
-      .select(col("vec_id").as("neighbor_id"), col("sub"), col("code"))
-    val adc = subVectors(queries, idCol, vecCol, m, "query_id")
+  private def adcTable(cb: DataFrame, queries: DataFrame, idCol: String,
+                       vecCol: String, m: Int): DataFrame =
+    subVectors(queries, idCol, vecCol, m, "query_id")
       .join(cb, Seq("sub"))
       .select(col("query_id"), col("sub").cast("long").as("sub"), col("code"),
         floor(sqL2(col("vs"), col("cs")) * lit(1000000.0) + lit(0.5))
           .cast("long").as("dfp"))
-    (codes, adc)
+
+  /** The ADC scoring tail shared by a7, a9 and the a10 probe: candidate
+    * code rows `(neighbor_id, sub, code, …)` join the broadcast ADC
+    * `table` on `on`, self-pairs drop, one partial-aggregated BIGINT sum
+    * per (query, neighbor), then the per-query top k by (fixed-point
+    * distance asc, neighbor id asc) — the distance twin of [[rankTopK]]
+    * (partial WindowGroupLimit before the shuffle).
+    */
+  private def adcTopK(cand: DataFrame, table: DataFrame, on: Seq[String],
+                      k: Int): DataFrame = {
+    val scored = cand.join(broadcast(table), on)
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .groupBy("query_id", "neighbor_id")
+      .agg(sum(col("dfp")).as("adc_fp"))
+    val w = Window.partitionBy("query_id").orderBy(col("adc_fp").asc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("adc_fp"),
+        col("rank").cast("long").as("rank"))
   }
 
   /** Asymmetric-distance (ADC) top-k over the PQ codes — the faiss
     * IndexPQ query path: the corpus is visited only through its
     * compressed `(vec_id, sub, code)` representation (m small codes per
     * vector — at 100 TB of vectors THE reason PQ exists), while each
-    * query precomputes a distance TABLE (query-subvector → every
-    * codebook entry, m·kCodes rows per query) that broadcasts. Scoring
-    * is one broadcast join codes⋈table and a partial-aggregated sum per
-    * (query, neighbor); ranking reuses the a1/a3 top-k window (partial
-    * WindowGroupLimit before the shuffle).
-    *
-    * Per-sub table entries are quantized to the a4/a5 fixed point
-    * BEFORE the sum, so the total is a BIGINT sum of BIGINTs —
-    * order-independent across partial-aggregate merges and exact in any
-    * engine; ties rank by neighbor id. Production stores the a6 codes
-    * and reads them here; this composition recomputes them inline so
-    * the operator is self-contained over raw vectors.
+    * query precomputes a distance table ([[adcTable]]) that broadcasts.
+    * Scoring is one broadcast join codes⋈table and a partial-aggregated
+    * sum per (query, neighbor); ties rank by neighbor id. Production
+    * stores the a6 codes and reads them here; this composition
+    * recomputes them inline so the operator is self-contained over raw
+    * vectors.
     */
   def pqAdcTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-                k: Int, m: Int, kCodes: Int): DataFrame = {
-    val (codes, adc) = pqCodesAndAdc(queries, corpus, idCol, vecCol, m, kCodes)
-    val scored = codes.join(broadcast(adc), Seq("sub", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("dfp")).as("adc_fp"))
-    rankAdcTopK(scored, k)
-  }
+                k: Int, m: Int, kCodes: Int): DataFrame =
+    pqAdcTopK(broadcast(codebookSubs(corpus, idCol, vecCol, m, kCodes)),
+      queries, corpus, idCol, vecCol, k, m)
 
-  /** [[pqAdcTopK]] against a PREBUILT (broadcast) codebook — the a11
+  /** [[pqAdcTopK]] against a prebuilt (broadcast) codebook `cb`, which
+    * serves both the encode and the query tables — the a11
     * shared-sample spelling (see [[ivfTopKWith]]).
     */
-  private[graft] def pqAdcTopKWith(cb: DataFrame, queries: DataFrame,
-                                   corpus: DataFrame, idCol: String,
-                                   vecCol: String, k: Int, m: Int): DataFrame = {
-    val (codes, adc) = pqCodesAndAdcWith(cb, queries, corpus, idCol, vecCol, m)
-    val scored = codes.join(broadcast(adc), Seq("sub", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("dfp")).as("adc_fp"))
-    rankAdcTopK(scored, k)
-  }
-
-  /** Shared ADC ranking tail (a7/a9/a10): per-query rank by (fixed-point
-    * distance asc, neighbor id asc), keep the top k — the distance twin
-    * of [[rankTopK]].
-    */
-  private def rankAdcTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("adc_fp").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adc_fp"),
-        col("rank").cast("long").as("rank"))
+  private[graft] def pqAdcTopK(cb: DataFrame, queries: DataFrame, corpus: DataFrame,
+                               idCol: String, vecCol: String, k: Int, m: Int): DataFrame = {
+    val codes = pqEncodeWith(cb, corpus, idCol, vecCol, m)
+      .select(col("vec_id").as("neighbor_id"), col("sub"), col("code"))
+    adcTopK(codes, adcTable(cb, queries, idCol, vecCol, m), Seq("sub", "code"), k)
   }
 
   /** IVF + PQ-ADC composed search — the faiss `IndexIVFPQ` query path
@@ -434,29 +429,19 @@ object Similarity {
                                    idCol: String, vecCol: String,
                                    k: Int, nProbe: Int, m: Int): DataFrame = {
     val cb = broadcast(cb0)
-    val corpusCells = ivfAssign(cents,
+    val corpusCells = nearestCells(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv2")),
-      "neighbor_id", "cv2", 1).select("neighbor_id", "cid")
-    val queryProbes = ivfAssign(cents,
+      cents, "neighbor_id", "cv2", "cv")
+    val queryProbes = nearestCells(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "query_id", "qv", nProbe).select("query_id", "cid")
+      cents, "query_id", "qv", "cv", nProbe)
     val codes = pqEncodeWith(cb, corpus, idCol, vecCol, m)
       .select(col("vec_id").as("neighbor_id"), col("sub"), col("code"))
-    val adc = subVectors(queries, idCol, vecCol, m, "query_id")
-      .join(cb, Seq("sub"))
-      .select(col("query_id"), col("sub").cast("long").as("sub"), col("code"),
-        floor(sqL2(col("vs"), col("cs")) * lit(1000000.0) + lit(0.5))
-          .cast("long").as("dfp"))
     // a corpus vector lives in exactly ONE cell (keep = 1), so a
     // candidate (query, neighbor) pair arises from at most one probed
     // cell and needs no dedup before the sum
-    val scored = codes.join(corpusCells, "neighbor_id")
-      .join(broadcast(queryProbes), Seq("cid"))
-      .join(broadcast(adc), Seq("query_id", "sub", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("dfp")).as("adc_fp"))
-    rankAdcTopK(scored, k)
+    adcTopK(codes.join(corpusCells, "neighbor_id").join(broadcast(queryProbes), Seq("cid")),
+      adcTable(cb, queries, idCol, vecCol, m), Seq("query_id", "sub", "code"), k)
   }
 
   /** IVF-PQ search with EXACT re-ranking (a12) — the faiss
@@ -485,12 +470,12 @@ object Similarity {
     refineRerank(pool, queries, corpus, idCol, vecCol, k)
   }
 
-  /** The exact-cosine re-rank shared by [[ivfPqRefineTopK]] and
-    * [[annRecall]]'s refine leg: top-k of `pool` (query_id,
-    * neighbor_id — broadcast-sized by construction) under the a1/a3
-    * rounded-cosine rank + id tie-break, reading the pool members'
-    * vectors from `corpus` via a broadcast join (the corpus never
-    * shuffles).
+  /** The exact-cosine re-rank shared by [[ivfPqRefineTopK]],
+    * [[ivfPqProbeRefine]] and [[annRecall]]'s refine leg: top-k of
+    * `pool` (query_id, neighbor_id — broadcast-sized by construction)
+    * under the a1/a3 rounded-cosine rank + id tie-break, reading the
+    * pool members' vectors from `corpus` via a broadcast join (the
+    * corpus never shuffles).
     */
   private def refineRerank(pool: DataFrame, queries: DataFrame,
                            corpus: DataFrame, idCol: String, vecCol: String,
@@ -561,36 +546,24 @@ object Similarity {
   }
 
   /** Cell assignment + PQ encode of `(id, v)` rows against a LANDED
-    * quantizer — the shared land/absorb body: one keep-1 argmax pass
-    * over the broadcast centroids, one [[pqEncodeWith]] pass over the
-    * broadcast codebook, joined into the denormalized `(id, sub, code,
-    * cid)` layout the probe consumes (the cell id rides every code row,
-    * so the probe needs NO corpus-sized assignment join — the faiss
-    * "codes stored per IVF list" layout). The id-keyed join is
-    * input-sized: corpus-sized once at land, batch-sized per absorb
-    * (where AQE broadcasts it).
-    */
-  private def encodeWithCells(cents: DataFrame, cb: DataFrame,
-                              base: DataFrame, m: Int): DataFrame = {
-    val cells = ivfAssign(cents, base, "id", "v", 1).select("id", "cid")
-    pqEncodeWith(broadcast(cb), base, "id", "v", m)
-      .select(col("vec_id").as("id"), col("sub"), col("code"))
-      .join(cells, "id")
-  }
-
-  /** [[encodeWithCells]] for the ABSORB path, where `base` is
-    * batch-sized by contract: the id-keyed cell join is explicitly
-    * broadcast (pinning the strategy AQE picks anyway), so the whole
+    * quantizer — the shared land/absorb body: one keep-1
+    * [[nearestCells]] pass over the broadcast centroids, one
+    * [[pqEncodeWith]] pass over the broadcast codebook, joined into the
+    * denormalized `(id, sub, code, cid)` layout the probe consumes (the
+    * cell id rides every code row, so the probe needs NO corpus-sized
+    * assignment join — the faiss "codes stored per IVF list" layout).
+    * The id-keyed join is input-sized: corpus-sized at land, where
+    * `cells` must never broadcast; batch-sized per absorb, where
+    * `broadcastCells` pins the strategy AQE picks anyway, so the whole
     * encode+append plan has no strategy decision left and can run
-    * AQE-off as a single job. The land keeps [[encodeWithCells]] —
-    * there `cells` is corpus-sized and must never broadcast.
+    * AQE-off as a single job.
     */
-  private def encodeWithCellsBatch(cents: DataFrame, cb: DataFrame,
-                                   base: DataFrame, m: Int): DataFrame = {
-    val cells = ivfAssign(cents, base, "id", "v", 1).select("id", "cid")
+  private def encodeWithCells(cents: DataFrame, cb: DataFrame, base: DataFrame,
+                              m: Int, broadcastCells: Boolean): DataFrame = {
+    val cells = nearestCells(base, cents, "id", "v", "cv")
     pqEncodeWith(broadcast(cb), base, "id", "v", m)
       .select(col("vec_id").as("id"), col("sub"), col("code"))
-      .join(broadcast(cells), "id")
+      .join(if (broadcastCells) broadcast(cells) else cells, "id")
   }
 
   /** Land the IVF-PQ state for `embs` as tables under `dir` (catalog
@@ -665,7 +638,7 @@ object Similarity {
       .saveAsTable(s"${tableBase}_cb")
     IvfPqIndex.land(tableBase, dir, "codes", nBuckets)(
       encodeWithCells(spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"),
-        base, m))
+        base, m, broadcastCells = false))
     // the land KNOWS the meta it writes (saves the st14 loop the
     // per-drain meta head() job)
     val meta = IvfPqMeta(nDocs, nCentroids, m, kCodes, nBuckets)
@@ -712,36 +685,22 @@ object Similarity {
   private def ivfPqProbeCore(spark: SparkSession, queries: DataFrame, idCol: String,
                              vecCol: String, tableBase: String, k: Int, nProbe: Int,
                              meta: IvfPqMeta, cents: DataFrame,
-                             cb0: DataFrame): DataFrame = {
-    val cb = broadcast(cb0)
+                             cb: DataFrame): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // LOCAL RELATION, not localCheckpoint: probes is (queries·nProbe)
-    // two-long-column rows — broadcast-sized by construction (the
-    // scoring join ships it whole regardless) — so ONE collect feeds
-    // (a) the distinct-cid prune driver-side with zero further jobs
-    // (the old distinct+limit+collect paid an exchange and its AQE
-    // stage job per probe) and (b) the scoring join's broadcast. That
-    // broadcast still builds in a 1-stage job of its own (a
-    // LocalTableScan child is collected like any other; see localTable).
+    // two-long-column rows, broadcast-sized by construction, so ONE
+    // collect feeds (a) the distinct-cid prune driver-side and (b) the
+    // scoring join's broadcast (which still builds in a 1-stage job of
+    // its own; see localTable)
     val (probes, probeRows) = collectLocal(
-      ivfAssign(cents, q, "query_id", "qv", nProbe).select("query_id", "cid"),
-      "a10: query probes")
-    val adc = subVectors(q, "query_id", "qv", meta.m, "query_id")
-      .join(cb, Seq("sub"))
-      .select(col("query_id"), col("sub").cast("long").as("sub"), col("code"),
-        floor(sqL2(col("vs"), col("cs")) * lit(1000000.0) + lit(0.5))
-          .cast("long").as("dfp"))
+      nearestCells(q, cents, "query_id", "qv", "cv", nProbe), "a10: query probes")
     val idxPruned = Dedup.bucketPruned(spark.table(s"${tableBase}_codes"), "cid",
       probeRows.map(_.getLong(1)).distinct, meta.nBuckets, "a10", "probe_cids")
     // a landed vector lives in exactly one cell (keep = 1 at encode), so
     // a candidate (query, neighbor) pair arises from at most one probed
     // cell and needs no dedup before the sum
-    val scored = idxPruned.join(broadcast(probes), Seq("cid"))
-      .join(broadcast(adc), Seq("query_id", "sub", "code"))
-      .filter(col("query_id") =!= col("id"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(sum(col("dfp")).as("adc_fp"))
-    rankAdcTopK(scored, k)
+    adcTopK(idxPruned.withColumnRenamed("id", "neighbor_id").join(broadcast(probes), Seq("cid")),
+      adcTable(broadcast(cb), q, "query_id", "qv", meta.m), Seq("query_id", "sub", "code"), k)
   }
 
   /** ADC probe of a landed [[landIvfPqIndex]] with EXACT re-ranking —
@@ -780,11 +739,8 @@ object Similarity {
     val (pool, poolRows) = collectLocal(poolPlan, "a13: adc pool")
     val vecsPruned = Dedup.bucketPruned(spark.table(s"${tableBase}_vecs"), "id",
       poolRows.map(_.getLong(1)).distinct, meta.nBuckets, "a13", "pool_ids")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = vecsPruned.select(col("id").as("neighbor_id"), col("v").as("cv"))
-      .join(broadcast(pool.join(q, Seq("query_id"))), Seq("neighbor_id"))
-      .withColumn("cos", round(HashExpressions.cosine(col("qv"), col("cv")), 6))
-    rankTopK(scored, k)
+    refineRerank(pool, queries, vecsPruned.select(col("id").as(idCol), col("v").as(vecCol)),
+      idCol, vecCol, k)
   }
 
   /** Absorb an arriving vector batch into a landed [[landIvfPqIndex]]:
@@ -838,20 +794,17 @@ object Similarity {
                               tableBase: String, meta: IvfPqMeta,
                               cents: DataFrame, cb: DataFrame): IvfPqMeta = {
     // absorb input is batch-sized by contract: the encode's joins are
-    // hint-pinned (encodeWithCellsBatch) and the append runs AQE-off.
-    // That is still 4 jobs per call (JobProf st14 at sf0.01, 4 cpus: 12
-    // over 3 micro-batches), because each broadcast builds in a job of
-    // its own:
-    //  - `cents` and `cb` broadcasts: one 1-stage job each, ~10 ms.
-    //    BroadcastExchangeExec collects its child through
-    //    executeCollectIterator, which LocalTableScanExec does not
-    //    short-cut, so even a LocalRelation snapshot runs a job;
-    //  - `cells` broadcast: ivfAssign's per-id aggregate over the batch,
-    //    a 2-stage job (shuffle + collect), ~0.1 s;
+    // hint-pinned (broadcastCells) and the append runs AQE-off. That is
+    // still 4 jobs per call (JobProf st14 at sf0.01, 4 cpus: 12 over 3
+    // micro-batches), because each broadcast builds in a job of its own:
+    //  - `cents` and `cb` broadcasts: one 1-stage job each, ~10 ms, even
+    //    from a LocalRelation snapshot (see localTable);
+    //  - `cells` broadcast: nearestCells' per-id aggregate over the
+    //    batch, a 2-stage job (shuffle + collect), ~0.1 s;
     //  - the bucketed append itself: 3 stages (pqEncode's aggregate
     //    shuffle, the bucket repartition, the write), ~0.35 s.
     IvfPqIndex.append(spark, tableBase, "codes", meta.nBuckets)(
-      encodeWithCellsBatch(cents, cb, fresh, meta.m))
+      encodeWithCells(cents, cb, fresh, meta.m, broadcastCells = true))
     // batch count rides the append (no separate count() job per absorb)
     val obs = org.apache.spark.sql.Observation()
     IvfPqIndex.append(spark, tableBase, "vecs", meta.nBuckets)(
@@ -1032,7 +985,7 @@ object Similarity {
     val appr =
       leg(lshTopK(queries, corpus, idCol, vecCol, k, tables, planes), "lsh")
         .union(leg(ivfTopKWith(cents, queries, corpus, idCol, vecCol, k, nProbe), "ivf"))
-        .union(leg(pqAdcTopKWith(broadcast(cb0), queries, corpus, idCol, vecCol, k, m), "pq"))
+        .union(leg(pqAdcTopK(broadcast(cb0), queries, corpus, idCol, vecCol, k, m), "pq"))
         .union(leg(pool.filter(col("rank") <= k), "ivfpq"))
         .union(leg(refineRerank(pool.select("query_id", "neighbor_id"),
           queries, corpus, idCol, vecCol, k), "ivfpq_refine"))

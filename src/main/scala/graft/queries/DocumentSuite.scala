@@ -1056,8 +1056,8 @@ object DocumentSuite {
 
   /** Voronoi-cell assignment for the a3 oracle: per vector, the `keep`
     * nearest of the md5-sampled centroids by exact cosine (ties to the
-    * smaller centroid id — the same ordering [[Similarity.ivfTopK]]
-    * uses). keep = 1 — the corpus-sized side — is a GROUP BY
+    * smaller centroid id — the ordering of [[Similarity.nearestCells]],
+    * whose doc holds the NaN rule). keep = 1 — the corpus-sized side — is a GROUP BY
     * MIN(struct(-cos, cid)) aggregate, not a window: the r17 Spark fix
     * applied to the ORACLE too (a window must sort all n·cells scored
     * rows carrying the 64-dim vector payload — at gen10 that is 89.6M

@@ -292,8 +292,8 @@ class PlanAuditSpec extends SparkSpec {
     val e = graft.sources.Tables.embeddings(spark, sfDir)
     val cents = graft.operators.Similarity.md5Sample(e, "vec_id", "embedding",
       16, "cid", "cw")
-    val assign = graft.operators.Dedup.assignCells(
-      e.selectExpr("vec_id AS id", "embedding AS v"), cents)
+    val assign = graft.operators.Similarity.nearestCells(
+      e.selectExpr("vec_id AS id", "embedding AS v"), cents, "id", "v", "cw")
     val plan = assign.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"),
       s"assignment must carry no window (argmin is an aggregate)\n${plan.take(4000)}")
