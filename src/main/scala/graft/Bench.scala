@@ -81,14 +81,7 @@ object Bench {
       if (name.startsWith("st") && (i == 0 || !ordered(i - 1)._1.startsWith("st")))
         System.gc()
       val t0 = System.nanoTime()
-      // evaluate via the ALREADY-PLANNED physical plan (toRdd), not
-      // .count(): count() wraps the query in a fresh Aggregate and the
-      // optimizer then prunes every column the count doesn't need — for
-      // map-only queries (t12 kernel, a4 quantize) the timed run would
-      // execute only the scan, and even grouped queries would drop
-      // unreferenced aggregate expressions. toRdd.count() materializes
-      // every output row of the plan as built, so the number measures
-      // the query, not a column-pruned shadow of it. (r12 ADVICE.)
+      // toRdd.count(), not count(): why is in graft.Prof's scaladoc
       val ok =
         try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
         catch { case NonFatal(e) =>

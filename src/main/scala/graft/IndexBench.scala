@@ -9,7 +9,7 @@ import graft.operators.{Dedup, LandedIndex, Similarity}
 /** Developer diagnostic for the landed indexes' batch-proportionality
   * claims: time LAND / PROBE / ABSORB / COMPACT (and, where the family
   * has one, CLASSIFY) of one index family separately — the gate and
-  * QBench timings fuse them, because the query lands the index at
+  * Prof timings fuse them, because the query lands the index at
   * construction.
   *
   * `runMain graft.IndexBench <family> <dir> <batchN> [nBuckets]`, with

@@ -83,4 +83,15 @@ object GraftSession {
     graft.Metrics.enable(s)
     s
   }
+
+  /** Run `f` with the session confs `confs` set, then restore each to
+    * its previous value, or unset it if it had none. The confs are
+    * session-wide while `f` runs: callers that may run concurrently
+    * with other users of the session take their own lock.
+    */
+  private[graft] def withConfs[T](spark: SparkSession, confs: (String, String)*)(f: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

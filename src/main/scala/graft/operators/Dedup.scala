@@ -206,36 +206,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
   }
 
-  /** Cross-document repeated-segment removal (d16) — the line-level
-    * dedup stage of the public web-corpus pipelines (CCNet's paragraph
-    * hashing, RefinedWeb/Dolma's repeated-line filters): a SEGMENT that
-    * occurs in at least `minDf` distinct documents is boilerplate
-    * (headers, templates, navigation chrome) and is dropped from EVERY
-    * document — or, with `keepFirst`, from every document EXCEPT its
-    * first (minimum-doc_id) host: the two public variants of the stage
-    * (RefinedWeb-style repeated-line REMOVAL vs CCNet/Dolma-style
-    * paragraph DEDUP, which preserves one canonical copy). Surviving
-    * segments are reassembled in document order.
-    * Production corpora segment on newlines; this corpus is
-    * single-line, so the pluggable segmenter here is fixed `window`-
-    * token chunking — the algebra downstream of segmentation (df-count
-    * → boilerplate set → drop → positional reassembly) is identical.
-    *
-    * Output: (doc_id, clean_text, n_dropped) for every input doc —
-    * a fully-boilerplate doc survives with empty text (the caller's
-    * length filter, t2, is the policy layer; this operator never
-    * silently loses a doc id).
-    *
-    * Scale shape (three keyed shuffles, no corpus joins): the df count
-    * shuffles (segment, doc) once with map-side partial aggregation;
-    * the boilerplate set — tiny relative to the corpus by construction
-    * (it IS the repeated mass) — joins back to the segment stream
-    * (AQE broadcasts it when small); the reassembly is one groupBy on
-    * doc_id with an in-group sort, Θ(corpus). Nothing is quadratic in
-    * document count or segment df, unlike pair-based dedup: this is the
-    * degenerate-duplication regime (d8's pruneSingletonBuckets gate)
-    * handled as a first-class transform instead of a pair generator.
-    */
   /** The d16/st13 segmenter: fixed-`window`-token chunks of each doc
     * (production corpora segment on newlines; this corpus is
     * single-line). Returns (doc_id, segno, seg), empty segments
@@ -279,6 +249,36 @@ object Dedup {
         coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
   }
 
+  /** Cross-document repeated-segment removal (d16) — the line-level
+    * dedup stage of the public web-corpus pipelines (CCNet's paragraph
+    * hashing, RefinedWeb/Dolma's repeated-line filters): a SEGMENT that
+    * occurs in at least `minDf` distinct documents is boilerplate
+    * (headers, templates, navigation chrome) and is dropped from EVERY
+    * document — or, with `keepFirst`, from every document EXCEPT its
+    * first (minimum-doc_id) host: the two public variants of the stage
+    * (RefinedWeb-style repeated-line REMOVAL vs CCNet/Dolma-style
+    * paragraph DEDUP, which preserves one canonical copy). Surviving
+    * segments are reassembled in document order.
+    * Production corpora segment on newlines; this corpus is
+    * single-line, so the pluggable segmenter here is fixed `window`-
+    * token chunking — the algebra downstream of segmentation (df-count
+    * → boilerplate set → drop → positional reassembly) is identical.
+    *
+    * Output: (doc_id, clean_text, n_dropped) for every input doc —
+    * a fully-boilerplate doc survives with empty text (the caller's
+    * length filter, t2, is the policy layer; this operator never
+    * silently loses a doc id).
+    *
+    * Scale shape (three keyed shuffles, no corpus joins): the df count
+    * shuffles (segment, doc) once with map-side partial aggregation;
+    * the boilerplate set — tiny relative to the corpus by construction
+    * (it IS the repeated mass) — joins back to the segment stream
+    * (AQE broadcasts it when small); the reassembly is one groupBy on
+    * doc_id with an in-group sort, Θ(corpus). Nothing is quadratic in
+    * document count or segment df, unlike pair-based dedup: this is the
+    * degenerate-duplication regime (d8's pruneSingletonBuckets gate)
+    * handled as a first-class transform instead of a pair generator.
+    */
   def lineDedup(docs: DataFrame, idCol: String, textCol: String,
                 window: Int = 10, minDf: Int = 2,
                 keepFirst: Boolean = false): DataFrame = {
@@ -1337,16 +1337,12 @@ object Dedup {
     * session, whose SQLConf is a snapshot: setting the conf on the outer
     * session there is a silent no-op.
     */
-  private[graft] def withAqeOff[T](df: DataFrame)(f: DataFrame => T): T = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.adaptive.enabled"
-    val prev = conf.getOption(key)
-    conf.set(key, "false")
-    try f(df) finally prev.fold(conf.unset(key))(conf.set(key, _))
-  }
+  private[graft] def withAqeOff[T](df: DataFrame)(f: DataFrame => T): T =
+    graft.engine.GraftSession.withConfs(df.sparkSession,
+      "spark.sql.adaptive.enabled" -> "false")(f(df))
 
   /** Label the jobs `f` submits (guide §1.5) — thread-local, restored
-    * after; purely diagnostic (JobProf/UI attribution for the
+    * after; purely diagnostic (Prof/UI attribution for the
     * sum-of-small-jobs ingest cycles).
     */
   private[graft] def withDesc[T](spark: SparkSession, d: String)(f: => T): T = {
@@ -1356,54 +1352,20 @@ object Dedup {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** The batch-proportional redelivery guard of the standalone IVF-PQ
-    * absorb: drop every `base` row whose `id` already exists in the
-    * id-BUCKETED `landedTable`. The batch's distinct ids (a batch-sized
-    * collect bounded at [[pruneKeyCap]] + 1) [[bucketPruned]] the table,
-    * so guard IO stays flat in corpus size at fixed batch size — past the
-    * cap the anti-join runs against the unfiltered id column, which is
-    * still a single-column pruned scan. A landed row with an id IN the
-    * batch always survives the InSet, so the anti-join result is
-    * identical either way.
-    *
-    * `idCol` names the BATCH side's key column; the landed index
-    * tables' bucket column is always `id`.
-    */
-  private[graft] def prunedIdGuard(spark: SparkSession, base: DataFrame,
-                                   landedTable: String, nBuckets: Int,
-                                   tag: String, idCol: String = "id"): DataFrame = {
-    val landed = spark.table(landedTable).select(col("id"))
-    val ids = base.select(col(idCol).as("id")).distinct()
-      .limit(pruneKeyCap(nBuckets) + 1).collect().map(_.getLong(0))
-    val slice = bucketPruned(landed, "id", ids, nBuckets, tag, "batch_ids")
-    base.join(slice.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-  }
-
-  /** Per-micro-batch spelling of [[prunedIdGuard]] for the six ingest
-    * loops: returns the guarded batch, or None when nothing survives the
-    * guard (the skip-cycle signal). Same anti-join semantics — every
-    * `base` row whose id is already in `landedTable` is dropped — at a
-    * lower per-batch JOB cost: instead of materializing a batch-wide
-    * anti-join (localCheckpoint) and then asking `isEmpty` (three jobs
-    * per micro-batch), it collects the landed ∩ batch id INTERSECTION
-    * (batch-bounded by construction — the same sanctioned driver-collect
-    * class as the batch-id prune itself) and decides driver-side. In the
-    * no-replay common case the intersection is empty and the batch
-    * passes through UNTOUCHED — no anti-join in the plan, no checkpoint
-    * pass over the batch, and downstream consumers re-read the arrival
-    * file directly (it is already materialized input).
-    *
-    *  - under the [[pruneKeyCap]]: the batch's distinct ids are fully
-    *    known, the bucket-pruned InSet slice IS the intersection (one
-    *    file-skipping scan job, plus the build job of the id broadcast),
-    *    and the fresh-id remainder filter carries at
-    *    most cap literals — every case decided with ZERO extra jobs;
-    *  - past the cap (gate-scale batches over small bucket counts): the
-    *    intersection comes from one semi-join of the landed id column
-    *    against the broadcast batch ids; a non-empty intersection with
-    *    unknowable remainder (partial replay of a large batch — only
-    *    reachable after a crash) falls back to the checkpointed
-    *    anti-join, the exact pre-r20 path.
+  /** The redelivery guard of the ingest drains and the standalone
+    * IVF-PQ absorb: drops every `base` row whose id is already in the
+    * id-BUCKETED `landedTable`, and returns None when nothing survives
+    * (the skip-cycle signal). It collects the batch's ids, intersects
+    * them with the landed ids of the buckets those ids hash into
+    * ([[bucketPruned]]: guard IO stays flat in corpus size at fixed
+    * batch size) and decides driver-side. In the no-replay common case
+    * the intersection is empty and the batch passes through UNTOUCHED:
+    * no anti-join in the plan, no checkpoint pass over the batch. A
+    * replay keeps its fresh ids by a literal filter of at most
+    * [[pruneKeyCap]] ids; past the cap (a partial replay of a large
+    * batch, reachable only after a crash) it falls back to a
+    * checkpointed anti-join. `idCol` names the batch's key column; the
+    * landed table's is always `id`.
     */
   private[graft] def guardedBatch(spark: SparkSession, base: DataFrame,
                                   landedTable: String, nBuckets: Int,
@@ -1423,7 +1385,7 @@ object Dedup {
     // landed ∩ batch, via a join against the LOCAL RELATION of the
     // collected ids. Its broadcast still builds in a Spark job of its own
     // (see Similarity.localTable), so the intersect is TWO jobs: the
-    // 1-stage build and the scan-and-join collect (JobProf: 2 `<tag>:
+    // 1-stage build and the scan-and-join collect (Prof: 2 `<tag>:
     // landed-intersect` jobs per micro-batch). The broadcast hint pins
     // the join strategy, so AQE would only add a stage job — off
     val existing = withDesc(spark, s"$tag: landed-intersect") {
@@ -1437,9 +1399,8 @@ object Dedup {
       else if (freshIds.length <= cap)
         Some(base.filter(col(idCol).isInCollection(freshIds.toSeq)))
       else {
-        // huge fresh remainder (partial replay of a large batch): a
-        // literal filter would tax every downstream transform — take
-        // the pre-r20 checkpointed anti-join instead
+        // huge fresh remainder: a literal filter would tax every
+        // downstream transform — take the checkpointed anti-join
         val fresh = withDesc(spark, s"$tag: replay anti-join") {
           base.join(landed.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
             .localCheckpoint()
@@ -1837,7 +1798,7 @@ object Dedup {
     * (two long columns). A LocalRelation broadcast still builds in a
     * Spark job of its own (see [[Similarity.localTable]]): "cycle: batch
     * assign" is 3 jobs per cycle (the `cents` broadcast, the per-id
-    * argmax shuffle, the collect; JobProf st10 at sf0.01: 9 over 3
+    * argmax shuffle, the collect; Prof st10 at sf0.01: 9 over 3
     * micro-batches), and the probe's broadcast of this assignment is 1
     * more job under "cycle: probe+spool".
     */

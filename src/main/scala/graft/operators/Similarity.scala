@@ -756,11 +756,10 @@ object Similarity {
     * the index is dropped before the append, so an at-least-once replay
     * (or an overlapping batch) can never write duplicate code rows —
     * which the probe would silently double-sum into corrupted adc_fp.
-    * The guard anti-joins the batch BY ID against the id-bucketed
-    * `_vecs` side table with the batch's id set as a
-    * [[Dedup.pruneKeyCap]]-capped InSet on the bucket column (Metrics
-    * `a10.guard`), so it reads only the index files the batch's ids
-    * can hash into — batch-proportional, not corpus-proportional. An
+    * The guard ([[Dedup.guardedBatch]], Metrics `a10.guard`) drops the
+    * batch's ids already in the id-bucketed `_vecs` side table, reading
+    * only the index files those ids can hash into — batch-proportional,
+    * not corpus-proportional; a full replay appends nothing. An
     * id-keyed guard is also the only sound one: an id re-sent with a
     * DIFFERENT vector encodes to a DIFFERENT cell, so a codes-side
     * cell-pruned anti-join would miss its landed rows and append a
@@ -775,13 +774,16 @@ object Similarity {
                        idCol: String, vecCol: String, tableBase: String): IvfPqMeta = {
     val meta = IvfPqIndex.readMeta(spark, tableBase)
     val base = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint() // the guard reads it twice
-    val fresh = Dedup.prunedIdGuard(spark, base, s"${tableBase}_vecs",
-      meta.nBuckets, "a10.guard").localCheckpoint()
-    val advanced = absorbIvfPqCore(spark, fresh, tableBase, meta,
-      spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"))
-    IvfPqIndex.persist(spark, tableBase, advanced)
-    advanced
+    Dedup.guardedBatch(spark, base, s"${tableBase}_vecs", meta.nBuckets, "a10.guard") match {
+      case None => // full replay (or an empty batch): nothing to append
+        Dedup.staleAdvisory("a10", meta.nDocs, meta.nCents)
+        meta
+      case Some(fresh) =>
+        val advanced = absorbIvfPqCore(spark, fresh, tableBase, meta,
+          spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"))
+        IvfPqIndex.persist(spark, tableBase, advanced)
+        advanced
+    }
   }
 
   /** Encode guarded `(id, v)` rows against the frozen quantizer and
@@ -795,7 +797,7 @@ object Similarity {
                               cents: DataFrame, cb: DataFrame): IvfPqMeta = {
     // absorb input is batch-sized by contract: the encode's joins are
     // hint-pinned (broadcastCells) and the append runs AQE-off. That is
-    // still 4 jobs per call (JobProf st14 at sf0.01, 4 cpus: 12 over 3
+    // still 4 jobs per call (Prof st14 at sf0.01, 4 cpus: 12 over 3
     // micro-batches), because each broadcast builds in a job of its own:
     //  - `cents` and `cb` broadcasts: one 1-stage job each, ~10 ms, even
     //    from a LocalRelation snapshot (see localTable);

@@ -82,7 +82,7 @@ object TextAnalysis {
     * `>=`, which is exactly that tie-break). The five scores are fields
     * of ONE langScores kernel struct — whole-stage codegen's
     * subexpression elimination evaluates the shared kernel subtree once
-    * per row (timed via QBench: t1 1.6 s → 0.6 s in-gate at sf0.1).
+    * per row (timed via Prof: t1 1.6 s → 0.6 s in-gate at sf0.1).
     */
   def langId(text: Column): Column = {
     val st = graft.functions.HashExpressions.langScores(text)
@@ -159,6 +159,19 @@ object TextAnalysis {
       .select("doc_id", "n_tokens", "sum_lp_fp", "avg_lp_fp")
   }
 
+  /** The a–z word tokenizer shared by the retrieval/index family
+    * (t9 tfidf, t16 BM25, t17 heavy hitters, t18 postings): lowercase,
+    * split on `[^a-z]+`, keep terms of at least `minTermLen` chars —
+    * ONE spelling for every operator whose DuckDB twin replays
+    * `regexp_split_to_array(lower(text), '[^a-z]+')`, so a tokenizer
+    * tweak has exactly one SQL twin family to update. `keep` columns
+    * ride along (empty for corpus-level consumers).
+    */
+  private def azTerms(docs: org.apache.spark.sql.DataFrame, keep: Seq[Column],
+                      textCol: Column, minTermLen: Int): org.apache.spark.sql.DataFrame =
+    docs.select(keep :+ explode(split(lower(textCol), "[^a-z]+")).as("term"): _*)
+      .filter(length(col("term")) >= minTermLen)
+
   /** BM25 retrieval scoring of the corpus against a fixed query-term
     * set — the relevance ranking the reference's consumers run over a
     * landed corpus (and the standard retrieval baseline next to the a*
@@ -186,19 +199,6 @@ object TextAnalysis {
     * parenthesization, same BIGINT→DOUBLE promotions, ln on the same
     * IEEE argument).
     */
-  /** The a–z word tokenizer shared by the retrieval/index family
-    * (t9 tfidf, t16 BM25, t17 heavy hitters, t18 postings): lowercase,
-    * split on `[^a-z]+`, keep terms of at least `minTermLen` chars —
-    * ONE spelling for every operator whose DuckDB twin replays
-    * `regexp_split_to_array(lower(text), '[^a-z]+')`, so a tokenizer
-    * tweak has exactly one SQL twin family to update. `keep` columns
-    * ride along (empty for corpus-level consumers).
-    */
-  private def azTerms(docs: org.apache.spark.sql.DataFrame, keep: Seq[Column],
-                      textCol: Column, minTermLen: Int): org.apache.spark.sql.DataFrame =
-    docs.select(keep :+ explode(split(lower(textCol), "[^a-z]+")).as("term"): _*)
-      .filter(length(col("term")) >= minTermLen)
-
   def bm25TopDocs(docs: org.apache.spark.sql.DataFrame, idCol: String,
                   textCol: String, queryTerms: Seq[String], k: Int,
                   minTermLen: Int = 3): org.apache.spark.sql.DataFrame = {
@@ -432,7 +432,7 @@ object TextAnalysis {
     // columns embed semantically-identical kernel subtrees, which
     // whole-stage codegen's subexpression elimination evaluates once
     // per row when they land in one projection (timed; spot-check with
-    // QBench if the consumer shape changes).
+    // Prof if the consumer shape changes).
     val st = graft.functions.HashExpressions.ngramStats(tokens, n)
     val total = st.getField("total")
     val distinct = st.getField("n_distinct")

@@ -736,18 +736,6 @@ object DocumentSuite {
         s"($j, ${HashKernels.minhashA(j)}::HUGEINT, ${HashKernels.minhashB(j)}::HUGEINT)")
         .mkString(", ") + "))"
 
-  /** The full d3 MinHash/LSH algebra (3-shingles, k=64, 16 bands) as one
-    * DuckDB query, with `restrict` slicing the emitted pair set — shared
-    * by d3 (`TRUE`), d11 (pairs involving the arriving batch) and the
-    * streaming st9 oracle (pairs involving any arrival).
-    */
-  /** The frozen-centroid d10 pair algebra: centroids sampled from AND
-    * sized by the slice `centsWhere` selects (the landed corpus —
-    * quantizer frozen at land time), every vector assigned against
-    * them, same-cell exact-cosine pairs at τ = 0.4 sliced by
-    * `restrict` — shared by d13 (pairs involving the arriving batch)
-    * and the streaming st10 oracle (pairs involving any arrival).
-    */
   /** The WITH-chain of the frozen-centroid algebra up to the per-pair
     * exact-cosine score `scored(id_a, id_b, cos)` — composable, the
     * semantic twin of [[minhashEstCtes]].
@@ -769,6 +757,13 @@ object DocumentSuite {
        |  FROM assign a JOIN assign b ON a.cid = b.cid AND a.id < b.id
        |  WHERE ($pairCond))""".stripMargin
 
+  /** The frozen-centroid d10 pair algebra: centroids sampled from AND
+    * sized by the slice `centsWhere` selects (the landed corpus —
+    * quantizer frozen at land time), every vector assigned against
+    * them, same-cell exact-cosine pairs at τ = 0.4 sliced by
+    * `restrict` — shared by d13 (pairs involving the arriving batch)
+    * and the streaming st10 oracle (pairs involving any arrival).
+    */
   private[queries] def semanticPairsSql(centsWhere: String, restrict: String): String =
     s"""${semanticScoredCtes(centsWhere)}
        |SELECT id_a, id_b, ROUND(cos, 6) AS cos
@@ -969,6 +964,11 @@ object DocumentSuite {
        |    CAST(len(list_filter(list_zip(sa, sb), x -> x[1] = x[2])) AS DOUBLE) / 64 AS ej
        |  FROM cand)""".stripMargin
 
+  /** The full d3 MinHash/LSH algebra (3-shingles, k=64, 16 bands) as one
+    * DuckDB query, with `restrict` slicing the emitted pair set — shared
+    * by d3 (`TRUE`), d11 (pairs involving the arriving batch) and the
+    * streaming st9 oracle (pairs involving any arrival).
+    */
   private[queries] def minhashPairsSql(restrict: String): String =
     s"""$minhashEstCtes
        |SELECT id_a, id_b, ROUND(ej, 4) AS est_jaccard
@@ -1065,15 +1065,19 @@ object DocumentSuite {
     * streams with one running winner per id, and the vector re-joins
     * by id afterwards). Order-identical: struct comparison is
     * lexicographic, negation flips cos to ascending, cid breaks ties
-    * ascending — and cosSqlZ is zero-guarded so no NaN can flip the
-    * winner. keep > 1 (the sample-sized query side) stays the window.
+    * ascending. cosSqlZ only guards a zero norm: a NaN component still
+    * gives a NaN cosine, which the window's DESC ranks FIRST while a
+    * bare MIN(-cos) ranks it last, so the aggregate pins NaN to +inf
+    * (first), as nearestCells' nanvl does. keep > 1 (the sample-sized
+    * query side) stays the window.
     */
   private def ivfAssignCte(filter: String, keep: Int, idAs: String, vecAs: String): String =
     if (keep == 1)
       s"""(SELECT w.id AS $idAs, e2.v AS $vecAs, struct_extract(w.m, 'cid') AS cid FROM (
-         |    SELECT e.id,
-         |      MIN(struct_pack(nc := -(${cosSqlZ("e.v", "ce.cw")}), cid := ce.cid)) AS m
-         |    FROM e, cents ce $filter GROUP BY e.id) w
+         |    SELECT id,
+         |      MIN(struct_pack(nc := -(CASE WHEN isnan(c) THEN 'inf'::DOUBLE ELSE c END), cid := cid)) AS m
+         |    FROM (SELECT e.id, ce.cid, ${cosSqlZ("e.v", "ce.cw")} AS c
+         |          FROM e, cents ce $filter) GROUP BY id) w
          |  JOIN e e2 ON e2.id = w.id)""".stripMargin
     else
       s"""(SELECT id AS $idAs, v AS $vecAs, cid FROM (

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.engine.GraftSession
+
 /** Structured Streaming operators over the `events` table (SURVEY.md
   * §2.4). The parquet file source stands in for a real stream: at
   * cluster scale the same plan reads Kafka/file drops incrementally;
@@ -257,14 +259,9 @@ object EventStreams {
     // only if they take the same lock, so the flip stays as narrow as
     // the drain itself; the gate runs queries sequentially.
     providerFlipLock.synchronized {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try drain(runningOrdinalPlan(spark, dir), OutputMode.Append())
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
+      GraftSession.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        drain(runningOrdinalPlan(spark, dir), OutputMode.Append())
       }
     }
 
@@ -457,21 +454,14 @@ object EventStreams {
     * confs are restored once the query has stopped.
     */
   private[streaming] def withDrainConf(spark: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val tuned = Seq(
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    GraftSession.withConfs(spark,
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.checkpointLocation" -> drainCheckpointRoot,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
-    val prev = tuned.map { case (k, _) => k -> spark.conf.getOption(k) }
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") {
       val q = start
       try q.processAllAvailable() finally q.stop()
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
-  }
 
   /** Run a finite streaming query into a memory sink and return the
     * materialized table. Package-visible so specs can drain an exposed

@@ -26,3 +26,11 @@ object FunctionBridge {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 }
+
+/** Bridge into the `private[spark]` listener bus: [[graft.Prof]] waits
+  * until every queued event has reached its listeners before it reads
+  * them, so a job-end event still in the queue is never lost.
+  */
+object BusBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}

@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Count plan operators per query from QBench's formatted explain output.
+"""Count plan operators per query from Prof's formatted explain output.
 
 Usage:
-  QBENCH_EXPLAIN=1 sbt --batch "runMain graft.QBench <key>[,<key>...] 1" > qb.log 2>&1
-  python3 tools/plan_counts.py qb.log            # or read stdin: ... | plan_counts.py
+  PROF_EXPLAIN=1 sbt --batch "runMain graft.Prof <key>[,<key>...] 1" > prof.log 2>&1
+  python3 tools/plan_counts.py prof.log          # or read stdin: ... | plan_counts.py
 
 Prints one JSON object keyed by query name. Per query it gives the
 counts of shuffle `Exchange` nodes, `BroadcastExchange` nodes, scan
@@ -20,7 +20,7 @@ import sys
 # a tree line: optional drawing prefix (`:`, `+-`, `|`, spaces), then
 # "<Operator> [args] (<id>)"
 TREE = re.compile(r"^[\s:|+\-]*([A-Za-z][\w]*)(?:[^()]*)\((\d+)\)\s*$")
-DONE = re.compile(r"^\[qbench\] (\S+) rep 1:")
+DONE = re.compile(r"^\[prof\] (\S+) rep 1:")
 
 
 def counts(lines):
