@@ -1,12 +1,14 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graft.BusBridge
 
@@ -21,11 +23,11 @@ import graft.engine.GraftSession
   * `runMain graft.Prof <key>[,<key>...] [reps]` against
   * `SPARK_GRAFT_SF_DIR` (default sf0.1). One listener lives for the
   * whole run and the listener bus is drained before each rep's jobs are
-  * read, so the job count is exact; the codegen figures are deltas of
-  * Spark's compile counter and compile-time sum. `PROF_EXPLAIN=1` dumps
-  * each key's formatted physical plan first (read by
-  * `tools/plan_counts.py`); it is opt-in because building an `st*` key
-  * runs its drain. Not part of the driver gate.
+  * read, so the job and task counts are exact; the codegen figures are
+  * deltas of Spark's compile counter and compile-time sum.
+  * `PROF_EXPLAIN=1` dumps each key's formatted physical plan first (read
+  * by `tools/plan_counts.py`); it is opt-in because building an `st*`
+  * key runs its drain. Not part of the driver gate.
   *
   * A rep runs `fn(spark, sfDir).queryExecution.toRdd.count()`, not
   * `count()`: count() re-plans the query through a fresh Aggregate, and
@@ -36,10 +38,16 @@ import graft.engine.GraftSession
 object Prof {
   final case class Job(id: Int, seconds: Double, site: String, desc: String)
 
-  /** A listener whose `record` returns the Spark jobs one action ran. */
+  /** What one action ran: its value, its jobs by id, and its task count. */
+  final case class Record[T](value: T, jobs: Seq[Job], tasks: Int)
+
+  /** A listener whose `record` returns the Spark jobs and tasks one
+    * action ran.
+    */
   private[graft] final class JobLog extends SparkListener {
     private val open = new ConcurrentHashMap[Int, (Long, String, String)]()
     private val done = new ConcurrentLinkedQueue[Job]()
+    private val tasks = new AtomicInteger()
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
       open.put(e.jobId, (e.time,
@@ -51,16 +59,19 @@ object Prof {
         done.add(Job(e.jobId, (e.time - t0) / 1e3, site, desc))
       }
 
-    /** `f`'s value and the jobs it ran, by id: jobs started before `f`
-      * are forgotten, and every event `f` posted is read.
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+
+    /** `f`'s value with the jobs and tasks it ran: events posted before
+      * `f` are forgotten, and every event `f` posted is read.
       */
-    def record[T](sc: SparkContext)(f: => T): (T, Seq[Job]) = {
+    def record[T](sc: SparkContext)(f: => T): Record[T] = {
       BusBridge.drain(sc)
       open.clear()
       done.clear()
+      tasks.set(0)
       val v = f
       BusBridge.drain(sc)
-      (v, done.asScala.toSeq.sortBy(_.id))
+      Record(v, done.asScala.toSeq.sortBy(_.id), tasks.get)
     }
   }
 
@@ -80,14 +91,14 @@ object Prof {
       if (explain) fn(spark, sfDir).explain("formatted")
       (1 to reps).foreach { r =>
         val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
-        val ((rows, wall), jobs) = log.record(spark.sparkContext) {
+        val Record((rows, wall), jobs, tasks) = log.record(spark.sparkContext) {
           val t0 = System.nanoTime()
           val n = fn(spark, sfDir).queryExecution.toRdd.count()
           (n, (System.nanoTime() - t0) / 1e9)
         }
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         val compileMs = (CodeGenerator.compileTime - ns0) / 1000000
-        println(f"[prof] $key rep $r: $wall%.2fs rows=$rows jobs=${jobs.size} " +
+        println(f"[prof] $key rep $r: $wall%.2fs rows=$rows jobs=${jobs.size} tasks=$tasks " +
           f"jobSum=${jobs.map(_.seconds).sum}%.2fs codegen=$compiles compiles/${compileMs}ms")
         jobs.foreach { j =>
           val d = if (j.desc.length > 60) j.desc.take(57) + "..." else j.desc

@@ -16,11 +16,20 @@ import org.apache.spark.sql.SparkSession
   *    q1–q32 alone compile about 370 distinct classes, so an LRU of 100
   *    cycled through them missed on almost every class and recompiled
   *    each plan's Java on every run. At 20–25 KB retained per entry
-  *    (source text plus bytecode) the cap pins at most about 13 MB. It
-  *    also bounds what a long ingest can hold: each pass of the
-  *    benchmark's st1 + st9 drain still compiles 37 classes it has not
-  *    seen before. The conf is static: Spark reads it once, when the
-  *    first query of the JVM generates code;
+  *    (source text plus bytecode) the cap pins at most about 13 MB. The
+  *    conf is static: Spark reads it once, when the first query of the
+  *    JVM generates code;
+  *  - session artifact isolation off: Spark keys that cache on the
+  *    context class loader as well as the source, and with isolation on
+  *    each streaming query's cloned session runs under a class loader of
+  *    its own, so every ingest drain missed the cache on every class.
+  *    graft adds no session artifacts, so isolation buys it nothing; off,
+  *    each pass of the benchmark's st1 + st9 drain compiles 0 classes
+  *    instead of 37;
+  *  - `file://` through [[GraftLocalFileSystem]] and [[GraftLocalFs]]:
+  *    without the native Hadoop library, Hadoop's local filesystem forks
+  *    `chmod` for every file and directory it creates (6.6–7.3 ms per
+  *    file measured, 0.17–0.21 ms without the fork);
   *  - the live status store keeps the last 10 jobs, stages, tasks and
   *    SQL executions (defaults 1000, 1000, 100000 and 1000): with the UI
   *    off nothing reads that history, and trimming it pays for the
@@ -43,6 +52,11 @@ object GraftSession {
       // 2 MB does not move the local benchmark, which is overhead-bound)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", "512")
+      // the codegen cache key is (context class loader, source): with
+      // isolation on, each streaming query's session clone misses it
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .config("spark.ui.retainedJobs", "10")
       .config("spark.ui.retainedStages", "10")

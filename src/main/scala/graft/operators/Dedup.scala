@@ -1244,29 +1244,39 @@ object Dedup {
     // by the ContextCleaner once the probe's plan is garbage.
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
       .localCheckpoint()
-    probeMinhashCore(spark, bSigs, tableBase, meta, threshold)
+    probeMinhashCore(spark, bSigs, tableBase, meta, threshold, batchIds = None)
   }
 
   /** Probe the index with precomputed batch signatures (the shared core
     * of [[incrementalMinhashPairs]] and [[probeAbsorbMinhashBatch]]).
+    * `batchIds` is the batch's distinct id count when the caller knows
+    * it.
     */
   private def probeMinhashCore(spark: SparkSession, bSigs: DataFrame,
                                tableBase: String, meta: MinhashMeta,
-                               threshold: Double): DataFrame = {
+                               threshold: Double, batchIds: Option[Int]): DataFrame = {
     val idxSigs = spark.table(s"${tableBase}_sigs")
     val idxBands = spark.table(s"${tableBase}_bands")
     val bBands = bandRows(bSigs, meta.bands, meta.bandRowCount)
       .withColumn("bkey", xxhash64(col("band"), col("bh")))
-    // the batch's distinct bkey set (|batch|·bands values) prunes the
-    // index buckets. bBands broadcasts whole anyway, so collecting its
-    // bkey column (and deduping driver-side) is bounded by the same
-    // contract — and skips the exchange + AQE stage job a distinct+limit
-    // collect pays
-    val bkeys = withDesc(spark, "d11: probe bkeys") {
-      bBands.select("bkey").collect()
-    }.map(_.getLong(0)).distinct
-    val idxPruned = bucketPruned(idxBands, "bkey", bkeys, meta.nBuckets, "d11",
-      "probe_bkeys")
+    // the batch's distinct bkey set (at most |batch ids|·bands values)
+    // prunes the index buckets. bBands broadcasts whole anyway, so
+    // collecting its bkey column (and deduping driver-side) is bounded by
+    // the same contract — and skips the exchange + AQE stage job a
+    // distinct+limit collect pays. When even the bound is over the cap
+    // (every multi-doc batch at verification-scale bucket counts) the
+    // prune cannot fire, and the collect job is skipped
+    val cap = pruneKeyCap(meta.nBuckets)
+    val idxPruned =
+      if (batchIds.exists(_.toLong * meta.bands > cap)) {
+        graft.Metrics.set("d11", "prune_cap" -> cap.toLong, "bucket_pruned" -> false)
+        idxBands
+      } else {
+        val bkeys = withDesc(spark, "d11: probe bkeys") {
+          bBands.select("bkey").collect()
+        }.map(_.getLong(0)).distinct
+        bucketPruned(idxBands, "bkey", bkeys, meta.nBuckets, "d11", "probe_bkeys")
+      }
     // band+bh make the bkey match exact (bkey alone could collide)
     // no distinct on cross alone: the final distinct below dedups the
     // union, and its partial (map-side) aggregate already collapses the
@@ -1365,11 +1375,12 @@ object Dedup {
     * [[pruneKeyCap]] ids; past the cap (a partial replay of a large
     * batch, reachable only after a crash) it falls back to a
     * checkpointed anti-join. `idCol` names the batch's key column; the
-    * landed table's is always `id`.
+    * landed table's is always `id`. The surviving rows come with their
+    * distinct id count.
     */
   private[graft] def guardedBatch(spark: SparkSession, base: DataFrame,
                                   landedTable: String, nBuckets: Int,
-                                  tag: String, idCol: String = "id"): Option[DataFrame] = {
+                                  tag: String, idCol: String = "id"): Option[(DataFrame, Int)] = {
     val landed = spark.table(landedTable).select(col("id"))
     val cap = Dedup.pruneKeyCap(nBuckets)
     // ONE narrow collect of the raw id column, dedup driver-side: the
@@ -1382,22 +1393,24 @@ object Dedup {
     }.map(_.getLong(0)).distinct
     val slice = bucketPruned(landed, "id", ids, nBuckets, tag, "batch_ids")
     if (ids.isEmpty) return None // empty batch: nothing to probe or absorb
-    // landed ∩ batch, via a join against the LOCAL RELATION of the
-    // collected ids. Its broadcast still builds in a Spark job of its own
-    // (see Similarity.localTable), so the intersect is TWO jobs: the
-    // 1-stage build and the scan-and-join collect (Prof: 2 `<tag>:
-    // landed-intersect` jobs per micro-batch). The broadcast hint pins
-    // the join strategy, so AQE would only add a stage job — off
+    // landed ∩ batch. Under the cap the pruned slice already is that
+    // intersection, and its collect is one scan job. Over it, the whole
+    // landed table joins the LOCAL RELATION of the collected ids, whose
+    // broadcast builds in a Spark job of its own (see
+    // Similarity.localTable): TWO jobs, the 1-stage build and the
+    // scan-and-join collect. The broadcast hint pins the join strategy,
+    // so AQE would only add a stage job — off
     val existing = withDesc(spark, s"$tag: landed-intersect") {
       import spark.implicits._
-      withAqeOff(slice.join(broadcast(ids.toSeq.toDF("id")), Seq("id")))(_.collect())
+      if (ids.length <= cap) slice.collect()
+      else withAqeOff(slice.join(broadcast(ids.toSeq.toDF("id")), Seq("id")))(_.collect())
     }.map(_.getLong(0)).toSet
-    if (existing.isEmpty) Some(base)
+    if (existing.isEmpty) Some((base, ids.length))
     else {
       val freshIds = ids.filterNot(existing)
       if (freshIds.isEmpty) None // full replay: skip the cycle
       else if (freshIds.length <= cap)
-        Some(base.filter(col(idCol).isInCollection(freshIds.toSeq)))
+        Some((base.filter(col(idCol).isInCollection(freshIds.toSeq)), freshIds.length))
       else {
         // huge fresh remainder: a literal filter would tax every
         // downstream transform — take the checkpointed anti-join
@@ -1405,7 +1418,7 @@ object Dedup {
           base.join(landed.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
             .localCheckpoint()
         }
-        if (fresh.isEmpty) None else Some(fresh)
+        if (fresh.isEmpty) None else Some((fresh, freshIds.length))
       }
     }
   }
@@ -1426,12 +1439,15 @@ object Dedup {
     * the batch's own rows and emit self-pairs. `meta` is the previous
     * cycle's return (the drain threads it; see
     * [[graft.streaming.DocStreams.drain]]), and the advanced meta is
-    * returned, not written.
+    * returned, not written. `batchIds`, the batch's distinct id count
+    * when the caller holds it (the drain's guard does), lets the probe
+    * skip a bucket-prune key collect that could not prune.
     */
   private[graft] def probeAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
                                              idCol: String, textCol: String,
                                              tableBase: String, threshold: Double,
                                              spoolDir: String, meta: MinhashMeta,
+                                             batchIds: Option[Int] = None,
                                              classify: Boolean = false): MinhashMeta = {
     val bSigs = withDesc(spark, "cycle: batch signatures") {
       minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
@@ -1440,7 +1456,7 @@ object Dedup {
     // verdicts fold over the FULL batch, not bSigs: a doc too short to
     // shingle (< n tokens) has no signature and can never pair, but it
     // still arrived and its verdict row (trivially is_new) must exist
-    spoolCycle(spark, probeMinhashCore(spark, bSigs, tableBase, meta, threshold),
+    spoolCycle(spark, probeMinhashCore(spark, bSigs, tableBase, meta, threshold, batchIds),
       newDocs.select(col(idCol).cast("long").as("doc_id")), classify, spoolDir)
     absorbMinhashCore(spark, bSigs, tableBase, meta)
   }

@@ -778,7 +778,7 @@ object Similarity {
       case None => // full replay (or an empty batch): nothing to append
         Dedup.staleAdvisory("a10", meta.nDocs, meta.nCents)
         meta
-      case Some(fresh) =>
+      case Some((fresh, _)) =>
         val advanced = absorbIvfPqCore(spark, fresh, tableBase, meta,
           spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"))
         IvfPqIndex.persist(spark, tableBase, advanced)

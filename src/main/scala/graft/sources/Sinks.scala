@@ -229,8 +229,8 @@ object Sinks {
     * un-co-partitioned N-task input writes up to N files per bucket
     * PER WRITE — at index scale (thousands of buckets × a wide scan)
     * that is millions of files from the land alone. After the
-    * repartition each task holds exactly one bucket's rows and every
-    * write (land or append) emits at most one file per touched bucket.
+    * repartition each task holds whole buckets and every write (land
+    * or append) emits at most one file per touched bucket.
     * The repartition is free when the input is already hash-partitioned
     * on the key (e.g. out of a groupBy on the same column — Catalyst
     * elides the redundant exchange). Callers feeding this writer FROM a
@@ -239,39 +239,36 @@ object Sinks {
     * elides the repartition and then disables the bucketed scan,
     * silently destroying the one-file-per-bucket layout.
     *
-    * PARALLELISM: the co-partition also caps the write at `nBuckets`
-    * tasks, so `nBuckets` must be sized to the data being landed —
-    * corpus-scale lands take corpus-scale bucket counts (thousands at
-    * 100 TB; the same sizing that makes the probe-side bucket prune
-    * effective). The default 32 in callers is the verification-scale
-    * setting, not a production one; a large land through a small bucket
-    * count is a parallelism cliff (r16 ADVICE), and the fix is the
-    * bucket count, not skipping the co-partition (which would
-    * reintroduce the one-file-per-(task, bucket) debt).
+    * PARALLELISM: every write co-partitions into the largest divisor d
+    * of `nBuckets` that is not above the session's
+    * `spark.sql.shuffle.partitions`, so it runs one task wave. That keeps
+    * one file per touched bucket: repartition and the bucketed writer
+    * use the same hash family (Murmur3, seed 42; HashPartitioning's
+    * partitionIdExpression), and h ≡ h' (mod nBuckets) implies
+    * h ≡ h' (mod d) when d divides nBuckets, so every bucket's rows land
+    * wholly inside one task. Tasks past the slot count only add waves,
+    * and each write task pays 25–28 ms of CPU deserializing the job's
+    * Hadoop configuration (other tasks ~1 ms): at `local[4]` a 32-bucket
+    * land ran 32 tasks on 4 slots. Appends are batch-sized (the absorb
+    * path) and also keep d ≤ 8, so a cluster-sized shuffle-partition
+    * count cannot bring back a wave of near-empty write tasks on every
+    * micro-batch. A land's write parallelism is bounded by `nBuckets`
+    * too, so corpus-scale lands take corpus-scale bucket counts
+    * (thousands at 100 TB; the same sizing that makes the probe-side
+    * bucket prune effective). The default 32 in callers is the
+    * verification-scale setting. A large land through a small bucket
+    * count is a parallelism cliff whose fix is the bucket count, not
+    * skipping the co-partition (which would bring back the
+    * one-file-per-(task, bucket) debt).
     */
   def bucketed(df: DataFrame, table: String, bucketCol: String, nBuckets: Int,
                mode: SaveMode = SaveMode.Overwrite,
                path: Option[String] = None): Unit = {
-    // Appends are batch-sized (the absorb path), so co-partitioning into
-    // the FULL bucket count is a task-wave cliff in the other direction:
-    // a few-thousand-row batch absorbed into a production-scale index
-    // (thousands of buckets) would launch thousands of near-empty write
-    // tasks per micro-batch. Hash-partitioning by the bucket column into
-    // any DIVISOR d of nBuckets keeps the one-file-per-touched-bucket
-    // invariant intact — repartition and the bucketed writer use the
-    // same hash family (Murmur3, seed 42; HashPartitioning's
-    // partitionIdExpression), and h ≡ h' (mod nBuckets) implies
-    // h ≡ h' (mod d) when d divides nBuckets, so every bucket's rows
-    // still land wholly inside one task. Lands (Overwrite) keep the
-    // full-width co-partition: they are corpus-sized and WANT nBuckets
-    // of write parallelism.
-    val parts =
-      if (mode == SaveMode.Append)
-        // largest divisor ≤ 8, trying EVERY width: the old powers-of-two
-        // probe (8,4,2,1) serialized any odd bucket count (15, 21, any
-        // odd production sizing) through ONE task and missed d = 7/6/5/3
-        (8 to 1 by -1).find(nBuckets % _ == 0).getOrElse(1)
-      else nBuckets
+    val slots = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val width = if (mode == SaveMode.Append) math.min(8, slots) else slots
+    // trying EVERY width: a powers-of-two probe would serialize any odd
+    // bucket count (15, 21, any odd production sizing) through ONE task
+    val parts = (math.min(width, nBuckets) to 1 by -1).find(nBuckets % _ == 0).getOrElse(1)
     val w = df.repartition(parts, col(bucketCol)).write.mode(mode)
       .bucketBy(nBuckets, bucketCol)
       .sortBy(bucketCol)

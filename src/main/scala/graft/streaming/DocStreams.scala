@@ -62,7 +62,8 @@ object DocStreams {
     *     the redelivery guard: `foreachBatch` is
     *     at-least-once, and a replayed batch re-absorbs nothing
     *     (keys, not transactions). An empty result skips the cycle.
-    *  2. `cycle(fresh, batchId, meta)` probes or classifies the batch
+    *  2. `cycle(fresh, nIds, batchId, meta)` (`nIds` the guard's
+    *     distinct id count of `fresh`) probes or classifies the batch
     *     against the index AS OF ITS ARRIVAL, appends its verdicts to
     *     the spool, then absorbs the batch, and returns the advanced
     *     meta. The spool append materializes the probe before the
@@ -93,7 +94,7 @@ object DocStreams {
                               landed: M, input: DataFrame, idCol: String,
                               dir: String, autoCompactEvery: Int,
                               schema: StructType)
-                             (cycle: (DataFrame, Long, M) => M): DataFrame = {
+                             (cycle: (DataFrame, Int, Long, M) => M): DataFrame = {
     val arriveDir = arrivalDrops(dir, idCol)(input.filter(col(idCol) % 5 >= 3))
     val stream = spark.readStream.schema(input.schema)
       .option("maxFilesPerTrigger", "1").parquet(arriveDir)
@@ -105,8 +106,8 @@ object DocStreams {
       stream.writeStream.outputMode(OutputMode.Append())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           Dedup.guardedBatch(spark, batch, guard, nBuckets,
-            s"${run.family}.guard", idCol).foreach { fresh =>
-            meta = cycle(fresh, batchId, meta)
+            s"${run.family}.guard", idCol).foreach { case (fresh, nIds) =>
+            meta = cycle(fresh, nIds, batchId, meta)
             cycles += 1
             if (autoCompactEvery > 0 && cycles % autoCompactEvery == 0) {
               index.compact(spark, run.tableBase)
@@ -150,9 +151,9 @@ object DocStreams {
     val landed = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
       "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
     drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
-        pairSchema) { (fresh, _, meta) =>
+        pairSchema) { (fresh, nIds, _, meta) =>
       Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
-        threshold = 0.5, run.spool, meta)
+        threshold = 0.5, run.spool, meta, Some(nIds))
     }
   }
 
@@ -182,7 +183,7 @@ object DocStreams {
       "vec_id", "embedding", run.tableBase, run.idx)
     val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
     drain(spark, run, Dedup.SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
-        cosPairSchema) { (fresh, _, meta) =>
+        cosPairSchema) { (fresh, _, _, meta) =>
       Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
         run.tableBase, threshold, run.spool, meta, cents)
     }
@@ -257,9 +258,9 @@ object DocStreams {
     val landed = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
       "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
     drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
-        classSchema("doc_id")) { (fresh, _, meta) =>
+        classSchema("doc_id")) { (fresh, nIds, _, meta) =>
       Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
-        threshold = 0.5, run.spool, meta, classify = true)
+        threshold = 0.5, run.spool, meta, Some(nIds), classify = true)
     }
   }
 
@@ -293,7 +294,7 @@ object DocStreams {
     Dedup.landSegDfIndex(spark, docs.filter(col("doc_id") % 5 < 3),
       "doc_id", "text", window, run.tableBase, run.idx, nBuckets = SegDfBuckets)
     drain(spark, run, Dedup.SegDfIndex, (), docs, "doc_id", dir, autoCompactEvery,
-        cleanSchema) { (fresh, batchId, _) =>
+        cleanSchema) { (fresh, _, batchId, _) =>
       Dedup.classifyAbsorbSegBatch(spark, fresh, "doc_id", "text", run.tableBase,
         batchId, window, minDf, run.spool, nBuckets = SegDfBuckets)
     }
@@ -317,7 +318,7 @@ object DocStreams {
       "vec_id", "embedding", run.tableBase, run.idx)
     val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
     drain(spark, run, Dedup.SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
-        classSchema("vec_id")) { (fresh, _, meta) =>
+        classSchema("vec_id")) { (fresh, _, _, meta) =>
       Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
         run.tableBase, threshold, run.spool, meta, cents, classify = true)
     }
@@ -356,7 +357,7 @@ object DocStreams {
     val quantizers = (Similarity.localTable(spark, s"${run.tableBase}_cents"),
       Similarity.localTable(spark, s"${run.tableBase}_cb"))
     drain(spark, run, Similarity.IvfPqIndex, landed, embs, "vec_id", dir, autoCompactEvery,
-        verdictSchema) { (fresh, _, meta) =>
+        verdictSchema) { (fresh, _, _, meta) =>
       Similarity.probeAbsorbIvfPqBatch(spark, fresh, "vec_id", "embedding",
         run.tableBase, k, nProbe, run.spool, meta, quantizers)
     }

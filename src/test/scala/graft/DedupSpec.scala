@@ -1299,12 +1299,13 @@ class DedupSpec extends SparkSpec {
       def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
         df.select("doc_id").collect().map(_.getLong(0)).toSet
       def batch(r: Range) = r.map(_.toLong).toDF("doc_id")
-      // all-new batch: passes through untouched
+      // all-new batch: passes through untouched (each survivor comes with
+      // its distinct id count)
       val fresh = Dedup.guardedBatch(spark, batch(20 until 30), "gb_big", 512, "t.g", "doc_id")
-      assert(fresh.isDefined && ids(fresh.get) == (20L until 30L).toSet)
+      assert(fresh.isDefined && ids(fresh.get._1) == (20L until 30L).toSet && fresh.get._2 == 10)
       // partial replay: exactly the landed ids are dropped
       val part = Dedup.guardedBatch(spark, batch(5 until 15), "gb_big", 512, "t.g", "doc_id")
-      assert(part.isDefined && ids(part.get) == (10L until 15L).toSet)
+      assert(part.isDefined && ids(part.get._1) == (10L until 15L).toSet && part.get._2 == 5)
       // full replay and empty batch: the cycle is skipped
       assert(Dedup.guardedBatch(spark, batch(0 until 10), "gb_big", 512, "t.g", "doc_id").isEmpty)
       assert(Dedup.guardedBatch(spark, batch(0 until 0), "gb_big", 512, "t.g", "doc_id").isEmpty)
@@ -1312,10 +1313,10 @@ class DedupSpec extends SparkSpec {
       // through the semi-join + anti-join fallback paths
       mk("gb_small", 8)
       val over = Dedup.guardedBatch(spark, batch(5 until 25), "gb_small", 8, "t.g", "doc_id")
-      assert(over.isDefined && ids(over.get) == (10L until 25L).toSet)
+      assert(over.isDefined && ids(over.get._1) == (10L until 25L).toSet && over.get._2 == 15)
       assert(Dedup.guardedBatch(spark, (0L until 10L).toDF("doc_id"), "gb_small", 8, "t.g", "doc_id").isEmpty)
       val freshO = Dedup.guardedBatch(spark, batch(30 until 50), "gb_small", 8, "t.g", "doc_id")
-      assert(freshO.isDefined && ids(freshO.get) == (30L until 50L).toSet)
+      assert(freshO.isDefined && ids(freshO.get._1) == (30L until 50L).toSet && freshO.get._2 == 20)
     } finally Seq("gb_big", "gb_small").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }

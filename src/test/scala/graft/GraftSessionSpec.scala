@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Pins the session confs the engine's correctness and scale posture
   * rest on — a drift here would not fail any single query's test but
   * would change results (timezone), plans (broadcast threshold, AQE),
   * resilience (checkpoint dir) or per-query codegen cost (generated-class
-  * cache size) everywhere at once.
+  * cache size and key) everywhere at once.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -34,6 +35,13 @@ class GraftSessionSpec extends SparkSpec {
     val sc = spark.sparkContext.getConf
     Seq("spark.ui.retainedJobs", "spark.ui.retainedStages", "spark.ui.retainedTasks",
       "spark.sql.ui.retainedExecutions").foreach(k => assert(sc.get(k).toInt == 10, k))
+    // the codegen cache keys on the context class loader too: with
+    // artifact isolation on, each streaming query's session clone misses
+    assert(!spark.conf.get("spark.sql.artifact.isolation.enabled").toBoolean)
+    // file:// without a forked chmod per created file, for both Hadoop APIs
+    assert(sc.get("spark.hadoop.fs.file.impl") == classOf[graft.engine.GraftLocalFileSystem].getName)
+    assert(sc.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[graft.engine.GraftLocalFs].getName)
   }
 
   test("codegen cache holds q1–q32: a second run of every query compiles no class") {
@@ -49,5 +57,20 @@ class GraftSessionSpec extends SparkSpec {
     val recompiled = runAll().filter(_._2 > 0)
     assert(recompiled.map(_._2).sum == 0,
       s"classes recompiled by the second run, per query: ${recompiled.mkString(", ")}")
+  }
+
+  test("codegen cache holds an ingest drain: a second st9 drain compiles no class") {
+    // each drain runs its stream in a cloned session; its classes must hit
+    // the JVM-wide cache the first drain filled
+    val st9 = SparkEntry.queries("st9_stream_incremental_dedup")
+    def drain(): (Long, Long) = {
+      val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+      st9(spark, sfDir).queryExecution.toRdd.count()
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, CodeGenerator.compileTime - ns0)
+    }
+    drain()
+    val (classes, ns) = drain()
+    assert(classes == 0 && ns == 0,
+      s"the second st9 drain compiled $classes classes in ${ns / 1000000} ms")
   }
 }

@@ -87,8 +87,53 @@ class SinksSpec extends SparkSpec {
     }
   }
 
+  test("bucketed land runs one task wave: 32 buckets at 4 shuffle partitions write in 4 tasks") {
+    // the land co-partitions into the largest divisor of nBuckets not above
+    // the session's shuffle partitions; each task writes whole buckets, so
+    // the layout stays one file per bucket and the rows are those of a
+    // 32-task land
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val nBuckets = 32
+    val rows = spark.range(0, 2000, 1, 3).select(col("id"), (col("id") % 7).as("v"))
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo.stageId -> e.stageInfo.numTasks)
+    }
+    /** Land `rows` at `width` shuffle partitions; (write-stage tasks, files, rows). */
+    def land(t: String, width: Int): (Int, Long, Set[(Long, Long)]) = {
+      val path = tmp(s"sink-bkt-$t")
+      val sc = spark.sparkContext
+      org.apache.spark.sql.graft.BusBridge.drain(sc)
+      stages.clear()
+      graft.engine.GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> width.toString) {
+        Sinks.bucketed(rows, t, "id", nBuckets, path = Some(path))
+      }
+      org.apache.spark.sql.graft.BusBridge.drain(sc)
+      val writeTasks = stages.toArray(Array.empty[(Int, Int)]).maxBy(_._1)._2
+      val s = Files.walk(java.nio.file.Paths.get(path))
+      val files = try s.filter(_.toString.endsWith(".parquet")).count() finally s.close()
+      (writeTasks, files,
+        spark.table(t).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (narrowTasks, narrowFiles, narrowRows) = land("bkt_land_narrow", 4)
+      val (wideTasks, wideFiles, wideRows) = land("bkt_land_wide", 32)
+      assert(narrowTasks == 4, s"the 4-partition land wrote in $narrowTasks tasks")
+      assert(wideTasks == 32, s"the 32-partition land wrote in $wideTasks tasks")
+      assert(narrowFiles <= nBuckets && wideFiles <= nBuckets,
+        s"one file per non-empty bucket: $narrowFiles and $wideFiles files")
+      assert(narrowRows.size == 2000 && narrowRows == wideRows)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      Seq("bkt_land_narrow", "bkt_land_wide").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("bucketed append's narrowed task wave keeps one file per touched bucket") {
-    // Appends co-partition into a DIVISOR of nBuckets (8 here for 32) —
+    // Appends co-partition into a DIVISOR of nBuckets (at most 8, and at
+    // most the session's shuffle partitions: 4 here for 32) —
     // the batch-sized absorb path must not launch an nBuckets-wide task
     // wave — and that is only sound if repartition's hash family equals
     // the writer's bucket-id hash, so every bucket's rows still land

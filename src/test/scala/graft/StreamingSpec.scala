@@ -632,7 +632,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val err = intercept[Exception] {
         DocStreams.drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id",
-            sfDir, autoCompactEvery = 0, schema) { (fresh, _, meta) =>
+            sfDir, autoCompactEvery = 0, schema) { (fresh, _, _, meta) =>
           cycles += 1
           if (cycles == 2) throw new IllegalStateException("injected second-cycle failure")
           firstSigs = Dedup.minhashSignatures(fresh, "doc_id", "text", 3, 64).count()
