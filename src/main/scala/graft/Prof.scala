@@ -29,6 +29,11 @@ import graft.engine.GraftSession
   * by `tools/plan_counts.py`); it is opt-in because building an `st*`
   * key runs its drain. Not part of the driver gate.
   *
+  * Each rep line gives the rep's wall time and, within it, `build=`:
+  * the time `fn(spark, sfDir)` takes to construct the DataFrame (table
+  * loads, driver-side collects, an `st*` key's whole drain) before its
+  * rows are counted.
+  *
   * A rep runs `fn(spark, sfDir).queryExecution.toRdd.count()`, not
   * `count()`: count() re-plans the query through a fresh Aggregate, and
   * column pruning then drops whatever the count does not need — map-only
@@ -91,14 +96,16 @@ object Prof {
       if (explain) fn(spark, sfDir).explain("formatted")
       (1 to reps).foreach { r =>
         val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
-        val Record((rows, wall), jobs, tasks) = log.record(spark.sparkContext) {
+        val Record((rows, build, wall), jobs, tasks) = log.record(spark.sparkContext) {
           val t0 = System.nanoTime()
-          val n = fn(spark, sfDir).queryExecution.toRdd.count()
-          (n, (System.nanoTime() - t0) / 1e9)
+          val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
+          val n = df.queryExecution.toRdd.count()
+          (n, (t1 - t0) / 1e9, (System.nanoTime() - t0) / 1e9)
         }
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         val compileMs = (CodeGenerator.compileTime - ns0) / 1000000
-        println(f"[prof] $key rep $r: $wall%.2fs rows=$rows jobs=${jobs.size} tasks=$tasks " +
+        println(f"[prof] $key rep $r: $wall%.2fs build=$build%.2fs rows=$rows jobs=${jobs.size} tasks=$tasks " +
           f"jobSum=${jobs.map(_.seconds).sum}%.2fs codegen=$compiles compiles/${compileMs}ms")
         jobs.foreach { j =>
           val d = if (j.desc.length > 60) j.desc.take(57) + "..." else j.desc

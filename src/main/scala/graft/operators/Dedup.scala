@@ -1393,17 +1393,14 @@ object Dedup {
     }.map(_.getLong(0)).distinct
     val slice = bucketPruned(landed, "id", ids, nBuckets, tag, "batch_ids")
     if (ids.isEmpty) return None // empty batch: nothing to probe or absorb
-    // landed ∩ batch. Under the cap the pruned slice already is that
-    // intersection, and its collect is one scan job. Over it, the whole
-    // landed table joins the LOCAL RELATION of the collected ids, whose
-    // broadcast builds in a Spark job of its own (see
-    // Similarity.localTable): TWO jobs, the 1-stage build and the
-    // scan-and-join collect. The broadcast hint pins the join strategy,
-    // so AQE would only add a stage job — off
+    // landed ∩ batch, in one scan job. Under the cap the pruned slice
+    // already is that intersection. Over it, the collected ids filter
+    // the whole table: a join to the LOCAL RELATION of the same ids
+    // pays a second job for its broadcast build (see
+    // Similarity.localTable)
     val existing = withDesc(spark, s"$tag: landed-intersect") {
-      import spark.implicits._
-      if (ids.length <= cap) slice.collect()
-      else withAqeOff(slice.join(broadcast(ids.toSeq.toDF("id")), Seq("id")))(_.collect())
+      (if (ids.length <= cap) slice else landed.filter(col("id").isInCollection(ids.toSeq)))
+        .collect()
     }.map(_.getLong(0)).toSet
     if (existing.isEmpty) Some((base, ids.length))
     else {

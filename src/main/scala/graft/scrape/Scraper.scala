@@ -165,7 +165,8 @@ object Scraper {
     // layout change breaks EVERY page of a large crawl
     parseFailDf.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$spool/parse_failures")
-    val parseFailures = spark.read.parquet(s"$spool/parse_failures")
+    // read back with the schema just written: no footer-inference job
+    val parseFailures = spark.read.schema(parseFailDf.schema).parquet(s"$spool/parse_failures")
     warnLedger(parseFailures, warn, "fetched but failed to parse and was skipped",
       total => s"scrape: $total page(s) fetched but failed to parse; " +
         "see the parse_failures ledger")
@@ -177,7 +178,7 @@ object Scraper {
       parsed, existing)
     val landed = build.tables.map { case (t, df) =>
       df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$spool/$t")
-      t -> spark.read.parquet(s"$spool/$t")
+      t -> spark.read.schema(df.schema).parquet(s"$spool/$t")
     }
     for (url <- jdbcUrl; table <- InsertOrder)
       Sinks.jdbcUpsert(landed(table), url, table, NaturalKeys(table), 8, 1000)

@@ -68,29 +68,11 @@ object EventStreams {
     * A streaming source needs an explicit schema, and the physical type
     * of `ts` varies across testdata generations (nanos LONG vs micros
     * TIMESTAMP_NTZ — see [[graft.sources.Tables.normalizeEventTs]]), so
-    * the schema is taken from a one-footer batch peek at the same file
-    * and the ts normalization is shared with the batch loader.
+    * the schema is taken from a batch peek at the same files, through
+    * the session's schema memo ([[graft.sources.Tables.parquet]]): only
+    * the first peek of a file set reads a footer, and the ts
+    * normalization is shared with the batch loader.
     */
-  // One footer peek per (session, dir): streamStreamJoin builds two
-  // stream sides and a 7-query gate builds many, so an uncached peek
-  // would re-read the events footer (and register a throwaway batch
-  // relation) once per call. The schema of a given file is immutable
-  // for the life of a session, so a memo is safe. WEAKLY keyed by the
-  // session: a strong session key would pin every stopped session (and
-  // its whole state) for the JVM's lifetime in long-lived multi-session
-  // processes; with weak keys the entry dies with the session.
-  private val schemaCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, StructType]]()
-  private def cachedSchema(spark: SparkSession, dir: String)
-                          (peek: => StructType): StructType = {
-    val perSession = schemaCache.synchronized {
-      schemaCache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]())
-    }
-    perSession.computeIfAbsent(dir, _ => peek)
-  }
-
   /** @param maxFilesPerTrigger bound each micro-batch to this many
     *   files — the backfill throttle: pointing a fresh query at a year
     *   of landed files with no bound makes batch 1 process the whole
@@ -103,8 +85,8 @@ object EventStreams {
     // peek with the SAME glob the stream reads: a multi-file layout
     // (events_1.parquet..events_N.parquet — exactly what the wildcard
     // below enables) has no literal events.parquet to peek at
-    val schema = cachedSchema(spark, dir)(
-      spark.read.option("pathGlobFilter", "events*.parquet").parquet(dir).schema)
+    val schema = graft.sources.Tables.parquet(spark, dir,
+      Map("pathGlobFilter" -> "events*.parquet")).schema
     // events*.parquet, not events.parquet: the stream root is the sf dir
     // (so the glob must exclude the OTHER tables), but a real deployment
     // lands events as a SEQUENCE of files — a single-file glob would
@@ -318,7 +300,7 @@ object EventStreams {
     * drain is oracle-comparable.
     */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val customers = spark.read.parquet(s"$dir/customer.parquet")
+    val customers = graft.sources.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val joined = eventStream(spark, dir)
       .join(broadcast(customers), col("user_id") === col("c_custkey"))

@@ -1310,7 +1310,7 @@ class DedupSpec extends SparkSpec {
       assert(Dedup.guardedBatch(spark, batch(0 until 10), "gb_big", 512, "t.g", "doc_id").isEmpty)
       assert(Dedup.guardedBatch(spark, batch(0 until 0), "gb_big", 512, "t.g", "doc_id").isEmpty)
       // over-cap (nBuckets=8 -> cap=12 < 20 batch ids): same three verdicts
-      // through the semi-join + anti-join fallback paths
+      // through the unpruned intersect + anti-join fallback paths
       mk("gb_small", 8)
       val over = Dedup.guardedBatch(spark, batch(5 until 25), "gb_small", 8, "t.g", "doc_id")
       assert(over.isDefined && ids(over.get._1) == (10L until 25L).toSet && over.get._2 == 15)
@@ -1319,5 +1319,35 @@ class DedupSpec extends SparkSpec {
       assert(freshO.isDefined && ids(freshO.get._1) == (30L until 50L).toSet && freshO.get._2 == 20)
     } finally Seq("gb_big", "gb_small").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("guardedBatch over the cap: one landed-intersect job, the join spelling's survivors") {
+    val dir = graft.sources.Spool.tempRoot("guarded_batch_cap")
+    // landed ids 0..9 over 8 buckets (cap 12); a 20-id partial replay
+    graft.sources.Sinks.bucketed((0L until 10L).toDF("id"), "gb_cap", "id", 8,
+      path = Some(s"$dir/gb_cap"))
+    val sc = spark.sparkContext
+    val log = new Prof.JobLog
+    sc.addSparkListener(log)
+    try {
+      val batchIds = 5L until 25L
+      val rec = log.record(sc)(
+        Dedup.guardedBatch(spark, batchIds.toDF("doc_id"), "gb_cap", 8, "t.cap", "doc_id"))
+      assert(graft.Metrics.get("t.cap").exists(_("bucket_pruned") == false),
+        "expected the over-cap branch")
+      assert(rec.jobs.count(_.desc == "t.cap: landed-intersect") == 1,
+        s"landed-intersect jobs: ${rec.jobs}")
+      // the join spelling: the landed ids joined to the broadcast batch ids
+      val hit = spark.table("gb_cap").select("id")
+        .join(broadcast(batchIds.toDF("id")), Seq("id"))
+        .collect().map(_.getLong(0)).toSet
+      val want = batchIds.filterNot(hit).toSet
+      val (fresh, nIds) = rec.value.get
+      assert(fresh.select("doc_id").collect().map(_.getLong(0)).toSet == want)
+      assert(nIds == want.size && want.size == 15)
+    } finally {
+      sc.removeSparkListener(log)
+      spark.sql("DROP TABLE IF EXISTS gb_cap")
+    }
   }
 }
