@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -63,7 +66,7 @@ object Verify {
           .mode("overwrite").parquet(s"$outDir/$name")
         System.err.println(f"[verify ${i + 1}%2d/${names.size}] $name ok " +
           f"${(System.nanoTime() - t0) / 1e9}%.1fs (total ${(System.nanoTime() - t00) / 1e9}%.0fs)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(f"[verify ${i + 1}%2d/${names.size}] $name FAILED " +
           f"after ${(System.nanoTime() - t0) / 1e9}%.1fs: ${e.getMessage}")
       }

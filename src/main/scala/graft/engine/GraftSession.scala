@@ -1,5 +1,9 @@
 package graft.engine
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session configuration for the engine (SURVEY.md §4/§5).
@@ -108,4 +112,31 @@ object GraftSession {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try f finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** The results of `fs`, in input order, for futures that each submit
+    * Spark jobs. `Future.sequence` fails fast on the first error while
+    * the other futures keep running, so on a failure this waits for
+    * every straggler before rethrowing it: no orphan job outlives the
+    * call to race the caller's cleanup or retry. The wait is bounded
+    * at 10 minutes per future and ignores the stragglers' own failures
+    * (they lost the race to the first). An interrupt of the waiting
+    * thread ends the wait at once and is restored on the thread before
+    * the rethrow, so a canceller never blocks behind the stragglers and
+    * later `isInterrupted` checks still see it.
+    */
+  private[graft] def awaitAll[T](fs: Seq[Future[T]]): Seq[T] =
+    try Await.result(Future.sequence(fs)(implicitly, ExecutionContext.parasitic), Duration.Inf)
+    catch { case e: Throwable =>
+      val it = fs.iterator
+      var interrupted = e.isInstanceOf[InterruptedException]
+      while (!interrupted && it.hasNext) {
+        try Await.result(it.next(), Duration(10, "min"))
+        catch {
+          case _: InterruptedException => interrupted = true
+          case NonFatal(_) => ()
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      throw e
+    }
 }

@@ -213,7 +213,7 @@ object Dedup {
     */
   private[graft] def segmentDocs(base: DataFrame, window: Int): DataFrame = {
     // guards every consumer (lineDedup, landSegDfIndex,
-    // classifyAbsorbSegBatch): window = 0 would overflow the ceil into
+    // segDfBatch): window = 0 would overflow the ceil into
     // null segnos and silently mis-segment instead of failing fast (the
     // postingsIndex blockSize precedent)
     require(window > 0, s"segment window must be positive, got $window")
@@ -407,8 +407,8 @@ object Dedup {
     * probing batch — so a replayed batch neither double-counts its own
     * half-committed deltas (excluded: same batch_id) nor loses earlier
     * ones (max collapses duplicate appends of the identical replayed
-    * content). `_docs` appends LAST so the guard key commits only
-    * after the deltas are durable.
+    * content). `_docs` is the guard table, appended last
+    * ([[LandedIndex.absorb]]).
     */
   def landSegDfIndex(spark: SparkSession, docs: DataFrame, idCol: String,
                      textCol: String, window: Int, tableBase: String,
@@ -425,8 +425,9 @@ object Dedup {
   }
 
   /** One st13 micro-batch: clean the arriving docs against the landed
-    * segment-df state, spool (doc_id, clean_text, n_dropped) verdicts,
-    * absorb the batch's df deltas. A segment instance is dropped iff
+    * segment-df state. Spools (doc_id, clean_text, n_dropped) verdicts
+    * and absorbs the batch's df deltas, then its ids. A segment instance
+    * is dropped iff
     * `prior_df + batch_host_rank >= minDf`, where prior_df sums the
     * index deltas of STRICTLY EARLIER batches and batch_host_rank is
     * the doc's 1-based rank among the batch's distinct hosts of that
@@ -436,13 +437,13 @@ object Dedup {
     * batch's segment keys broadcast INTO the bucketed index scan (the
     * d11 probe shape — at 100 TB the scan prunes to the buckets the
     * batch touches); the host rank is a batch-sized window; reassembly
-    * is the d16 groupBy. Absorb appends under the same bucket spec.
+    * is the d16 groupBy, whose batch-sized output AQE coalescing
+    * collapses (no repartition(1) stage job for the spool).
     */
-  def classifyAbsorbSegBatch(spark: SparkSession, batch: DataFrame,
-                             idCol: String, textCol: String,
-                             tableBase: String, batchId: Long,
-                             window: Int, minDf: Int,
-                             outDir: String, nBuckets: Int): Unit = {
+  private[graft] def segDfBatch(spark: SparkSession, batch: DataFrame,
+                                idCol: String, textCol: String,
+                                tableBase: String, batchId: Long,
+                                window: Int, minDf: Int): Batch = {
     val base = batch.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val segs = segmentDocs(base, window).localCheckpoint()
@@ -461,19 +462,11 @@ object Dedup {
       .select(col("seg"), col("doc_id"),
         (coalesce(col("prior"), lit(0L)) + col("__r") >= minDf).as("__drop"))
     val flagged = segs.join(verdict, Seq("seg", "doc_id"))
-    // no repartition(1): the reassembly aggregate is the plan's last
-    // exchange and AQE's partition coalescing already collapses its
-    // batch-sized output — the explicit single-file exchange was one
-    // more AQE stage job per micro-batch for the same spool content
-    withDesc(spark, "cycle: clean spool") {
-      reassembleSegs(base.select("doc_id"), flagged)
-        .write.mode(SaveMode.Append).parquet(outDir)
-    }
     val deltas = hosts.groupBy("seg").agg(count(lit(1)).as("nd"))
       .select(lit(batchId).as("batch_id"), xxhash64(col("seg")).as("skey"),
         col("seg"), col("nd"))
-    SegDfIndex.append(spark, tableBase, "segdf", nBuckets)(deltas)
-    SegDfIndex.append(spark, tableBase, "docs", nBuckets)(base.select(col("doc_id").as("id")))
+    Batch(reassembleSegs(base.select("doc_id"), flagged),
+      Seq(deltas, base.select(col("doc_id").as("id"))))
   }
 
   /** The st13 segment-df index. Compaction retires the per-batch small
@@ -500,7 +493,7 @@ object Dedup {
       .groupBy("skey", "seg").agg(sum(col("nd")).as("nd"))
       .select(lit(-1L).as("batch_id"), col("skey"), col("seg"), col("nd"))),
     IndexTable("docs", "id", _.distinct())), // replayed guard appends collapse too
-    frozen = Nil, meta = None)
+    frozen = Nil, meta = None, absorbed = (_, _) => ())
 
   /** Benchmark decontamination — the training-data hygiene step every
     * large pretraining pipeline runs (the GPT-3/Gopher-style n-gram
@@ -1108,19 +1101,11 @@ object Dedup {
                        nBuckets: Int = 32): MinhashMeta = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val spark = docs.sparkSession
-    val rows = k / bands
-    // meta's n_docs rides the signature write as an observe() aggregate —
-    // a partial count on rows already flowing into the writer — instead
-    // of a separate count() job re-reading the just-landed table (guide
-    // §1.2: a pass that only re-counts what a previous pass wrote is a
-    // pass removed; at corpus scale that re-read is a full table scan)
-    val obs = org.apache.spark.sql.Observation()
-    MinhashIndex.land(tableBase, dir, "sigs", nBuckets)(
-      minhashSignatures(docs, idCol, textCol, n, k).observe(obs, count(lit(1)).as("n")))
-    val landedSigs = spark.table(s"${tableBase}_sigs")
+    // meta's n_docs is the count the signature land observed
+    val nDocs = MinhashIndex.land(tableBase, dir, "sigs", nBuckets)(
+      minhashSignatures(docs, idCol, textCol, n, k))
     MinhashIndex.land(tableBase, dir, "bands", nBuckets)(
-      bandRows(landedSigs, bands, rows).withColumn("bkey", xxhash64(col("band"), col("bh"))))
-    val nDocs = observedCount(obs, "n")(landedSigs.count())
+      bandKeys(spark.table(s"${tableBase}_sigs"), bands, k / bands))
     // the land KNOWS the meta it just wrote — returning it saves every
     // ingest loop the per-drain meta head() job
     val meta = MinhashMeta(n, k, bands, nDocs, nBuckets)
@@ -1146,8 +1131,9 @@ object Dedup {
                          tableBase: String): Unit = {
     val meta = MinhashIndex.readMeta(spark, tableBase)
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
-      .localCheckpoint() // one batch-sized pass; both appends + the count reuse it
-    MinhashIndex.persist(spark, tableBase, absorbMinhashCore(spark, bSigs, tableBase, meta))
+      .localCheckpoint() // one batch-sized pass; both appends reuse it
+    MinhashIndex.persist(spark, tableBase, MinhashIndex.absorbed(meta,
+      MinhashIndex.absorb(spark, tableBase, meta.nBuckets)(absorbRows(bSigs, meta): _*)))
   }
 
   /** A landed MinHash index's `_meta` row. `n_docs` is the only field
@@ -1167,50 +1153,20 @@ object Dedup {
         "n_docs" -> LongType, "n_buckets" -> IntegerType),
       m => Seq[Any](m.n, m.k, m.bands, m.nDocs, m.nBuckets),
       (r, _, _) => MinhashMeta(r.getAs[Int]("n"), r.getAs[Int]("k"),
-        r.getAs[Int]("bands"), r.getAs[Long]("n_docs"), r.getAs[Int]("n_buckets")))))
+        r.getAs[Int]("bands"), r.getAs[Long]("n_docs"), r.getAs[Int]("n_buckets")))),
+    absorbed = (m, n) => m.copy(nDocs = m.nDocs + n))
 
-  /** Append precomputed batch signatures (and their band rows) to the
-    * index; returns the advanced meta. The core never writes `_meta`:
-    * [[absorbMinhashBatch]] writes it per call, an ingest drain once at
-    * its end (`n_docs` is advisory state — staleness sizing, never probe
-    * input).
-    *
-    * Write order is a crash-safety contract: `_bands` BEFORE `_sigs`.
-    * The st9 redelivery guard anti-joins arrivals against `_sigs` ids,
-    * so the guard key must commit LAST — a crash between the two
-    * appends then leaves the batch absent from `_sigs`, the replay
-    * re-absorbs it, and the duplicate band rows it re-appends are
-    * harmless (the probe's candidate side is distinct-ed; compaction
-    * rewrites them away). The reverse order would leave
-    * sigs-without-bands: the guard drops the replayed batch and every
-    * later arrival silently misses pairs against it.
+  /** Band rows of `sigs` keyed for the `_bands` table: bkey =
+    * xxhash64(band, bh).
     */
-  private def absorbMinhashCore(spark: SparkSession, bSigs: DataFrame,
-                                tableBase: String,
-                                meta: MinhashMeta): MinhashMeta = {
-    MinhashIndex.append(spark, tableBase, "bands", meta.nBuckets)(
-      bandRows(bSigs, meta.bands, meta.bandRowCount)
-        .withColumn("bkey", xxhash64(col("band"), col("bh"))))
-    // the batch count rides the append as an observe() aggregate — no
-    // separate count() job per absorb (the streaming loops' cost is the
-    // per-micro-batch job floor)
-    val obs = org.apache.spark.sql.Observation()
-    MinhashIndex.append(spark, tableBase, "sigs", meta.nBuckets)(
-      bSigs.observe(obs, count(lit(1)).as("n")))
-    meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bSigs.count()))
-  }
+  private def bandKeys(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
+    bandRows(sigs, bands, rows).withColumn("bkey", xxhash64(col("band"), col("bh")))
 
-  /** Read a row count that rode a (synchronous) write action as an
-    * `observe()` aggregate. When the writer's input is provably empty,
-    * PropagateEmptyRelation removes the CollectMetrics node with the
-    * rest of the subtree and the observation completes METRIC-LESS —
-    * fall back to `recount`, which in exactly that case scans an empty
-    * (or batch-sized) input. Never a second corpus pass: non-empty
-    * writes always report the metric.
+  /** What absorbing batch signatures appends: their band rows, then the
+    * signatures themselves (the guard).
     */
-  private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
-                                   key: String)(recount: => Long): Long =
-    obs.get.get(key).map(_.asInstanceOf[Long]).getOrElse(recount)
+  private def absorbRows(bSigs: DataFrame, meta: MinhashMeta): Seq[DataFrame] =
+    Seq(bandKeys(bSigs, meta.bands, meta.bandRowCount), bSigs)
 
   /** Near-dup pairs INVOLVING an arriving batch, probed against a landed
     * [[landMinhashIndex]] — bit-identical to running [[minhashLshPairs]]
@@ -1248,7 +1204,7 @@ object Dedup {
   }
 
   /** Probe the index with precomputed batch signatures (the shared core
-    * of [[incrementalMinhashPairs]] and [[probeAbsorbMinhashBatch]]).
+    * of [[incrementalMinhashPairs]] and [[minhashBatch]]).
     * `batchIds` is the batch's distinct id count when the caller knows
     * it.
     */
@@ -1257,8 +1213,7 @@ object Dedup {
                                threshold: Double, batchIds: Option[Int]): DataFrame = {
     val idxSigs = spark.table(s"${tableBase}_sigs")
     val idxBands = spark.table(s"${tableBase}_bands")
-    val bBands = bandRows(bSigs, meta.bands, meta.bandRowCount)
-      .withColumn("bkey", xxhash64(col("band"), col("bh")))
+    val bBands = bandKeys(bSigs, meta.bands, meta.bandRowCount)
     // the batch's distinct bkey set (at most |batch ids|·bands values)
     // prunes the index buckets. bBands broadcasts whole anyway, so
     // collecting its bkey column (and deduping driver-side) is bounded by
@@ -1420,32 +1375,21 @@ object Dedup {
     }
   }
 
-  /** One full ingest cycle — probe, spool, absorb — with a SINGLE
-    * signature pass over the batch (the separate
-    * [[incrementalMinhashPairs]] + [[absorbMinhashBatch]] calls each
-    * recompute them). This is the st9 per-micro-batch loop body, and
-    * with `classify` the st11 one; at a few seconds per micro-batch the
-    * duplicated signature job and the two per-call meta reads are the
-    * dominant fixed overhead, not the data. The spool takes the probe's
-    * pairs, or with `classify` the per-doc [[incrementalSurvivors]]
-    * verdicts (see [[spoolCycle]]).
-    *
-    * Ordering is the correctness heart: the spool append MATERIALIZES
-    * the probe before the absorb appends the batch to the index —
-    * absorbing first would let the probe's lazily-listed index scan see
-    * the batch's own rows and emit self-pairs. `meta` is the previous
-    * cycle's return (the drain threads it; see
-    * [[graft.streaming.DocStreams.drain]]), and the advanced meta is
-    * returned, not written. `batchIds`, the batch's distinct id count
-    * when the caller holds it (the drain's guard does), lets the probe
-    * skip a bucket-prune key collect that could not prune.
+  /** One st9 micro-batch (with `classify`, one st11 micro-batch) for
+    * [[LandedIndex.ingest]], from a SINGLE signature pass over the batch
+    * (the separate [[incrementalMinhashPairs]] + [[absorbMinhashBatch]]
+    * calls each recompute it). It spools the probe's pairs, or with
+    * `classify` each batch doc's keep/drop verdict ([[verdicts]]), and
+    * absorbs the signatures. `meta` is the drain's threaded meta.
+    * `batchIds`, the batch's distinct id count when the caller holds it
+    * (the drain's guard does), lets the probe skip a bucket-prune key
+    * collect that could not prune.
     */
-  private[graft] def probeAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
-                                             idCol: String, textCol: String,
-                                             tableBase: String, threshold: Double,
-                                             spoolDir: String, meta: MinhashMeta,
-                                             batchIds: Option[Int] = None,
-                                             classify: Boolean = false): MinhashMeta = {
+  private[graft] def minhashBatch(spark: SparkSession, newDocs: DataFrame,
+                                  idCol: String, textCol: String,
+                                  tableBase: String, threshold: Double,
+                                  meta: MinhashMeta, batchIds: Option[Int] = None,
+                                  classify: Boolean = false): Batch = {
     val bSigs = withDesc(spark, "cycle: batch signatures") {
       minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
         .localCheckpoint()
@@ -1453,31 +1397,24 @@ object Dedup {
     // verdicts fold over the FULL batch, not bSigs: a doc too short to
     // shingle (< n tokens) has no signature and can never pair, but it
     // still arrived and its verdict row (trivially is_new) must exist
-    spoolCycle(spark, probeMinhashCore(spark, bSigs, tableBase, meta, threshold, batchIds),
-      newDocs.select(col(idCol).cast("long").as("doc_id")), classify, spoolDir)
-    absorbMinhashCore(spark, bSigs, tableBase, meta)
+    Batch(verdicts(probeMinhashCore(spark, bSigs, tableBase, meta, threshold, batchIds),
+        newDocs.select(col(idCol).cast("long").as("doc_id")), classify),
+      absorbRows(bSigs, meta))
   }
 
-  /** Append one ingest cycle's probe result to its spool: the `pairs`,
-    * or with `classify` each `batch` id's keep/drop verdict
+  /** What an ingest cycle spools from its probe: the `pairs`, or with
+    * `classify` each `batch` id's keep/drop verdict
     * ([[earliestNeighborFold]]). A verdict classifies the batch against
     * the index AS LANDED WHEN IT ARRIVED — rows absorbed from earlier
     * micro-batches count as earlier neighbors, smaller-id batch mates
     * count as earlier, later arrivals never shield or condemn — so a
     * drained verdict stream equals a single arrival-ordered fold over
     * the full pair algebra (the st11/st12 oracles), whatever the
-    * chunking. No repartition(1): the spooled plan's last exchange is
-    * batch-sized and AQE coalescing already collapses it — the explicit
-    * single-file exchange was one more AQE stage job per micro-batch for
-    * the same spool content.
+    * chunking. Both are batch-sized, so AQE coalescing collapses the
+    * spool's last exchange (no repartition(1) stage job).
     */
-  private def spoolCycle(spark: SparkSession, pairs: DataFrame, batch: DataFrame,
-                         classify: Boolean, spoolDir: String): Unit = {
-    val (label, rows) =
-      if (classify) ("cycle: verdict spool", earliestNeighborFold(batch, pairs, batch.columns.head))
-      else ("cycle: probe+spool", pairs)
-    withDesc(spark, label)(rows.write.mode(SaveMode.Append).parquet(spoolDir))
-  }
+  private def verdicts(pairs: DataFrame, batch: DataFrame, classify: Boolean): DataFrame =
+    if (classify) earliestNeighborFold(batch, pairs, batch.columns.head) else pairs
 
   /** Keep/drop classification of an arriving batch against a landed
     * [[landMinhashIndex]] — the decision the pair stream exists to
@@ -1574,19 +1511,12 @@ object Dedup {
                         nBuckets: Int = 32): SemanticMeta = {
     val spark = embs.sparkSession
     val base = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // the `_vecs` re-layout lands FIRST, with the corpus count riding it
-    // as an observe() aggregate: the separate up-front count() was a
-    // full corpus pass spent only to size the centroid sample (guide
-    // §1.2 — at 100 TB that pass reads the whole corpus once more than
-    // necessary). `_vecs` depends on nothing the count feeds, so the
-    // land does 3 corpus-reads (vecs, sample, assign) instead of 4.
-    val obs = org.apache.spark.sql.Observation()
-    SemanticIndex.land(tableBase, dir, "vecs", nBuckets)(
-      base.observe(obs, count(lit(1)).as("n")))
-    val nDocs = observedCount(obs, "n")(base.count())
-    Similarity.md5Sample(embs, idCol, vecCol, ivfCellsFor(nDocs), "cid", "cw")
-      .write.mode(SaveMode.Overwrite).option("path", s"$dir/cents")
-      .saveAsTable(s"${tableBase}_cents")
+    // the `_vecs` re-layout lands FIRST and its observed count sizes the
+    // centroid sample: no up-front count() pass over the corpus (guide
+    // §1.2), so the land reads the corpus 3 times (vecs, sample, assign)
+    val nDocs = SemanticIndex.land(tableBase, dir, "vecs", nBuckets)(base)
+    SemanticIndex.landFrozen(tableBase, dir, "cents")(
+      Similarity.md5Sample(embs, idCol, vecCol, ivfCellsFor(nDocs), "cid", "cw"))
     val landedCents = spark.table(s"${tableBase}_cents")
     SemanticIndex.land(tableBase, dir, "assign", nBuckets)(
       Similarity.nearestCells(base, landedCents, "id", "v", "cw"))
@@ -1678,7 +1608,7 @@ object Dedup {
 
   /** Probe the semantic index with a precomputed batch assignment (the
     * shared core of [[incrementalSemanticPairs]] and
-    * [[probeAbsorbSemanticBatch]]). `bBase` is the batch's (id, v)
+    * [[semanticBatch]]). `bBase` is the batch's (id, v)
     * projection — the exact-cosine verify side; `bAssign` its
     * checkpointed (id, cid, v?) cell assignment.
     */
@@ -1723,10 +1653,10 @@ object Dedup {
     val meta = SemanticIndex.readMeta(spark, tableBase)
     val cents = spark.table(s"${tableBase}_cents")
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint() // one batch-sized pass; both appends + count reuse it
-    SemanticIndex.persist(spark, tableBase,
-      absorbSemanticCore(spark, bBase, Similarity.nearestCells(bBase, cents, "id", "v", "cw"),
-        tableBase, meta))
+      .localCheckpoint() // one batch-sized pass; both appends reuse it
+    SemanticIndex.persist(spark, tableBase, SemanticIndex.absorbed(meta,
+      SemanticIndex.absorb(spark, tableBase, meta.nBuckets)(
+        Similarity.nearestCells(bBase, cents, "id", "v", "cw"), bBase)))
   }
 
   /** A landed semantic index's `_meta` row — the d13 twin of
@@ -1749,57 +1679,34 @@ object Dedup {
         // probe must still read it; the frozen-centroid count IS the
         // _cents table's cardinality (dim-scale, one count) then
         if (r.schema.fieldNames.contains("n_cents")) r.getAs[Int]("n_cents")
-        else spark.table(s"${tableBase}_cents").count().toInt))))
+        else spark.table(s"${tableBase}_cents").count().toInt))),
+    absorbed = (m, n) => {
+      staleAdvisory("d13", m.nDocs + n, m.nCents)
+      m.copy(nDocs = m.nDocs + n)
+    })
 
-  /** Append a precomputed batch (vectors + their frozen-centroid
-    * assignment) to the semantic index; returns the advanced meta.
-    *
-    * Write order is the d13 crash contract, mirroring
-    * [[absorbMinhashCore]]: `_assign` BEFORE `_vecs`, because the st10
-    * redelivery guard anti-joins arrivals against `_vecs` ids — the
-    * guard key commits last, so a crash between the appends is replayed
-    * as a full re-absorb whose duplicate assign rows the probe's
-    * distinct-ed candidate side absorbs (and compaction rewrites away).
-    * Like [[absorbMinhashCore]], never writes `_meta`.
+  /** One st10 micro-batch (with `classify`, one st12 micro-batch) for
+    * [[LandedIndex.ingest]], the d13 twin of [[minhashBatch]]: the batch
+    * is assigned to cells once, and that assignment feeds both the probe
+    * and the `_assign` absorb. `cents` is a driver-side snapshot of the
+    * FROZEN centroid table, so no cycle re-reads it from disk;
+    * broadcasting it still runs one small build job per cycle (see
+    * [[batchAssignLocal]]), as does the probe's broadcast of the
+    * collected assignment. The batch is the arrival file, which
+    * re-evaluates for free, so the (id, v) projection needs no
+    * checkpoint of its own.
     */
-  private def absorbSemanticCore(spark: SparkSession, bBase: DataFrame,
-                                 bAssign: DataFrame, tableBase: String,
-                                 meta: SemanticMeta): SemanticMeta = {
-    SemanticIndex.append(spark, tableBase, "assign", meta.nBuckets)(bAssign)
-    // batch count rides the append (no separate count() job per absorb)
-    val obs = org.apache.spark.sql.Observation()
-    SemanticIndex.append(spark, tableBase, "vecs", meta.nBuckets)(
-      bBase.observe(obs, count(lit(1)).as("n")))
-    val advanced =
-      meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bBase.count()))
-    staleAdvisory("d13", advanced.nDocs, meta.nCents)
-    advanced
-  }
-
-  /** One full semantic ingest cycle — assign once, probe, spool, absorb
-    * — the st10 per-micro-batch loop body (with `classify`, the st12
-    * one) and the d13 twin of [[probeAbsorbMinhashBatch]] (see there for
-    * the materialize-before-absorb ordering, the threaded meta and the
-    * spool).
-    * `cents` is a driver-side snapshot of the FROZEN centroid table, so
-    * no cycle re-reads it from disk; broadcasting it still runs one small
-    * build job per cycle (see [[batchAssignLocal]]), as does the probe's
-    * broadcast of the collected assignment. The batch is the arrival
-    * file, which re-evaluates for free, so the (id, v) projection needs
-    * no checkpoint of its own.
-    */
-  private[graft] def probeAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
-                                              idCol: String, vecCol: String,
-                                              tableBase: String, threshold: Double,
-                                              spoolDir: String, meta: SemanticMeta,
-                                              cents: DataFrame,
-                                              classify: Boolean = false): SemanticMeta = {
+  private[graft] def semanticBatch(spark: SparkSession, newEmbs: DataFrame,
+                                   idCol: String, vecCol: String,
+                                   tableBase: String, threshold: Double,
+                                   meta: SemanticMeta, cents: DataFrame,
+                                   classify: Boolean = false): Batch = {
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
     val (bAssign, bCids) = batchAssignLocal(bBase, cents)
-    spoolCycle(spark,
-      probeSemanticCore(spark, bBase, bAssign, bCids, tableBase, meta.nBuckets, threshold),
-      bBase.select(col("id").as("vec_id")), classify, spoolDir)
-    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta)
+    Batch(verdicts(
+        probeSemanticCore(spark, bBase, bAssign, bCids, tableBase, meta.nBuckets, threshold),
+        bBase.select(col("id").as("vec_id")), classify),
+      Seq(bAssign, bBase))
   }
 
   /** The per-micro-batch (id → cell) assignment as a driver-side
@@ -1813,7 +1720,7 @@ object Dedup {
     * assign" is 3 jobs per cycle (the `cents` broadcast, the per-id
     * argmax shuffle, the collect; Prof st10 at sf0.01: 9 over 3
     * micro-batches), and the probe's broadcast of this assignment is 1
-    * more job under "cycle: probe+spool".
+    * more job under "cycle: spool".
     */
   private def batchAssignLocal(bBase: DataFrame,
                                cents: DataFrame): (DataFrame, Array[Long]) = {

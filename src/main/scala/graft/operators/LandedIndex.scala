@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -33,20 +33,26 @@ private[graft] final case class MetaCodec[M](columns: Seq[(String, DataType)],
 private[graft] final case class IndexTable(suffix: String, bucketCol: String,
                                            compaction: DataFrame => DataFrame = identity)
 
+/** What one ingest micro-batch yields: the rows `spool` appends to the
+  * drain's spool, and one row set per bucketed table of the index, in
+  * its `tables` order.
+  */
+private[graft] final case class Batch(spool: DataFrame, absorb: Seq[DataFrame])
+
 /** One landed-index family (MinHash, semantic, IVF-PQ, segment-df): the
   * lifecycle steps every family shares, written once.
   *
   *  - `family` tags the family's Metrics entries (`<family>.compact`);
-  *  - `tables` are its bucketed tables in ABSORB ORDER. The last one is
-  *    the redelivery guard: an ingest drain drops every arriving id it
-  *    already holds, so it must commit last — a crash between two
-  *    appends then replays the whole absorb;
+  *  - `tables` are its bucketed tables in absorb order, the redelivery
+  *    guard last (see [[absorb]]);
   *  - `frozen` are the unbucketed tables fixed at land (quantizers);
-  *  - `meta` is the `_meta` codec; the segment-df index keeps none.
+  *  - `meta` is the `_meta` codec; the segment-df index keeps none;
+  *  - `absorbed(meta, n)` is the meta after an absorb of `n` guard rows.
   */
 private[graft] final case class LandedIndex[M](family: String, tables: Seq[IndexTable],
                                                frozen: Seq[String],
-                                               meta: Option[MetaCodec[M]]) {
+                                               meta: Option[MetaCodec[M]],
+                                               absorbed: (M, Long) => M) {
   def guard: String = tables.last.suffix
 
   /** Every catalog table of the index, for a caller that drops it. */
@@ -68,7 +74,50 @@ private[graft] final case class LandedIndex[M](family: String, tables: Seq[Index
     if (meta.isDefined) writeMeta(spark, tableBase, m,
       LandedIndex.describe(spark, s"${tableBase}_meta")("Location"))
 
-  /** Append `rows` to the index table `suffix` as one absorb job, labelled
+  /** One ingest cycle over the index at `tableBase`: append `batch.spool`
+    * to the parquet spool at `spoolDir` (its jobs labelled `cycle:
+    * spool`), then [[absorb]] `batch.absorb`, and return the meta
+    * advanced from `meta`. The meta is returned, not written: a drain
+    * threads it through its cycles and persists it once.
+    *
+    * The spool append comes first because it MATERIALIZES the batch's
+    * probe: the probe scans the index lazily, so absorbing first would
+    * let it see the batch's own rows (self-pairs, a vector among its own
+    * neighbours).
+    */
+  def ingest(spark: SparkSession, tableBase: String, nBuckets: Int, spoolDir: String,
+             meta: M)(batch: Batch): M = {
+    requireRowSets(batch.absorb)
+    Dedup.withDesc(spark, "cycle: spool") {
+      batch.spool.write.mode(SaveMode.Append).parquet(spoolDir)
+    }
+    absorbed(meta, absorb(spark, tableBase, nBuckets)(batch.absorb: _*))
+  }
+
+  /** Append `rows`, one row set per table, to the index at `tableBase`
+    * in `tables` order, and return the count of rows appended to the
+    * guard table.
+    *
+    * The guard table commits LAST, which makes a crash mid-absorb safe:
+    * an ingest drain drops every arriving id the guard already holds,
+    * so a crash before the guard append leaves the batch absent there
+    * and the replay re-absorbs it whole. The duplicate rows it re-appends
+    * to the earlier tables are harmless (the probes' candidate sides are
+    * distinct-ed, segment-df sums a per-batch max, and compaction
+    * rewrites them away). The reverse order would let the guard drop the
+    * replay while its rows in the other tables are missing.
+    */
+  def absorb(spark: SparkSession, tableBase: String, nBuckets: Int)(rows: DataFrame*): Long = {
+    requireRowSets(rows)
+    tables.zip(rows).init.foreach { case (t, r) => append(spark, tableBase, t, nBuckets, r) }
+    LandedIndex.counted(rows.last)(append(spark, tableBase, tables.last, nBuckets, _))
+  }
+
+  private def requireRowSets(rows: Seq[DataFrame]): Unit =
+    require(rows.length == tables.length, s"$family index absorbs one row set per table " +
+      s"(${tables.map(_.suffix).mkString(", ")}), got ${rows.length}")
+
+  /** Append `rows` to the index table `t` as one absorb job, labelled
     * `cycle: absorb <suffix>`, then refresh the table. The bucketed append
     * refreshes by PATH only; a reader that already resolved the table
     * holds an identifier-keyed cached relation whose file listing
@@ -82,23 +131,32 @@ private[graft] final case class LandedIndex[M](family: String, tables: Seq[Index
     * pins the partition count either way, so the file layout is
     * identical.
     */
-  def append(spark: SparkSession, tableBase: String, suffix: String, nBuckets: Int)
-            (rows: DataFrame): Unit = {
-    val t = s"${tableBase}_$suffix"
-    Dedup.withDesc(spark, s"cycle: absorb $suffix") {
-      Dedup.withAqeOff(rows)(graft.sources.Sinks.bucketed(_, t, bucketCol(suffix),
+  private def append(spark: SparkSession, tableBase: String, t: IndexTable, nBuckets: Int,
+                     rows: DataFrame): Unit = {
+    val name = s"${tableBase}_${t.suffix}"
+    Dedup.withDesc(spark, s"cycle: absorb ${t.suffix}") {
+      Dedup.withAqeOff(rows)(graft.sources.Sinks.bucketed(_, name, t.bucketCol,
         nBuckets, mode = SaveMode.Append))
     }
-    spark.catalog.refreshTable(t)
+    spark.catalog.refreshTable(name)
   }
 
   /** Land `rows` as the index table `suffix`: an external bucketed table
-    * at `<dir>/<suffix>`.
+    * at `<dir>/<suffix>`. Returns the count of rows written.
     */
   def land(tableBase: String, dir: String, suffix: String, nBuckets: Int)
-          (rows: DataFrame): Unit =
-    graft.sources.Sinks.bucketed(rows, s"${tableBase}_$suffix", bucketCol(suffix),
-      nBuckets, path = Some(s"$dir/$suffix"))
+          (rows: DataFrame): Long =
+    LandedIndex.counted(rows)(graft.sources.Sinks.bucketed(_, s"${tableBase}_$suffix",
+      bucketCol(suffix), nBuckets, path = Some(s"$dir/$suffix")))
+
+  /** Land `rows` as the frozen table `suffix`: an external, unbucketed
+    * table at `<dir>/<suffix>`.
+    */
+  def landFrozen(tableBase: String, dir: String, suffix: String)(rows: DataFrame): Unit = {
+    require(frozen.contains(suffix), s"$family index has no frozen $suffix table")
+    rows.write.mode(SaveMode.Overwrite).option("path", s"$dir/$suffix")
+      .saveAsTable(s"${tableBase}_$suffix")
+  }
 
   private def bucketCol(suffix: String): String = tables.find(_.suffix == suffix)
     .getOrElse(throw new IllegalArgumentException(s"$family index has no $suffix table"))
@@ -127,6 +185,19 @@ private[graft] final case class LandedIndex[M](family: String, tables: Seq[Index
 }
 
 private[graft] object LandedIndex {
+
+  /** Run `write` over `rows` with their row count riding it as an
+    * observe() aggregate, and return the count: no second pass over
+    * what was just written. When `rows` is provably empty,
+    * PropagateEmptyRelation removes the CollectMetrics node with the
+    * rest of the plan and the observation completes metric-less; the
+    * fallback recount then scans that empty input.
+    */
+  private def counted(rows: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(rows.observe(obs, count(lit(1)).as("n")))
+    obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(rows.count())
+  }
 
   /** `DESCRIBE FORMATTED table` as a (field → value) map: a catalog
     * command whose rows the driver already holds, so no Spark job.

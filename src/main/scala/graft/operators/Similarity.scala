@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -516,7 +516,11 @@ object Similarity {
         "k_codes" -> IntegerType, "n_buckets" -> IntegerType),
       m => Seq[Any](m.nDocs, m.nCents, m.m, m.kCodes, m.nBuckets),
       (r, _, _) => IvfPqMeta(r.getAs[Long]("n_docs"), r.getAs[Int]("n_cents"),
-        r.getAs[Int]("m"), r.getAs[Int]("k_codes"), r.getAs[Int]("n_buckets")))))
+        r.getAs[Int]("m"), r.getAs[Int]("k_codes"), r.getAs[Int]("n_buckets")))),
+    absorbed = (m, n) => {
+      Dedup.staleAdvisory("a10", m.nDocs + n, m.nCents)
+      m.copy(nDocs = m.nDocs + n)
+    })
 
   /** A (small, frozen) catalog table materialized as a driver-side
     * LocalRelation, so a per-micro-batch loop that joins the same frozen
@@ -620,9 +624,7 @@ object Similarity {
                           nBuckets: Int = 32): IvfPqMeta = {
     val spark = embs.sparkSession
     val base = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val obs = org.apache.spark.sql.Observation()
-    IvfPqIndex.land(tableBase, dir, "vecs", nBuckets)(base.observe(obs, count(lit(1)).as("n")))
-    val nDocs = Dedup.observedCount(obs, "n")(base.count())
+    val nDocs = IvfPqIndex.land(tableBase, dir, "vecs", nBuckets)(base)
     val nCentroids = centroidsFor(nDocs)
     // one corpus sample pass serves both quantizer tables (bit-identical
     // prefixes of the same md5 order — see sharedQuantizerSample); the
@@ -630,12 +632,8 @@ object Similarity {
     // (checkpointed) sample each re-ran its own corpus TakeOrdered
     val (cents, cb) = sharedQuantizerSample(embs, idCol, vecCol,
       nCentroids, m, kCodes)
-    cents
-      .write.mode(SaveMode.Overwrite).option("path", s"$dir/cents")
-      .saveAsTable(s"${tableBase}_cents")
-    cb
-      .write.mode(SaveMode.Overwrite).option("path", s"$dir/cb")
-      .saveAsTable(s"${tableBase}_cb")
+    IvfPqIndex.landFrozen(tableBase, dir, "cents")(cents)
+    IvfPqIndex.landFrozen(tableBase, dir, "cb")(cb)
     IvfPqIndex.land(tableBase, dir, "codes", nBuckets)(
       encodeWithCells(spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"),
         base, m, broadcastCells = false))
@@ -779,78 +777,56 @@ object Similarity {
         Dedup.staleAdvisory("a10", meta.nDocs, meta.nCents)
         meta
       case Some((fresh, _)) =>
-        val advanced = absorbIvfPqCore(spark, fresh, tableBase, meta,
-          spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"))
+        val advanced = IvfPqIndex.absorbed(meta,
+          IvfPqIndex.absorb(spark, tableBase, meta.nBuckets)(absorbRows(fresh, meta,
+            spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb")): _*))
         IvfPqIndex.persist(spark, tableBase, advanced)
         advanced
     }
   }
 
-  /** Encode guarded `(id, v)` rows against the frozen quantizer and
-    * append them: `_codes` first, then `_vecs`, the id-keyed guard
-    * table, LAST (the absorbMinhashCore crash-order contract). Returns
-    * the advanced meta and never writes `_meta` — [[absorbIvfPqBatch]]
-    * writes it per call, the st14 drain once at its end.
+  /** What absorbing guarded `(id, v)` rows appends: their codes,
+    * encoded against the frozen quantizer, then the rows themselves
+    * (the `_vecs` guard).
+    *
+    * Absorb input is batch-sized by contract: the encode's joins are
+    * hint-pinned (broadcastCells) and the append runs AQE-off. That is
+    * still 4 jobs per call (Prof st14 at sf0.01, 4 cpus: 12 over 3
+    * micro-batches), because each broadcast builds in a job of its own:
+    *  - `cents` and `cb` broadcasts: one 1-stage job each, ~10 ms, even
+    *    from a LocalRelation snapshot (see localTable);
+    *  - `cells` broadcast: nearestCells' per-id aggregate over the
+    *    batch, a 2-stage job (shuffle + collect), ~0.1 s;
+    *  - the bucketed append itself: 3 stages (pqEncode's aggregate
+    *    shuffle, the bucket repartition, the write), ~0.35 s.
     */
-  private def absorbIvfPqCore(spark: SparkSession, fresh: DataFrame,
-                              tableBase: String, meta: IvfPqMeta,
-                              cents: DataFrame, cb: DataFrame): IvfPqMeta = {
-    // absorb input is batch-sized by contract: the encode's joins are
-    // hint-pinned (broadcastCells) and the append runs AQE-off. That is
-    // still 4 jobs per call (Prof st14 at sf0.01, 4 cpus: 12 over 3
-    // micro-batches), because each broadcast builds in a job of its own:
-    //  - `cents` and `cb` broadcasts: one 1-stage job each, ~10 ms, even
-    //    from a LocalRelation snapshot (see localTable);
-    //  - `cells` broadcast: nearestCells' per-id aggregate over the
-    //    batch, a 2-stage job (shuffle + collect), ~0.1 s;
-    //  - the bucketed append itself: 3 stages (pqEncode's aggregate
-    //    shuffle, the bucket repartition, the write), ~0.35 s.
-    IvfPqIndex.append(spark, tableBase, "codes", meta.nBuckets)(
-      encodeWithCells(cents, cb, fresh, meta.m, broadcastCells = true))
-    // batch count rides the append (no separate count() job per absorb)
-    val obs = org.apache.spark.sql.Observation()
-    IvfPqIndex.append(spark, tableBase, "vecs", meta.nBuckets)(
-      fresh.observe(obs, count(lit(1)).as("n")))
-    val advanced =
-      meta.copy(nDocs = meta.nDocs + Dedup.observedCount(obs, "n")(fresh.count()))
-    Dedup.staleAdvisory("a10", advanced.nDocs, meta.nCents)
-    advanced
-  }
+  private def absorbRows(fresh: DataFrame, meta: IvfPqMeta, cents: DataFrame,
+                         cb: DataFrame): Seq[DataFrame] =
+    Seq(encodeWithCells(cents, cb, fresh, meta.m, broadcastCells = true), fresh)
 
-  /** One full vector-ingest cycle — probe, spool the top-k verdicts,
-    * absorb — the st14 per-micro-batch loop body and the a10 twin of
-    * [[Dedup.probeAbsorbMinhashBatch]]: each arriving vector is
-    * answered AGAINST THE INDEX AS OF ITS ARRIVAL (its ADC top-k among
-    * landed ∪ earlier-absorbed vectors — batch mates are not yet in
-    * the index, so never candidates), then the batch absorbs so later
-    * arrivals see it. The spool append MATERIALIZES the probe before
-    * the absorb appends the batch (probing after would let the lazily-
-    * listed code scan see the batch's own rows — the same ordering
-    * contract as the minhash/semantic cycles). The batch has already
-    * passed the drain's `_vecs` redelivery guard (a replay may not
-    * re-PROBE either), so the absorb skips [[absorbIvfPqBatch]]'s own.
-    * `meta` is threaded by the drain; `quantizers` is a driver-side
-    * snapshot of the FROZEN (cents, cb) tables, so no cycle re-reads
-    * them from disk. Broadcasting a snapshot still runs one small job
-    * each, in the probe and in the encode (see `absorbIvfPqCore`).
+  /** One st14 micro-batch for [[LandedIndex.ingest]], the a10 twin of
+    * [[Dedup.minhashBatch]]: it spools each arriving vector's ADC top-k
+    * AGAINST THE INDEX AS OF ITS ARRIVAL (landed ∪ earlier-absorbed
+    * vectors — batch mates are not yet in the index, so never
+    * candidates) and absorbs the batch so later arrivals see it. The
+    * batch has already passed the drain's `_vecs` redelivery guard (a
+    * replay may not re-PROBE either), so it skips [[absorbIvfPqBatch]]'s
+    * own. `quantizers` is a driver-side snapshot of the FROZEN (cents,
+    * cb) tables, so no cycle re-reads them from disk; broadcasting a
+    * snapshot still runs one small job each, in the probe and in the
+    * encode (see [[absorbRows]]). The top-k window is the spool's last
+    * exchange, and AQE coalescing collapses its batch-sized output.
     */
-  private[graft] def probeAbsorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
-                                           idCol: String, vecCol: String,
-                                           tableBase: String, k: Int, nProbe: Int,
-                                           verdictsDir: String, meta: IvfPqMeta,
-                                           quantizers: (DataFrame, DataFrame)): IvfPqMeta = {
-    // no repartition(1): the top-k window is the plan's last exchange
-    // and AQE coalescing collapses its batch-sized output — the explicit
-    // single-file exchange was one more AQE stage job per micro-batch
-    Dedup.withDesc(spark, "cycle: verdict spool") {
-      ivfPqProbeCore(spark, newEmbs, idCol, vecCol, tableBase, k, nProbe, meta,
-          quantizers._1, quantizers._2)
-        .select(col("query_id").as("vec_id"), col("neighbor_id"),
-          col("adc_fp"), col("rank"))
-        .write.mode(SaveMode.Append).parquet(verdictsDir)
-    }
-    absorbIvfPqCore(spark, newEmbs.select(col(idCol).as("id"), col(vecCol).as("v")),
-      tableBase, meta, quantizers._1, quantizers._2)
+  private[graft] def ivfPqBatch(spark: SparkSession, newEmbs: DataFrame,
+                                idCol: String, vecCol: String,
+                                tableBase: String, k: Int, nProbe: Int,
+                                meta: IvfPqMeta,
+                                quantizers: (DataFrame, DataFrame)): Batch = {
+    val (cents, cb) = quantizers
+    Batch(
+      ivfPqProbeCore(spark, newEmbs, idCol, vecCol, tableBase, k, nProbe, meta, cents, cb)
+        .select(col("query_id").as("vec_id"), col("neighbor_id"), col("adc_fp"), col("rank")),
+      absorbRows(newEmbs.select(col(idCol).as("id"), col(vecCol).as("v")), meta, cents, cb))
   }
 
   /** Scalar-quantization ADC top-k — the int8 analog of [[pqAdcTopK]]

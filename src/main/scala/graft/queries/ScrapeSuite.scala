@@ -152,7 +152,6 @@ object ScrapeSuite {
       // parallelization): the writes share no lineage below the cached
       // parse, so sequential landing just serializes five scheduler
       // round-trips — wall time of the sum instead of the slowest.
-      // Future.sequence fails fast on the first landing error.
       //
       // repartition(1), NOT coalesce(1): one file per table is a
       // fixture-scale verification artifact (the production landing path
@@ -161,9 +160,8 @@ object ScrapeSuite {
       // every upstream join/window of the table would run in ONE task.
       // repartition inserts a shuffle boundary instead, so the build
       // keeps its parallelism and only the final write is single-file.
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val landed = star(s).toSeq.map { case (name, df) =>
         Future {
           df.repartition(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -171,31 +169,10 @@ object ScrapeSuite {
           name -> s.read.parquet(s"$StarOracleDir/$name.parquet")
         }
       }
-      // Future.sequence fails fast on the FIRST landing error while the
-      // surviving futures keep writing; await the stragglers before
-      // letting computeIfAbsent complete exceptionally, else a retrying
-      // caller would race fresh Overwrite writes against still-running
-      // orphan writers on the same parquet paths (same pattern as
-      // Entities.starSchemaBuildWith). The straggler wait is BOUNDED
-      // and swallows straggler failures (they lost the race to `e`);
-      // an INTERRUPT aborts the drain and restores the interrupt flag
-      // instead of being discarded — a framework canceller must not
-      // block behind 10-minute straggler waits, and later
-      // isInterrupted checks must still observe the cancellation.
-      try Await.result(Future.sequence(landed), Duration.Inf).toMap
-      catch { case e: Throwable =>
-        val it = landed.iterator
-        var interrupted = e.isInstanceOf[InterruptedException]
-        while (!interrupted && it.hasNext) {
-          try Await.result(it.next(), scala.concurrent.duration.Duration(10, "min"))
-          catch {
-            case _: InterruptedException => interrupted = true
-            case _: Throwable => ()
-          }
-        }
-        if (interrupted) Thread.currentThread().interrupt()
-        throw e
-      }
+      // await every landing before letting computeIfAbsent complete
+      // exceptionally, else a retrying caller would race fresh Overwrite
+      // writes against still-running orphan writers on the same paths
+      graft.engine.GraftSession.awaitAll(landed).toMap
     })
 
   /** Drop this session's memoized parse + star schema (test teardown),

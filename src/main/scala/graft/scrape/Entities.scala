@@ -245,8 +245,7 @@ object Entities {
     */
   def starSchemaBuildWith(playerAttrs: DataFrame, parsed: Dataset[ParsedGame],
                           existing: Map[String, DataFrame]): StarBuild = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.{ExecutionContext, Future}
     implicit val ec: ExecutionContext = ExecutionContext.global
     val games = gamesMeta(parsed)
     // The four id assignments are independent and each is EAGER (two
@@ -266,34 +265,12 @@ object Entities {
       existing.get("player")))
     val gameIdsF = Future(alignedIds(games.select(col("nameId").as("game_name_id")),
       Seq("game_name_id"), "game_id", existing.get("game")))
-    // Await ALL FOUR before extracting any result: awaiting them one by
-    // one would let the first failure propagate while the remaining
-    // futures keep submitting Spark jobs whose errors are silently
-    // dropped and whose jobs could interleave with caller cleanup (e.g.
-    // spark.stop()). Future.sequence still fails fast on the FIRST
-    // error, so wait for the stragglers explicitly before rethrowing —
-    // no orphan job outlives this call. The straggler wait is BOUNDED
-    // and swallows straggler failures (each future's own error already
-    // lost the race to `e`) — but an INTERRUPT of this thread aborts
-    // the drain loop and restores the interrupt flag: discarding it
-    // would block the canceller behind up to 10 min per straggler and
-    // hide the cancellation from every later isInterrupted check.
-    val all = Future.sequence(Seq(venuesF, teamsF, playerIdsF, gameIdsF))
+    // await ALL FOUR before extracting any result: awaiting them one by
+    // one would let the first failure propagate while the others keep
+    // submitting Spark jobs that could interleave with caller cleanup
+    // (e.g. spark.stop())
     val Seq(venues, teams, playerIds, gameIds) =
-      try Await.result(all, Duration.Inf)
-      catch { case e: Throwable =>
-        val it = Seq(venuesF, teamsF, playerIdsF, gameIdsF).iterator
-        var interrupted = e.isInstanceOf[InterruptedException]
-        while (!interrupted && it.hasNext) {
-          try Await.result(it.next(), Duration(10, "min"))
-          catch {
-            case _: InterruptedException => interrupted = true
-            case _: Throwable => ()
-          }
-        }
-        if (interrupted) Thread.currentThread().interrupt()
-        throw e
-      }
+      graft.engine.GraftSession.awaitAll(Seq(venuesF, teamsF, playerIdsF, gameIdsF))
     val playerDim = playerAttrs.join(broadcast(playerIds), Seq("name_id"))
     val gameStarDf = gameStar(games, venues, teams).join(
       broadcast(gameIds), Seq("game_name_id"))

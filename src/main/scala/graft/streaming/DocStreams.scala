@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
-import graft.operators.{Dedup, LandedIndex, Similarity}
+import graft.operators.{Batch, Dedup, LandedIndex, Similarity}
 
 /** Streaming ingest over the `documents` and `embeddings` tables
   * (SURVEY.md §2.4 st9–st14): each `stream*` lands its index, then runs
@@ -43,10 +43,6 @@ object DocStreams {
     def spool: String = s"$root/$spoolName"
   }
 
-  // the st13 land and absorb share one bucket count (segdf keeps no
-  // meta row to carry it)
-  private val SegDfBuckets = 8
-
   /** The ingest drain behind st9–st14: the reference's skip-what-the-
     * cache-holds batch polling (deep-field pages.py:92-116) as a STREAM
     * of arriving documents, each probed against a landed index that it
@@ -63,13 +59,11 @@ object DocStreams {
     *     at-least-once, and a replayed batch re-absorbs nothing
     *     (keys, not transactions). An empty result skips the cycle.
     *  2. `cycle(fresh, nIds, batchId, meta)` (`nIds` the guard's
-    *     distinct id count of `fresh`) probes or classifies the batch
-    *     against the index AS OF ITS ARRIVAL, appends its verdicts to
-    *     the spool, then absorbs the batch, and returns the advanced
-    *     meta. The spool append materializes the probe before the
-    *     absorb mutates the index it scanned, and the guard table is the
-    *     absorb's LAST append, so a crash mid-cycle replays the whole
-    *     cycle.
+    *     distinct id count of `fresh`) builds the micro-batch's
+    *     [[Batch]]: its verdicts against the index AS OF ITS ARRIVAL
+    *     and its absorb rows. [[LandedIndex.ingest]] spools the
+    *     verdicts, absorbs the rows (guard table last, so a crash
+    *     mid-cycle replays the whole cycle) and advances the meta.
     *  3. Every `autoCompactEvery` completed cycles (0 disables),
     *     `index.compact` runs. Firing after a completed cycle is what
     *     makes this safe mid-stream: the guard key is durable, so a
@@ -94,7 +88,7 @@ object DocStreams {
                               landed: M, input: DataFrame, idCol: String,
                               dir: String, autoCompactEvery: Int,
                               schema: StructType)
-                             (cycle: (DataFrame, Int, Long, M) => M): DataFrame = {
+                             (cycle: (DataFrame, Int, Long, M) => Batch): DataFrame = {
     val arriveDir = arrivalDrops(dir, idCol)(input.filter(col(idCol) % 5 >= 3))
     val stream = spark.readStream.schema(input.schema)
       .option("maxFilesPerTrigger", "1").parquet(arriveDir)
@@ -107,7 +101,8 @@ object DocStreams {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           Dedup.guardedBatch(spark, batch, guard, nBuckets,
             s"${run.family}.guard", idCol).foreach { case (fresh, nIds) =>
-            meta = cycle(fresh, nIds, batchId, meta)
+            meta = index.ingest(spark, run.tableBase, nBuckets, run.spool, meta)(
+              cycle(fresh, nIds, batchId, meta))
             cycles += 1
             if (autoCompactEvery > 0 && cycles % autoCompactEvery == 0) {
               index.compact(spark, run.tableBase)
@@ -134,7 +129,7 @@ object DocStreams {
 
   /** st9: streaming incremental near-dup dedup, the continuous twin of
     * d11 over the bucketed d3 MinHash index. Each micro-batch probes via
-    * [[Dedup.probeAbsorbMinhashBatch]] — pairs against corpus ∪
+    * [[Dedup.minhashBatch]] — pairs against corpus ∪
     * everything already absorbed, batch-proportional cost — spools
     * them, and absorbs the batch. Every pair with ≥1 arriving member is
     * emitted exactly once — when its later-arriving side is processed
@@ -152,8 +147,8 @@ object DocStreams {
       "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
     drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
         pairSchema) { (fresh, nIds, _, meta) =>
-      Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
-        threshold = 0.5, run.spool, meta, Some(nIds))
+      Dedup.minhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
+        threshold = 0.5, meta, Some(nIds))
     }
   }
 
@@ -184,8 +179,8 @@ object DocStreams {
     val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
     drain(spark, run, Dedup.SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
         cosPairSchema) { (fresh, _, _, meta) =>
-      Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
-        run.tableBase, threshold, run.spool, meta, cents)
+      Dedup.semanticBatch(spark, fresh, "vec_id", "embedding",
+        run.tableBase, threshold, meta, cents)
     }
   }
 
@@ -240,7 +235,7 @@ object DocStreams {
 
   /** st11: streaming ingest keep/drop classification — the continuous
     * twin of the d14 [[Dedup.incrementalSurvivors]] decision over the st9
-    * index. Per batch, [[Dedup.probeAbsorbMinhashBatch]] probes, folds
+    * index. Per batch, [[Dedup.minhashBatch]] probes, folds
     * the pairs into per-doc verdicts — dup iff the doc near-dups
     * anything ALREADY IN THE INDEX (corpus or an earlier arrival) or a
     * smaller-id batch mate, `dup_of` = the minimum such neighbor —
@@ -259,8 +254,8 @@ object DocStreams {
       "doc_id", "text", n = 3, k = 64, bands = 16, run.tableBase, run.idx)
     drain(spark, run, Dedup.MinhashIndex, landed, docs, "doc_id", dir, autoCompactEvery,
         classSchema("doc_id")) { (fresh, nIds, _, meta) =>
-      Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
-        threshold = 0.5, run.spool, meta, Some(nIds), classify = true)
+      Dedup.minhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
+        threshold = 0.5, meta, Some(nIds), classify = true)
     }
   }
 
@@ -271,7 +266,7 @@ object DocStreams {
   /** st13: streaming line-level boilerplate dedup — the continuous twin
     * of the d16/d17 cross-document repeated-segment stage, over the
     * segment-df index ([[Dedup.landSegDfIndex]]). Per batch,
-    * [[Dedup.classifyAbsorbSegBatch]] cleans each doc against the df
+    * [[Dedup.segDfBatch]] cleans each doc against the df
     * state AS OF ITS ARRIVAL — a segment instance is dropped iff
     * `earlier_hosts + 1 >= minDf`, where earlier = landed, an earlier
     * chunk, or a smaller-id batch mate — spools the cleaned doc, and
@@ -292,11 +287,11 @@ object DocStreams {
     val run = new Run("st13", rootDir, "clean")
     val docs = documents(spark, dir)
     Dedup.landSegDfIndex(spark, docs.filter(col("doc_id") % 5 < 3),
-      "doc_id", "text", window, run.tableBase, run.idx, nBuckets = SegDfBuckets)
+      "doc_id", "text", window, run.tableBase, run.idx, nBuckets = 8)
     drain(spark, run, Dedup.SegDfIndex, (), docs, "doc_id", dir, autoCompactEvery,
         cleanSchema) { (fresh, _, batchId, _) =>
-      Dedup.classifyAbsorbSegBatch(spark, fresh, "doc_id", "text", run.tableBase,
-        batchId, window, minDf, run.spool, nBuckets = SegDfBuckets)
+      Dedup.segDfBatch(spark, fresh, "doc_id", "text", run.tableBase,
+        batchId, window, minDf)
     }
   }
 
@@ -319,8 +314,8 @@ object DocStreams {
     val cents = Similarity.localTable(spark, s"${run.tableBase}_cents")
     drain(spark, run, Dedup.SemanticIndex, landed, embs, "vec_id", dir, autoCompactEvery,
         classSchema("vec_id")) { (fresh, _, _, meta) =>
-      Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
-        run.tableBase, threshold, run.spool, meta, cents, classify = true)
+      Dedup.semanticBatch(spark, fresh, "vec_id", "embedding",
+        run.tableBase, threshold, meta, cents, classify = true)
     }
   }
 
@@ -335,7 +330,7 @@ object DocStreams {
     * landed corpus by [[Dedup.ivfCellsFor]] (a fixed count would make
     * every probe scan nProbe/nCents of the corpus PER QUERY; the oracle
     * replays the same formula). Per batch,
-    * [[graft.operators.Similarity.probeAbsorbIvfPqBatch]] answers each
+    * [[graft.operators.Similarity.ivfPqBatch]] answers each
     * arrival's ADC top-k AGAINST THE INDEX AS OF ITS ARRIVAL (landed ∪
     * earlier chunks — batch mates are not yet in the index, so never
     * candidates), spools the verdicts, and absorbs the batch. The guard
@@ -358,8 +353,8 @@ object DocStreams {
       Similarity.localTable(spark, s"${run.tableBase}_cb"))
     drain(spark, run, Similarity.IvfPqIndex, landed, embs, "vec_id", dir, autoCompactEvery,
         verdictSchema) { (fresh, _, _, meta) =>
-      Similarity.probeAbsorbIvfPqBatch(spark, fresh, "vec_id", "embedding",
-        run.tableBase, k, nProbe, run.spool, meta, quantizers)
+      Similarity.ivfPqBatch(spark, fresh, "vec_id", "embedding",
+        run.tableBase, k, nProbe, meta, quantizers)
     }
   }
 }

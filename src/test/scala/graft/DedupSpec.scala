@@ -544,8 +544,9 @@ class DedupSpec extends SparkSpec {
         chunks.zipWithIndex.map { case (ch, i) =>
           if (i == compactBefore) Dedup.SegDfIndex.compact(spark, tb)
           val out = s"$dir/out$i"
-          Dedup.classifyAbsorbSegBatch(spark, ch, "doc_id", "text", tb,
-            i.toLong, window = 10, minDf = 2, out, nBuckets = 8)
+          Dedup.SegDfIndex.ingest(spark, tb, 8, out, ())(
+            Dedup.segDfBatch(spark, ch, "doc_id", "text", tb,
+              i.toLong, window = 10, minDf = 2))
           spark.read.parquet(out).collect()
             .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
         }

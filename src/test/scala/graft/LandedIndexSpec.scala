@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, LandedIndex, Similarity}
+import graft.operators.{Batch, Dedup, LandedIndex, Similarity}
 import graft.sources.{Spool, Tables}
 
 class LandedIndexSpec extends SparkSpec {
@@ -38,8 +38,8 @@ class LandedIndexSpec extends SparkSpec {
       Dedup.landMinhashIndex(landDocs, "doc_id", "text", n = 3, k = 64, bands = 16, mh,
         s"$root/mh", nBuckets = 8),
       Seq("n", "k", "bands", "n_docs", "n_buckets")) { meta =>
-      Dedup.probeAbsorbMinhashBatch(spark, batchDocs, "doc_id", "text", mh,
-        threshold = 0.5, s"$root/mh_pairs", meta)
+      Dedup.MinhashIndex.ingest(spark, mh, meta.nBuckets, s"$root/mh_pairs", meta)(
+        Dedup.minhashBatch(spark, batchDocs, "doc_id", "text", mh, threshold = 0.5, meta))
     }
 
     val sem = "graft_codec_sem"
@@ -47,9 +47,9 @@ class LandedIndexSpec extends SparkSpec {
       Dedup.landSemanticIndex(landEmbs, "vec_id", "embedding", sem, s"$root/sem",
         nBuckets = 8),
       Seq("n_docs", "n_buckets", "n_cents")) { meta =>
-      val advanced = Dedup.probeAbsorbSemanticBatch(spark, batchEmbs, "vec_id",
-        "embedding", sem, threshold = 0.4, s"$root/sem_pairs", meta,
-        Similarity.localTable(spark, s"${sem}_cents"))
+      val advanced = Dedup.SemanticIndex.ingest(spark, sem, meta.nBuckets,
+        s"$root/sem_pairs", meta)(Dedup.semanticBatch(spark, batchEmbs, "vec_id",
+        "embedding", sem, threshold = 0.4, meta, Similarity.localTable(spark, s"${sem}_cents")))
       // an index landed before n_cents joined the row still reads: the
       // frozen-centroid count falls back to the _cents cardinality
       spark.createDataFrame(Seq((advanced.nDocs, advanced.nBuckets)))
@@ -65,9 +65,85 @@ class LandedIndexSpec extends SparkSpec {
       Similarity.landIvfPqIndex(landEmbs, "vec_id", "embedding", nCentroids = 8, m = 4,
         kCodes = 16, pq, s"$root/pq", nBuckets = 8),
       Seq("n_docs", "n_cents", "m", "k_codes", "n_buckets")) { meta =>
-      Similarity.probeAbsorbIvfPqBatch(spark, batchEmbs, "vec_id", "embedding", pq,
-        k = 5, nProbe = 4, s"$root/pq_verdicts", meta,
-        (Similarity.localTable(spark, s"${pq}_cents"), Similarity.localTable(spark, s"${pq}_cb")))
+      Similarity.IvfPqIndex.ingest(spark, pq, meta.nBuckets, s"$root/pq_verdicts", meta)(
+        Similarity.ivfPqBatch(spark, batchEmbs, "vec_id", "embedding", pq, k = 5, nProbe = 4,
+          meta, (Similarity.localTable(spark, s"${pq}_cents"),
+            Similarity.localTable(spark, s"${pq}_cb"))))
+    }
+  }
+
+  private def docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    .filter(col("doc_id") < 200)
+
+  /** Land a small MinHash index at `tb`, run `body` with its landed meta
+    * and a scratch root, then drop its tables.
+    */
+  private def withMinhash(tb: String)(body: (Dedup.MinhashMeta, String) => Unit): Unit = {
+    val root = Spool.tempRoot(tb)
+    try body(Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3), "doc_id", "text",
+      n = 3, k = 64, bands = 16, tb, s"$root/idx", nBuckets = 8), root)
+    finally Dedup.MinhashIndex.catalogTables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${tb}_$t"))
+  }
+
+  private def batchOf(tb: String, meta: Dedup.MinhashMeta): Batch =
+    Dedup.minhashBatch(spark, docs.filter(col("doc_id") % 5 === 3), "doc_id", "text", tb,
+      threshold = 0.5, meta)
+
+  /** The descriptions of the Spark jobs `f` runs, in submission order. */
+  private def jobDescs[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val log = new Prof.JobLog
+    sc.addSparkListener(log)
+    try { val r = log.record(sc)(f); (r.value, r.jobs.map(_.desc)) }
+    finally sc.removeSparkListener(log)
+  }
+
+  test("absorb appends the tables in declared order, the guard last, and counts its rows") {
+    withMinhash("graft_step_order") { (meta, _) =>
+      val batch = batchOf("graft_step_order", meta)
+      val (n, descs) = jobDescs(
+        Dedup.MinhashIndex.absorb(spark, "graft_step_order", meta.nBuckets)(batch.absorb: _*))
+      assert(descs.filter(_.startsWith("cycle: absorb")) ==
+        Seq("cycle: absorb bands", "cycle: absorb sigs"), s"absorb jobs: $descs")
+      assert(n == batch.absorb.last.count() && n > 0)
+    }
+  }
+
+  test("a row list of the wrong length is rejected before any job runs") {
+    withMinhash("graft_step_len") { (meta, root) =>
+      val batch = batchOf("graft_step_len", meta)
+      val (_, absorbJobs) = jobDescs(intercept[IllegalArgumentException](
+        Dedup.MinhashIndex.absorb(spark, "graft_step_len", meta.nBuckets)(batch.absorb.head)))
+      assert(absorbJobs.isEmpty, s"a rejected absorb ran jobs: $absorbJobs")
+      val (_, ingestJobs) = jobDescs(intercept[IllegalArgumentException](
+        Dedup.MinhashIndex.ingest(spark, "graft_step_len", meta.nBuckets, s"$root/spool", meta)(
+          Batch(batch.spool, batch.absorb :+ batch.absorb.last))))
+      assert(ingestJobs.isEmpty, s"a rejected ingest ran jobs: $ingestJobs")
+    }
+  }
+
+  test("ingest spools the batch before its first absorb job and advances the meta") {
+    withMinhash("graft_step_spool") { (meta, root) =>
+      val batch = batchOf("graft_step_spool", meta)
+      val (advanced, descs) = jobDescs(Dedup.MinhashIndex.ingest(spark, "graft_step_spool",
+        meta.nBuckets, s"$root/spool", meta)(batch))
+      val lastSpool = descs.lastIndexOf("cycle: spool")
+      val firstAbsorb = descs.indexWhere(_.startsWith("cycle: absorb"))
+      assert(lastSpool >= 0 && firstAbsorb > lastSpool, s"ingest jobs: $descs")
+      assert(advanced == meta.copy(nDocs = meta.nDocs + batch.absorb.last.count()))
+    }
+  }
+
+  test("a provably empty batch absorbs 0 rows and leaves n_docs unchanged") {
+    withMinhash("graft_step_empty") { (meta, _) =>
+      val batch = batchOf("graft_step_empty", meta)
+      Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        _.filter(lit(false)), _.limit(0)).foreach { empty =>
+        assert(Dedup.MinhashIndex.absorb(spark, "graft_step_empty", meta.nBuckets)(
+          batch.absorb.map(empty): _*) == 0L)
+        Dedup.absorbMinhashBatch(spark, empty(docs), "doc_id", "text", "graft_step_empty")
+        assert(Dedup.MinhashIndex.readMeta(spark, "graft_step_empty").nDocs == meta.nDocs)
+      }
     }
   }
 }

@@ -636,8 +636,8 @@ class StreamingSpec extends SparkSpec {
           cycles += 1
           if (cycles == 2) throw new IllegalStateException("injected second-cycle failure")
           firstSigs = Dedup.minhashSignatures(fresh, "doc_id", "text", 3, 64).count()
-          Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
-            threshold = 0.5, run.spool, meta)
+          Dedup.minhashBatch(spark, fresh, "doc_id", "text", run.tableBase,
+            threshold = 0.5, meta)
         }
       }
       val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
